@@ -1,21 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
 object Bench {
+  /** Data dir and thread count, read from the environment by Bench
+    * and tools.Dev alike.
+    */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
     // warm-up: exercise the scan/codegen/JIT paths once so the first
     // timed query doesn't absorb ~5-8 s of one-time cost, and run the
     // one-time bucketed-table prep (setup a warehouse amortizes over
-    // every co-located join — q48 then times the join, not the write)
-    // warm via toRdd — the TIMED semantics since r8. A count() warmup
-    // exercises the count-rewrite codepath instead, so the first
-    // alphabetical queries (q01/q02) absorbed the toRdd JIT in pass 1
-    // and self-flagged `contended` by spread in every otherwise-quiet
-    // window (r10/r11 residue).
+    // every co-located join — q48 then times the join, not the write).
+    // Warm via toRdd, the timed semantics: a count() warm-up exercises
+    // the count-rewrite codepath instead, so q01/q02 absorbed the toRdd
+    // JIT in pass 1 and self-flagged `contended` by spread.
     try {
       SparkEntry.queries.get("q12_topk")
         .foreach(_(spark, sfDir).queryExecution.toRdd.count())
@@ -24,64 +28,42 @@ object Bench {
       graft.queries.Relational.prepareBucketedTables(spark, sfDir)
       graft.queries.TextQueries.prepareJsonlCorpus(spark, sfDir)
       graft.queries.TextQueries.prepareOrcCorpus(spark, sfDir)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     spark.catalog.clearCache()
-    // fixed name order: stable warm-up attribution across rounds
-    // ok=false marks a pass where the query threw: its (short) abort
-    // duration must never win the min over a successful run's time
-    // toRdd, NOT count() (changed r8): under count() Catalyst's
-    // rewrite prunes cardinality-neutral operators — every
-    // projection-terminated query was timed WITHOUT its map work
-    // (q85's span left-join vanished entirely: 0.21 s "measured",
-    // 5 s real) and EliminateSorts dropped every query's final
-    // orderBy from under the counting aggregate, so even
-    // agg-terminated queries paid no global sort. toRdd executes the
-    // plan exactly as declared — what a user's write/collect pays —
-    // the rule ShuffleReport always followed (ScaleBench/DebugPerf
-    // were switched in the same r8 change). The r7->r8 total is
-    // therefore not comparable 1:1; SCALE.md records the bridge
-    // (same tree, both semantics). Cache teardown sits OUTSIDE the
-    // timed window, matching ScaleBench, so a query that persists an
+    // fixed name order: stable warm-up attribution across runs
+    // toRdd, NOT count(): under count() Catalyst's rewrite prunes
+    // cardinality-neutral operators — projection-terminated queries
+    // are timed without their map work and EliminateSorts drops the
+    // final orderBy from under the counting aggregate. toRdd executes
+    // the plan exactly as declared, which is what a user's
+    // write/collect pays. Cache teardown sits OUTSIDE the timed
+    // window, matching ScaleBench, so a query that persists an
     // intermediate is not billed for dropping it.
     val names = SparkEntry.queries.toSeq.sortBy(_._1).map(_._1)
     def runOne(name: String): (Double, Boolean) = {
       val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
-        catch { case _: Throwable => false }
-      val secs = (System.nanoTime() - t0) / 1e9
+      val r = BenchPolicy.timedRun(fn(spark, sfDir).queryExecution.toRdd.count())
       spark.catalog.clearCache() // drop per-query persisted intermediates
-      (secs, ok)
+      r
     }
-    // Contention robustness (reworked r10 — the old design skipped the
-    // second pass when pass 1 exceeded 200 s, i.e. precisely when the
-    // window was contended and the re-run mattered most; that inversion
-    // is how BENCH_r08 shipped as a single contaminated pass):
+    // Contention robustness:
     //   1. ALL configured passes run unconditionally — a slow pass 1 is
     //      a reason FOR pass 2, never against it.
-    //   2. A committed per-query expectation file (bench-expect.json,
-    //      quiet-window best-of-2 on this tree) drives targeted
-    //      re-runs: any query whose best-so-far still exceeds
-    //      BenchPolicy.SuspectRatio (2x since r17 — r16 ran at 3x and
-    //      shipped q39 at 2.35x / q105 at 2.17x silently inside a
-    //      "quiet" capture) x its expectation gets individual extra
-    //      runs, worst offender first, bounded by a 120 s total
-    //      re-run budget so deep contention cannot run away. The
-    //      thresholds and ordering live in BenchPolicy (spec-tested).
-    //   3. The artifact names its own suspects: "contended" lists
-    //      queries whose observed spread across successful runs
-    //      exceeded 2x (with a 0.2 s absolute floor so micro-query
-    //      jitter isn't flagged), plus any still suspect after
-    //      re-runs. A clean run has "contended":[].
+    //   2. The committed per-query floor file (bench-expect.json)
+    //      drives full extra passes while the window looks loaded, then
+    //      targeted re-runs of suspects, worst offender first, bounded
+    //      by a 120 s total re-run budget so deep contention cannot run
+    //      away. Thresholds and ordering live in BenchPolicy.
+    //   3. The artifact names its own suspects in "contended". A clean
+    //      run has "contended":[].
     // Best-of-N over successful runs remains the estimator: the min
     // estimates the code's cost, the spread is the environment's.
-    // the expectation file records ABSOLUTE seconds at the default
-    // config (sf0.1, 32 threads) — against any other SF/cpu the 3x
-    // gate would either flag the whole suite or nothing meaningful,
-    // so it simply doesn't apply there (passes still run; spread
-    // flagging still works). Queries MISSING from the file are named
-    // in the artifact ("no_expect") so a new query can't silently
-    // dodge the expectation clause until the file is refreshed.
+    // The floor file records ABSOLUTE seconds at the default config
+    // (sf0.1, 32 threads); against any other SF/cpu count its gates
+    // would flag the whole suite or nothing meaningful, so they don't
+    // apply there (passes still run; spread flagging still works).
+    // Queries MISSING from the file are named in "no_expect" so a new
+    // query can't silently dodge the floors until the file is refreshed.
     val expectApplicable = sfDir.endsWith("sf0.1") && cpus == "32"
     val expect: Map[String, Double] = {
       val in = getClass.getResourceAsStream("/graft/bench-expect.json")
@@ -89,9 +71,8 @@ object Bench {
         if (in != null) in.close()
         Map.empty
       } else try {
-        val s = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        """"([^"]+)"\s*:\s*([0-9.Ee+-]+)""".r.findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+        BenchPolicy.parseExpect(
+          scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       } finally in.close()
     }
     val passes = math.max(1, scala.util.Try(
@@ -99,23 +80,19 @@ object Bench {
     val obs = scala.collection.mutable.Map[String,
       List[(Double, Boolean)]]().withDefaultValue(Nil)
     for (_ <- 1 to passes; name <- names) obs(name) ::= runOne(name)
-    // Contended-window refusal (r15 verdict watch item): BENCH_r15
-    // archived a capture whose over_expect_median was 1.26 — a
-    // box-swing artifact, not code — because nothing stopped a
-    // contended window from becoming the round's number. Now the
-    // suite re-runs ITSELF (full extra passes, best-of-all kept)
-    // while the floor-ratio median stays above 1.2, up to 2 extra
-    // passes: a quiet stretch anywhere in the window fixes every
-    // query's min. If the median still exceeds 1.2 after that, the
-    // artifact says so ("window":"contended") instead of
-    // masquerading as a clean capture.
+    def bestOf(name: String): (Double, Boolean) = {
+      val good = obs(name).collect { case (t, true) => t }
+      if (good.nonEmpty) (good.min, true) else (obs(name).map(_._1).min, false)
+    }
+    def succeeded(): Seq[(String, Double)] =
+      names.map(n => n -> bestOf(n)).collect { case (n, (t, true)) => n -> t }
     def ratioMedianNow(): Double = BenchPolicy.ratioMedian(
-      names.flatMap { n =>
-        expect.get(n).filter(_ > 0).flatMap { e =>
-          val good = obs(n).collect { case (t, true) => t }
-          if (good.nonEmpty) Some(good.min / e) else None
-        }
-      })
+      BenchPolicy.floorRatios(succeeded(), expect).map(_._2))
+    // Contended-window refusal: re-run the full suite (best-of-all
+    // kept) while the floor-ratio median stays above the window
+    // threshold, up to 2 extra passes — a quiet stretch anywhere in
+    // the window fixes every query's min. If the median is still high
+    // after that, the artifact says "window":"contended".
     var extraPasses = 0
     while (expectApplicable &&
         ratioMedianNow() > BenchPolicy.WindowMedianMax && extraPasses < 2) {
@@ -126,16 +103,11 @@ object Bench {
     }
     var reruns = 0
     var rerunSpent = 0.0
-    def bestOf(name: String): (Double, Boolean) = {
-      val good = obs(name).collect { case (t, true) => t }
-      if (good.nonEmpty) (good.min, true) else (obs(name).map(_._1).min, false)
-    }
     def isSuspect(name: String): Boolean =
       bestOf(name)._2 && expect.get(name)
         .exists(BenchPolicy.isSuspect(bestOf(name)._1, _))
-    def currentSuspects(): Seq[String] = BenchPolicy.suspects(
-      names.collect { case n if bestOf(n)._2 => n -> bestOf(n)._1 }.toMap,
-      expect)
+    def currentSuspects(): Seq[String] =
+      BenchPolicy.suspects(succeeded().toMap, expect)
     var suspects = currentSuspects()
     // the window loop above may have consumed attempts; cap each
     // suspect at 2 extra attempts beyond the passes it already has
@@ -154,11 +126,8 @@ object Bench {
     }
     val best = names.map { n => val (t, ok) = bestOf(n); (n, t, ok) }
     val contended = names.filter { n =>
-      val good = obs(n).collect { case (t, true) => t }
-      val spread = good.nonEmpty &&
-        good.max / math.max(good.min, 1e-9) > 2.0 &&
-        good.max - good.min > 0.2
-      spread || isSuspect(n)
+      BenchPolicy.spreadContended(obs(n).collect { case (t, true) => t }) ||
+        isSuspect(n)
     }
     // a query that threw in EVERY pass must not masquerade as a fast
     // success: report it as -1 (and name it in "failed") instead of
@@ -173,50 +142,26 @@ object Bench {
     val noExpect =
       (if (expectApplicable) names.filterNot(expect.contains) else Nil)
         .map(n => s"\"" + n + "\"").mkString("[", ",", "]")
-    // r14: self-report the floor-ratio table (per-query x-over-expect)
-    // plus its median, so a judge reading the artifact can separate a
-    // uniform environment swing (every ratio shifted together — the
-    // documented box-swing signature) from a code regression (one
-    // plan family's outlier) without re-deriving it from
-    // bench-expect.json. Ratios only exist where the expectation file
-    // applies (sf0.1 / 32 threads) and the query succeeded.
-    val ratios = names.flatMap { n =>
-      expect.get(n).filter(_ > 0).flatMap { e =>
-        val (t, ok) = bestOf(n)
-        if (ok) Some(n -> t / e) else None
-      }
-    }
+    // the per-query x-over-floor table plus its median lets a reader
+    // separate a uniform environment swing (every ratio shifted
+    // together) from a code regression (one plan family's outlier)
+    // without re-deriving it from bench-expect.json
+    val ratios = BenchPolicy.floorRatios(succeeded(), expect)
     val ratioJson = ratios
       .map { case (n, r) => "\"" + n + "\":" + f"$r%.2f" }
       .mkString("{", ",", "}")
-    val ratioMedian =
-      if (ratios.isEmpty) -1.0
-      else {
-        val s = ratios.map(_._2).sorted
-        if (s.size % 2 == 1) s(s.size / 2)
-        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
+    val ratioMedian = BenchPolicy.ratioMedian(ratios.map(_._2))
     val total = best.collect { case (_, v, true) => v }.sum
-    // "semantics" marks the r8 measurement change in the artifact
-    // itself: totals time plans AS DECLARED (toRdd) — earlier rounds'
-    // count()-based totals are NOT comparable 1:1 (SCALE.md bridge:
-    // 38.0 s count-semantics vs 69.5 s as-declared pre-optimization
-    // on one tree; 57.2 s after the r8 native scalars)
-    // key order matters for the ARCHIVED artifact: the driver captures
-    // only the tail of stdout (r14's crop lost everything before the
-    // over_expect map, including the headline total), so the two big
-    // per-query maps lead and every headline scalar (total, failed,
-    // contended) trails — a tail crop of any length keeps the
-    // headline. The full line is ALSO written to BENCH_full.json
-    // beside the build so nothing depends on the crop at all.
-    val window =
-      if (expectApplicable && ratioMedian > 1.2) "contended" else "quiet"
+    // "semantics" marks that totals time plans AS DECLARED (toRdd);
+    // count()-based totals are not comparable 1:1 (SCALE.md bridge).
+    // Key order matters: a reader that keeps only the tail of stdout
+    // still gets the headline, because the two big per-query maps lead
+    // and every headline scalar (total, failed, contended) trails. The
+    // full line is also written to BENCH_full.json, plus a
+    // cpus-suffixed copy so runs at two core counts don't clobber
+    // each other.
+    val window = BenchPolicy.window(expectApplicable, ratioMedian)
     val line = s"""{"queries":$qs,"over_expect":$ratioJson,"failed":$failed,"contended":$contendedJson,"no_expect":$noExpect,"reruns":$reruns,"extra_passes":$extraPasses,"window":"$window","over_expect_median":${f"$ratioMedian%.2f"},"sf":"$sfDir","passes":$passes,"semantics":"as-declared(toRdd); r7-and-earlier used count() which pruned projection+sort work","metric":"total","unit":"sec","value":$total}"""
-    // r18 (r17-verdict item 8): ALSO write a cpus-suffixed copy —
-    // the driver runs the bench at two core counts and the c8 run
-    // used to clobber BENCH_full.json's c32 line, which cost round 17
-    // its entire round-over-round per-query comparison when the
-    // driver's own stdout capture truncated.
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_full.json"),
@@ -224,7 +169,7 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"BENCH_full_c$cpus.json"),
         (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // stdout stays the contract
+    } catch { case NonFatal(_) => () } // stdout stays the contract
     println(line)
     spark.stop()
   }

@@ -2,13 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place the driver-tool session invariants live. Every
-  * driver main (Bench/Verify/QTime/QDump/DbgPlan/ScaleBench/
-  * ShuffleReport/DumpPlans/ClusterStream) builds through here so the
-  * invariants can't drift per-file — the ADVICE-r9 bug (one driver
-  * missing the UTC pin made timestamp-literal results depend on which
-  * query ran first on non-UTC hosts) was only fixable one file at a
-  * time because each tool owned its own builder block.
+/** The one place the tool session invariants live. Every main
+  * (Bench, Verify, ScaleBench, DumpPlans, ClusterStream, tools.Dev)
+  * builds through here so the invariants can't drift per-file: a
+  * tool missing the UTC pin makes timestamp-literal results depend on
+  * which query ran first on non-UTC hosts.
   *
   * Invariants: UTC session timezone at construction (never as a
   * mid-run side effect), shuffle partitions sized to the thread

@@ -330,7 +330,7 @@ object ScaleBench {
       // "measurement" times the fixture scan (caught in r8: q85 at a
       // REAL 100x corpus timed 1.4x — physically impossible for 100x
       // the shingle volume). toRdd executes the plan as declared,
-      // the same rule ShuffleReport documents.
+      // the same rule Bench documents.
       SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
       val secs = (System.nanoTime() - t0) / 1e9
       // cache teardown varies with what the query persisted — keep it

@@ -1,13 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json for the DuckDB compare (tools/check.py), and
+  * verify_status.json naming each query's outcome.
+  *
+  * Usage: `Verify <sfDir> <outDir> [q1,q2,...]` — the optional third
+  * argument restricts the dump and oracle_sql.json to the named
+  * queries (one-query iteration without the full dump).
+  */
 object Verify {
+  /** One query's outcome: seconds to write it, and either the error or
+    * the rows written (read back from the parquet footers).
+    */
+  final case class Status(name: String, seconds: Double,
+      result: Either[Throwable, Long])
+
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (dev
-    // iteration on one query without the full 100+-query dump; the
-    // driver always invokes the 2-arg form)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
@@ -26,36 +39,8 @@ object Verify {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftFunctions.register(spark)
-    new java.io.File(outDir).mkdirs()
-    // q101 historically carried a multi-JVM exemption (in-memory
-    // Derby is per-JVM); graft.tools.JdbcProxy closed it — q101 now
-    // routes executor connections through a driver-JVM socket proxy
-    // under local-cluster, so every query runs under every master.
-    val skip: Set[String] = Set.empty
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (n, _) => skip(n) }
-      .filter { case (n, _) => only.forall(_(n)) }.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries may persist() intermediates (self-join barriers);
-      // drop them so 35+ queries don't accumulate in one JVM
-      spark.catalog.clearCache()
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    dump(spark, sfDir, outDir, SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_(n)) })
     // the banded-alignment oracle is regenerated at the SRP plane
     // count derived from THIS dir's side cardinalities (identical to
     // the static entry at every driver gate SF; differs only on
@@ -70,17 +55,81 @@ object Verify {
       if (!only.forall(f =>
           f("q122_banded_align") || f("q123_align_recall"))) Map.empty
       else try graft.queries.VectorQueries.alignOracleOverlay(spark, sfDir)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(
           s"[verify] align oracle overlay failed, keeping static SQL: " +
             e.getMessage)
         Map.empty
       }
     val oracle = SparkEntry.oracleSql ++ overlay
-    val json = oracle.filterNot { case (k, _) => skip(k) }
+    val json = oracle
       .filter { case (k, _) => only.forall(_(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Writes each query's result to `<outDir>/<name>` as parquet and
+    * every outcome to `<outDir>/verify_status.json`. A query that
+    * throws is recorded and reported on stderr, and the loop moves
+    * on; fatal errors propagate.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[Status] = {
+    new java.io.File(outDir).mkdirs()
+    val statuses = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      def secs = (System.nanoTime() - t0) / 1e9
+      val status =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          Status(name, secs, Right(parquetRows(spark, s"$outDir/$name")))
+        } catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Status(name, secs, Left(e))
+        }
+      // queries may persist() intermediates (self-join barriers);
+      // drop them so 100+ queries don't accumulate in one JVM
+      spark.catalog.clearCache()
+      status
+    }
+    val manifest = statuses.map { s =>
+      val outcome = s.result match {
+        case Right(rows) => s""""status":"ok","rows":$rows"""
+        case Left(e) =>
+          s""""status":"error","class":${q(e.getClass.getName)},""" +
+            s""""message":${Option(e.getMessage).map(q).getOrElse("null")}"""
+      }
+      s"${q(s.name)}: {$outcome,${f""""seconds":${s.seconds}%.3f"""}}"
+    }.mkString("{", ",\n", "}")
+    Files.writeString(Paths.get(s"$outDir/verify_status.json"), manifest)
+    statuses
+  }
+
+  /** Row count of a parquet dir, summed from its files' footers. */
+  private def parquetRows(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
+  }
+
+  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
+  // — a tab or CR in hand-written oracle SQL would otherwise make the
+  // compare's json.load fail and silently zero every query's result.
+  private def q(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** The HDR-histogram quantile sketch geometry — ONE definition shared
   * by the batch query (`Relational.q89`), the streaming twin
-  * (`streaming.SketchStream`), the perf probe (`tools.DebugPerf`
-  * `q89sketch` mode), and the specs, so the published decade numbers
-  * and the streaming parity always describe the code that runs.
+  * (`streaming.SketchStream`) and the specs, so the published decade
+  * numbers and the streaming parity always describe the code that
+  * runs.
   *
   * Geometry: positive longs bucket as (scale, mantissa) with
   * s = max(bitlen-1-6, 0) and m = n >> s — the value's top 7 bits,

@@ -49,9 +49,11 @@ object ApproachQueries {
     * doubles sequentially and divide once, so `75.0/n` etc. is
     * bit-identical. The crosstrack means are trig doubles: GOLDEN
     * constants, extracted once over flights 0..623 (2 x lcm(3,8,13),
-    * tools/DumpGolden + tools/derive_q20.py — every (flavor, airport,
-    * violation) combo twice) and embedded with full round-trip
-    * precision; they pin the geodesy + window segmentation to the ulp.
+    * every (flavor, airport, violation) combo twice) and embedded with
+    * full round-trip precision; they pin the geodesy + window
+    * segmentation to the ulp. To re-derive them, run
+    * tools/derive_q20.py on the q20_approaches dir of an sf0.1
+    * `Verify <sf> <out> q20_approaches` dump (flights 0..1499).
     */
   private val xtClean = Seq( // all_crosstrack, no F2 violation: by (f+1)%8
     "-0.0013986888536265951", "-0.0014490083133367193",
@@ -177,6 +179,7 @@ object ApproachQueries {
   //      (S4 + S5 + J3; main.py:163-183) ----
   def q24(spark: SparkSession, dir: String): DataFrame = {
     val refDir = "/root/reference/data"
+    Dims.requireReferenceDir(refDir)
     val dim = Dims.airportsWithRunways(
       Dims.loadAirportsCsv(spark, s"$refDir/Airports.csv"),
       Dims.loadRunwaysCsv(spark, s"$refDir/AirportsDetailed.csv"))

@@ -40,8 +40,8 @@ object Relational {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // The MICROS layout is read as TIMESTAMP_NTZ and relabeled to an
     // instant by events(); that relabel is session-timezone-dependent,
-    // so pin UTC HERE rather than trusting every driver's builder
-    // (Bench/QTime/ScaleBench/DbgPlan historically didn't pin it).
+    // so pin UTC HERE rather than trusting every caller's session
+    // (GraftSession pins it; a library caller's session may not).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     val raw = tbl(spark, dir, "events")
     raw.schema("ts").dataType match {
@@ -1345,7 +1345,7 @@ object Relational {
   // production (spec-pinned merge invariance in QuantileSketchSpec).
   // Geometry and extraction live in ONE place —
   // operators/QuantileSketch.scala — shared with the streaming twin
-  // (SketchStream) and the DebugPerf decade probe.
+  // (SketchStream).
   def q89(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.QuantileSketch
     val base = tbl(spark, dir, "lineitem")

@@ -95,9 +95,6 @@ object TextQueries {
   /** documents ∪ planted near-copies (last 3 tokens dropped) of every
     * 7th doc with > 10 tokens.
     */
-  /** Dev-tool window into the fixture (tools.CandCount). */
-  def withNearCopiesPublic(docs: DataFrame): DataFrame = withNearCopies(docs)
-
   private def withNearCopies(docs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"), col("text"))
     d.union(d
@@ -3129,9 +3126,6 @@ object TextQueries {
     TextOps.containmentPairs(withExcerpts(tbl(spark, dir, "documents")), 0.9)
       .orderBy(col("id_a"), col("id_b"))
 
-  /** Dev-tool window into the q112 fixture (tools.CandCount). */
-  def withExcerptsPublic(docs: DataFrame): DataFrame = withExcerpts(docs)
-
   /** documents ∪ planted first-half excerpts of every 11th doc with
     * > 20 tokens (at doc_id + 2000000).
     */
@@ -3570,7 +3564,7 @@ object TextQueries {
   // joins on compact hashed-set rows. r15 adds PPJoin's POSITION
   // bound to the candidate join (a shared prefix token at positions
   // (i,j) witnesses overlap ≤ 1 + min(na−i, nb−j), pruned below the
-  // required α) — adopted after measurement (tools.MeasurePrefix):
+  // required α) — adopted after measurement (SCALE.md):
   // no-op at this gate's τ=7/10 where df-ordering is already tight,
   // 93.7% candidate cut at τ=1/2 on a shared-boilerplate skew
   // fixture. PrefixJoinSpec measures the candidate reduction vs the

@@ -95,12 +95,21 @@ object Dims {
     */
   def referenceAirports(spark: SparkSession,
       dir: String = "/root/reference/data"): Array[Airport] = {
+    requireReferenceDir(dir)
     import spark.implicits._
     airportsWithRunways(
       loadAirportsCsv(spark, s"$dir/Airports.csv"),
       loadRunwaysCsv(spark, s"$dir/AirportsDetailed.csv")
     ).na.drop(Seq("lat", "lon", "alt")).as[Airport].collect()
   }
+
+  /** Fails fast, naming the path, when the reference CSV directory is
+    * absent — instead of a reader error from deep inside a query.
+    */
+  def requireReferenceDir(dir: String): Unit =
+    require(new java.io.File(dir).isDirectory,
+      s"reference data directory not found: $dir " +
+        "(needs Airports.csv and AirportsDetailed.csv)")
 
   /** Deterministic synthetic airport grid used by the testdata flight
     * pipeline: `n` airports 1 degree apart on the lat/lon diagonal,

@@ -7,6 +7,7 @@ import java.sql.{Driver, DriverManager, DriverPropertyInfo, SQLException}
 import java.util.Properties
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
+import scala.util.control.NonFatal
 
 /** Reflective JDBC remoting shim — multi-JVM TEST infrastructure, not
   * a data-path component.
@@ -66,6 +67,7 @@ object JdbcProxy {
   private def acceptLoop(ss: ServerSocket, targetUrl: String): Unit =
     while (true) {
       val sock = ss.accept()
+      sock.setTcpNoDelay(true) // request/reply: Nagle + delayed ACK cost ~40 ms per call
       val h = new Thread(() => handle(sock, targetUrl), "jdbc-proxy-conn")
       h.setDaemon(true)
       h.start()
@@ -164,10 +166,10 @@ object JdbcProxy {
         if (e.isInstanceOf[java.io.ObjectStreamException])
           System.err.println(s"[jdbc-proxy] request stream rejected: $e")
         objects.values.forEach {
-          case c: java.sql.Connection => try c.close() catch { case _: Throwable => () }
+          case c: java.sql.Connection => try c.close() catch { case NonFatal(_) => () }
           case _ => ()
         }
-        try sock.close() catch { case _: Throwable => () }
+        try sock.close() catch { case NonFatal(_) => () }
     }
   }
 
@@ -263,7 +265,7 @@ private[tools] final class JdbcProxyChannel(sock: Socket) {
     }
 
   def close(): Unit =
-    synchronized { try sock.close() catch { case _: Throwable => () } }
+    synchronized { try sock.close() catch { case NonFatal(_) => () } }
 }
 
 private[tools] object JdbcProxyChannel {

@@ -20,7 +20,7 @@ case class ShuffleStats(writeBytes: Long, writeRecords: Long,
       * Under parallel test suites sharing the session it merely
       * counts other suites' unrelated jobs, so specs on the shared
       * session must not assert on it. Exclusive callers
-      * (ShuffleReport, benches) assert == 0 to close the attribution
+      * (`Dev shuffle`, benches) assert == 0 to close the attribution
       * gap loudly instead of undercounting silently. */
     untaggedConcurrentJobs: Int)
 
@@ -58,7 +58,7 @@ case class ShuffleStats(writeBytes: Long, writeRecords: Long,
   * the meter cannot fail on them unilaterally — instead every job
   * that starts in the window without the tag is counted into
   * [[ShuffleStats.untaggedConcurrentJobs]], and callers that own the
-  * session exclusively (ShuffleReport, benches) require it to be 0.
+  * session exclusively (`Dev shuffle`, benches) require it to be 0.
   */
 object ShuffleMeter {
 

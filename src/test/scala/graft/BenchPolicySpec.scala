@@ -41,4 +41,47 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(BenchPolicy.suspects(Map.empty, expect).isEmpty)
     assert(BenchPolicy.suspects(best, Map.empty).isEmpty)
   }
+
+  test("parseExpect reads every entry of the committed floor file") {
+    val in = getClass.getResourceAsStream("/graft/bench-expect.json")
+    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    val parsed = BenchPolicy.parseExpect(json)
+    // an independent JSON parser is the reference
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(parsed.size == tree.size)
+    tree.fieldNames.forEachRemaining { k =>
+      assert(parsed.get(k).contains(tree.get(k).asDouble), k)
+    }
+  }
+
+  test("window: contended only above the median threshold, where floors apply") {
+    assert(BenchPolicy.window(true, 1.2) == "quiet", "boundary is exclusive")
+    assert(BenchPolicy.window(true, 1.2001) == "contended")
+    assert(BenchPolicy.window(false, 1.2001) == "quiet", "floors not applicable")
+    assert(BenchPolicy.window(true, -1.0) == "quiet", "no floors matched")
+  }
+
+  test("spreadContended: needs both the 2x ratio and the +0.2 s excess") {
+    assert(!BenchPolicy.spreadContended(Nil))
+    assert(!BenchPolicy.spreadContended(Seq(5.0)))
+    assert(!BenchPolicy.spreadContended(Seq(1.0, 2.0)), "2x is exclusive")
+    assert(BenchPolicy.spreadContended(Seq(1.0, 2.001)))
+    // a micro-query: 3x, but only +0.19 s / +0.21 s
+    assert(!BenchPolicy.spreadContended(Seq(0.1, 0.29)))
+    assert(BenchPolicy.spreadContended(Seq(0.1, 0.31)))
+    // wide in seconds, narrow in ratio
+    assert(!BenchPolicy.spreadContended(Seq(10.0, 15.0)))
+  }
+
+  test("timedRun: a RuntimeException is a failed run; VM errors propagate") {
+    val (okSecs, ok) = BenchPolicy.timedRun(())
+    assert(ok && okSecs >= 0)
+    val (_, failed) = BenchPolicy.timedRun(throw new RuntimeException("boom"))
+    assert(!failed)
+    intercept[OutOfMemoryError](
+      BenchPolicy.timedRun(throw new OutOfMemoryError("planted")))
+    intercept[StackOverflowError](
+      BenchPolicy.timedRun(throw new StackOverflowError()))
+  }
 }

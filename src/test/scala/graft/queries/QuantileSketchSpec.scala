@@ -16,7 +16,7 @@ class QuantileSketchSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   /** The SHARED bucket pipeline (operators/QuantileSketch — the very
-    * code q89, SketchStream, and DebugPerf run) plus the lo/hi bounds
+    * code q89 and SketchStream run) plus the lo/hi bounds
     * under test.
     */
   private def bucketed(values: org.apache.spark.sql.DataFrame) =

@@ -86,7 +86,7 @@ class PrefixJoinSpec extends AnyFunSuite {
 
   test("positional filter: measured reduction, lossless where it prunes") {
     // PPJoin's position bound, adopted AFTER measurement (the
-    // audit-before-trust rule; tools.MeasurePrefix is the harness):
+    // audit-before-trust rule; the measurements are in SCALE.md):
     // at the gate's tau=7/10 the df-ordered prefixes already collapse
     // candidates (28 -> 28 at sf0.001), but at tau=1/2 — where
     // shorter prefixes flood on boilerplate-heavy corpora — the bound
