@@ -63,15 +63,16 @@ final class CappedMembersBuffer(val cap: Int) {
 }
 
 /** `collect_members_capped(doc_id, n_sh, cap)`: the group's
-  * (doc_id, n_sh) members sorted by doc_id as an
+  * (doc_id, n_sh) members sorted by (doc_id, n_sh) as an
   * array<struct<doc_id,n_sh>>, or NULL once the group exceeds `cap`
   * members — the df-cap filter `size(ms) <= maxDf` of the r17 pair
   * core, moved INSIDE the aggregate so the cap bounds the aggregation
   * buffer itself (guide §5: what a task holds in memory). Sorting at
-  * eval replaces the old `sort_array(collect_list(...))`; doc_ids are
-  * distinct within a shingle group (hashedShingles is per-doc
-  * distinct), so ordering by doc_id alone reproduces the struct sort
-  * bit-exactly. Null inputs are skipped (they never occur on the
+  * eval replaces the old `sort_array(collect_list(...))` and is the
+  * same struct order, so the output is total and does not depend on
+  * merge order even where a doc_id repeats in a group
+  * (`TextOps.sharedSpanRuns` collects (doc_id, pos), one doc at many
+  * positions). Null inputs are skipped (they never occur on the
   * digest pipeline; a null doc_id would already have failed the
   * fixtures' planted-id checks upstream). Plans as ObjectHashAggregate
   * partial+final, same as collect_list — the shuffle carries at most
@@ -132,16 +133,27 @@ case class CollectMembersCapped(id: Expression, nsh: Expression, cap: Long,
       j += 1
     }
     java.util.Arrays.sort(rows, new java.util.Comparator[AnyRef] {
-      override def compare(a: AnyRef, b: AnyRef): Int =
-        java.lang.Long.compare(
-          a.asInstanceOf[GenericInternalRow].getLong(0),
-          b.asInstanceOf[GenericInternalRow].getLong(0))
+      override def compare(a: AnyRef, b: AnyRef): Int = {
+        val ra = a.asInstanceOf[GenericInternalRow]
+        val rb = b.asInstanceOf[GenericInternalRow]
+        val byId = java.lang.Long.compare(ra.getLong(0), rb.getLong(0))
+        if (byId != 0) byId
+        else java.lang.Integer.compare(ra.getInt(1), rb.getInt(1))
+      }
     })
     new GenericArrayData(rows.asInstanceOf[Array[Any]])
   }
 
   override def serialize(buffer: CappedMembersBuffer): Array[Byte] = {
-    val bb = ByteBuffer.allocate(5 + 12 * buffer.n)
+    // flag + count + 12 bytes per member, sized as a Long: past ~178M
+    // members the Int product would wrap to a negative capacity
+    val size = 5L + 12L * buffer.n
+    if (size > Int.MaxValue)
+      throw new IllegalStateException(
+        s"collect_members_capped buffer of ${buffer.n} members needs " +
+          s"$size bytes, past the ${Int.MaxValue}-byte array limit; " +
+          "lower the cap")
+    val bb = ByteBuffer.allocate(size.toInt)
     bb.put(if (buffer.overflowed) 1.toByte else 0.toByte)
     bb.putInt(buffer.n)
     var j = 0

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.Approach
 
@@ -25,7 +26,7 @@ object Sinks {
     approaches
       .drop("unstable_intervals")
       .withColumn("flight_bucket", pmod(col("flight_id"), lit(buckets)))
-      .repartition(col("flight_bucket"))
+      .transform(byBucket(buckets))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("flight_bucket")
       .parquet(path)
@@ -45,7 +46,17 @@ object Sinks {
     * 100 TB posture: only the flight buckets the batch touches are
     * rewritten; the existing-table read is partition-pruned to those
     * buckets and the anti join broadcasts the batch's key projection
-    * (two small columns).
+    * (two small columns). The batch is evaluated once per merge: it
+    * is persisted for the merge's duration (unless the caller already
+    * cached it) and the touched-bucket collect, the key projection
+    * and the staged write all read that cache. The write runs
+    * min(touched buckets, defaultParallelism) tasks and puts exactly
+    * one file in each touched bucket dir per merge.
+    *
+    * Every evaluation of the batch — including Spark's recompute of
+    * an evicted cached partition — happens before the first promote
+    * rename, so a batch whose lineage reads this table (the ingest's
+    * cross-batch dedup probe) always observes the pre-merge table.
     *
     * CRASH SAFETY (the reference got this from MySQL's transaction,
     * py:432-437): the merged buckets are STAGED in a sibling dir while
@@ -78,20 +89,30 @@ object Sinks {
     */
   def mergeApproachesTable(batch: DataFrame, path: String,
       buckets: Int = 64): Unit = {
+    // a batch the caller already cached is the caller's: unpersisting
+    // it here would drop the caller's cache entry
+    val owned = batch.storageLevel == StorageLevel.NONE
+    if (owned) batch.persist()
+    try mergeOnce(batch, path, buckets)
+    finally if (owned) batch.unpersist()
+  }
+
+  private def mergeOnce(batch: DataFrame, path: String,
+      buckets: Int): Unit = {
     val spark = batch.sparkSession
     // upsert of nothing is a no-op — and materially so: an empty
     // FIRST batch would otherwise create a file-less table dir that
     // the next merge's read cannot infer a schema from (streaming
     // micro-batches before the first emission hit exactly this)
-    if (batch.isEmpty) return
+    val touched = touchedBuckets(batch, buckets)
+    if (touched.isEmpty) return
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverInterruptedMerge(fs, path)
     if (!hasCommittedData(fs, path)) {
-      val withBucket = batch.withColumn("flight_bucket",
-        pmod(col("flight_id"), lit(buckets)).cast("int"))
+      val withBucket = withBucketCol(batch, buckets)
       withBucket
-        .repartition(col("flight_bucket"))
+        .transform(byBucket(touched.size))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("flight_bucket").parquet(path)
       writeBucketsMarker(fs, path, buckets)
@@ -137,9 +158,34 @@ object Sinks {
           current.fields ++ added)))
     else if (marker.isEmpty)
       writeSchemaMarker(fs, path, asNullable(current)) // legacy upgrade
-    val touched = stageMerge(batch, path, buckets)
+    stageMerge(batch, path, buckets, touched)
     promoteStaged(fs, path, touched)
   }
+
+  private def withBucketCol(batch: DataFrame, buckets: Int): DataFrame =
+    batch.withColumn("flight_bucket",
+      pmod(col("flight_id"), lit(buckets)).cast("int"))
+
+  /** The bucket ids `batch` touches, collected (at most `buckets`
+    * small ints); empty iff the batch is.
+    */
+  private def touchedBuckets(batch: DataFrame, buckets: Int): Seq[Int] =
+    withBucketCol(batch, buckets).select(col("flight_bucket"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+
+  /** Hash-partitions rows on `flight_bucket` into
+    * min(`touched`, defaultParallelism) tasks for a partitioned write.
+    * A by-column repartition lets AQE coalesce a small batch into one
+    * partition, and one task then writes every bucket file in series;
+    * AQE never coalesces a by-number repartition. Each bucket value
+    * hashes to exactly one task, so each written bucket dir gets
+    * exactly one file.
+    */
+  private def byBucket(touched: Int)(rows: DataFrame): DataFrame =
+    rows.repartition(
+      math.max(1, math.min(touched,
+        rows.sparkSession.sparkContext.defaultParallelism)),
+      col("flight_bucket"))
 
   private def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType =
@@ -328,12 +374,15 @@ object Sinks {
     */
   private[sinks] def stageMerge(batch: DataFrame, path: String,
       buckets: Int): Seq[Int] = {
+    val touched = touchedBuckets(batch, buckets)
+    stageMerge(batch, path, buckets, touched)
+    touched
+  }
+
+  private def stageMerge(batch: DataFrame, path: String, buckets: Int,
+      touched: Seq[Int]): Unit = {
     val spark = batch.sparkSession
-    val newRows = batch
-      .withColumn("flight_bucket",
-        pmod(col("flight_id"), lit(buckets)).cast("int"))
-    val touched = newRows.select(col("flight_bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val newRows = withBucketCol(batch, buckets)
     // schema-aware read: after a previous ADDITIVE evolution,
     // untouched buckets still carry the old footer — a single-footer
     // read would make the new column invisible for exactly those
@@ -349,10 +398,9 @@ object Sinks {
       broadcast(batch.select(col("flight_id"), col("approach_id")).distinct()),
       Seq("flight_id", "approach_id"), "left_anti")
     survivors.unionByName(newRows, allowMissingColumns = true)
-      .repartition(col("flight_bucket"))
+      .transform(byBucket(touched.size))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("flight_bucket").parquet(stagingPath(path).toString)
-    touched
   }
 
   /** Phase 2 of the merge commit: swap the staged bucket dirs into the

@@ -153,10 +153,11 @@ object Ingest {
   private[streaming] def curateAndMerge(spark: SparkSession,
       deduped: DataFrame, tablePath: String, buckets: Int,
       postMergeHook: Long => Unit, batchId: Long): Unit = {
-    // persisted: the merge evaluates its input several times
-    // (emptiness probe, touched-bucket collect, staged write) —
-    // without the persist each evaluation would re-run curation
-    // AND re-read the batch's source files
+    // persisted: the cross-batch digest probe and the anti-join
+    // below both read `kept` — without the persist each would re-run
+    // curation AND re-read the batch's source files. The merge
+    // itself evaluates its input once (it caches the batch for its
+    // own duration)
     val kept = TextQueries.curate(deduped, keepDigest = true)
       .filter(col("keep"))
       .withColumn("rev", lit(0L))
@@ -175,15 +176,17 @@ object Ingest {
       // accumulated table's digest column probes a broadcast of
       // the batch's digests; the matched set (bounded by the
       // batch's distinct texts, never corpus-sized) is PERSISTED
-      // on the executors so the merge's downstream re-evaluations
-      // replay a cached-hits broadcast anti-join, never the table
+      // on the executors so the merge's evaluation replays a
+      // cached-hits broadcast anti-join, never the table
       // scan — and no digest round-trips through an application
       // collect (the broadcast build is Spark's managed,
       // size-guarded path).
       // Lost-cache safety: if evicted/lost `hits` partitions are
       // recomputed, the lineage re-scans the table — which is
       // SAFE here because the merge protocol evaluates its input
-      // (emptiness probe, staged write) strictly BEFORE the first
+      // (one touched-bucket collect that fills the merge's cache,
+      // then the staged write reading it; a recompute of an evicted
+      // cached partition included) strictly BEFORE the first
       // promote rename: every possible recompute observes the
       // stable pre-merge table, the same one the original scan
       // read. A merge that evaluated its input after promoting
@@ -205,7 +208,7 @@ object Ingest {
           hits = graft.text.TextOps.matchedBaseDigests(
             table.select(col("text_md5")), kept, "text_md5").persist()
           // the count pins the persist before the merge's
-          // re-evaluations AND guards the anti-join's transport
+          // evaluation AND guards the anti-join's transport
           // with the same cap as the probe (shared constant, so
           // the two regimes can never drift apart)
           val hitsTransport =

@@ -329,9 +329,8 @@ object ShardIngest {
       .foreachBatch { (files: Dataset[Row], batchId: Long) =>
         val quarantine =
           Option(quarantineDir).getOrElse(Ingest.quarantinePath(tablePath))
-        // persisted: the quarantine probe, the emptiness probe, and
-        // the merge's staged write would each re-run the walk (and
-        // re-read the shard bytes) otherwise
+        // persisted: the quarantine probe and the merge would each
+        // re-run the walk (and re-read the shard bytes) otherwise
         val walked = decode(files).persist()
         try {
           val bad = walked.filter(col("reason").isNotNull)

@@ -405,6 +405,115 @@ class SinksSpec extends AnyFunSuite {
       "stream merge must upsert overlap keys and keep non-matched rows")
   }
 
+  /** (flight_id, approach_id=1, unstable) rows for flights `ids`. */
+  private def keyed(ids: Seq[Long], unstable: Int) = {
+    import spark.implicits._
+    ids.map(f => (f, 1L, unstable)).toDF("flight_id", "approach_id", "unstable")
+  }
+
+  private def unstableByFlight(path: String): Map[Long, Int] =
+    spark.read.parquet(path).select("flight_id", "unstable").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  test("merge evaluates its batch's lineage exactly once") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("once").toString + "/approaches"
+    Sinks.mergeApproachesTable(keyed(Seq(0L, 1L), 9), out, buckets = 4)
+    val evaluated = spark.sparkContext.longAccumulator("merge-batch-rows")
+    val batch = spark.range(0, 40, 1, 4).as[Long]
+      .mapPartitions(_.map { f => evaluated.add(1); (f, 1L, 1) })
+      .toDF("flight_id", "approach_id", "unstable")
+    Sinks.mergeApproachesTable(batch, out, buckets = 4)
+    assert(evaluated.value == 40L,
+      s"the batch's 40 rows were produced ${evaluated.value} times over — " +
+        "the merge re-ran its input lineage")
+    assert(unstableByFlight(out) == (0L until 40L).map(_ -> 1).toMap)
+  }
+
+  test("merge writes one file per touched bucket, from more than one task") {
+    import org.apache.hadoop.fs.Path
+    val out = Files.createTempDirectory("perbucket").toString + "/approaches"
+    val fs = new Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cores = spark.sparkContext.defaultParallelism
+    val buckets = 4 * cores // every merge below touches more than `cores`
+    def partFiles(): Map[String, Seq[String]] =
+      fs.listStatus(new Path(out)).filter(_.isDirectory)
+        .map(d => d.getPath.getName ->
+          fs.listStatus(d.getPath).map(_.getPath.getName)
+            .filter(_.startsWith("part-")).toSeq)
+        .toMap
+    // initial write, then a merge over the existing table
+    for (batch <- Seq(keyed(0L until 2L * buckets, 9),
+        keyed(0L until buckets.toLong, 1))) {
+      Sinks.mergeApproachesTable(batch, out, buckets)
+      val files = partFiles()
+      assert(files.keySet == (0 until buckets).map(b => s"flight_bucket=$b").toSet)
+      files.foreach { case (dir, parts) =>
+        assert(parts.size == 1, s"$dir holds ${parts.size} part files: $parts")
+      }
+      // part-<task partition>-…: a serial write names one partition
+      val writers = files.values.flatten.map(_.split("-")(1)).toSet
+      assert(writers.size > 1,
+        s"all $buckets bucket files came from one write task ($writers)")
+    }
+    assert(unstableByFlight(out) ==
+      (0L until 2L * buckets).map(f => f -> (if (f < buckets) 1 else 9)).toMap)
+  }
+
+  test("merge leaves nothing cached, also when it throws") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache() // earlier suites' leftovers
+    val out = Files.createTempDirectory("nocache").toString + "/approaches"
+    Sinks.mergeApproachesTable(keyed(Seq(0L, 1L), 9), out, buckets = 4)
+    assert(cache.isEmpty, "the initial write left its batch cached")
+    Sinks.mergeApproachesTable(keyed(Seq(1L, 2L), 1), out, buckets = 4)
+    assert(cache.isEmpty, "the merge left its batch cached")
+    // the bucket-count guard throws after the batch was cached
+    val e = intercept[IllegalArgumentException] {
+      Sinks.mergeApproachesTable(keyed(Seq(3L), 1), out, buckets = 8)
+    }
+    assert(e.getMessage.contains("bucketed with 4"))
+    assert(cache.isEmpty, "a failed merge left its batch cached")
+    assert(unstableByFlight(out) == Map(0L -> 9, 1L -> 1, 2L -> 1))
+  }
+
+  test("merge keeps a batch the caller cached") {
+    import org.apache.spark.storage.StorageLevel
+    val out = Files.createTempDirectory("callercache").toString + "/approaches"
+    for (ids <- Seq(Seq(0L, 1L), Seq(1L, 2L))) {
+      val batch = keyed(ids, 1).persist()
+      try {
+        batch.count()
+        Sinks.mergeApproachesTable(batch, out, buckets = 4)
+        assert(batch.storageLevel != StorageLevel.NONE,
+          "the merge dropped the caller's cache")
+      } finally batch.unpersist()
+    }
+    assert(unstableByFlight(out) == Map(0L -> 1, 1L -> 1, 2L -> 1))
+  }
+
+  test("empty batch: no table on a first merge, no file touched on a later one") {
+    import org.apache.hadoop.fs.Path
+    val out = Files.createTempDirectory("empty").toString + "/approaches"
+    val fs = new Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val empty = keyed(Seq.empty, 0)
+    Sinks.mergeApproachesTable(empty, out, buckets = 4)
+    assert(!fs.exists(new Path(out)),
+      "an empty first batch created a table dir no later read can infer")
+    Sinks.mergeApproachesTable(keyed(Seq(0L, 1L, 2L), 9), out, buckets = 4)
+    def files(): Map[String, Long] = {
+      val it = fs.listFiles(new Path(out), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => f.getPath.toString -> f.getLen).toMap
+    }
+    val before = files()
+    Sinks.mergeApproachesTable(empty, out, buckets = 4)
+    assert(files() == before, "an empty later batch changed the table's files")
+    assert(unstableByFlight(out) == Map(0L -> 9, 1L -> 9, 2L -> 9))
+  }
+
   test("printApproaches: console sink renders without throwing (S8)") {
     import spark.implicits._
     Sinks.printApproaches(Seq((1L, "AP01")).toDF("flight_id", "airport_id"), 5)

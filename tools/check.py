@@ -63,9 +63,13 @@ def schema_classes(tbl):
     return {c: type_class(tbl.schema.field(c).type) for c in tbl.column_names}
 
 
+# the checkout this script lives in (tools/..): Verify dumps that tree
+REPO = Path(__file__).resolve().parent.parent
+
+
 def run_verify(sf_dir, out_dir):
     cmd = ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}']
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True)
+    r = subprocess.run(cmd, cwd=REPO, capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout[-4000:])
         print(r.stderr[-4000:])
