@@ -158,17 +158,17 @@ object Bench {
     // still gets the headline, because the two big per-query maps lead
     // and every headline scalar (total, failed, contended) trails. The
     // full line is also written to BENCH_full.json, plus a
-    // cpus-suffixed copy so runs at two core counts don't clobber
-    // each other.
+    // cpus-suffixed copy under target/ so runs at two core counts don't
+    // clobber each other and no run overwrites a tracked capture.
     val window = BenchPolicy.window(expectApplicable, ratioMedian)
     val line = s"""{"queries":$qs,"over_expect":$ratioJson,"failed":$failed,"contended":$contendedJson,"no_expect":$noExpect,"reruns":$reruns,"extra_passes":$extraPasses,"window":"$window","over_expect_median":${f"$ratioMedian%.2f"},"sf":"$sfDir","passes":$passes,"semantics":"as-declared(toRdd); r7-and-earlier used count() which pruned projection+sort work","metric":"total","unit":"sec","value":$total}"""
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_full.json"),
         (line + "\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"BENCH_full_c$cpus.json"),
-        (line + "\n").getBytes("UTF-8"))
+      val perCpu = java.nio.file.Paths.get("target", s"BENCH_full_c$cpus.json")
+      java.nio.file.Files.createDirectories(perCpu.getParent)
+      java.nio.file.Files.write(perCpu, (line + "\n").getBytes("UTF-8"))
     } catch { case NonFatal(_) => () } // stdout stays the contract
     println(line)
     spark.stop()

@@ -23,26 +23,26 @@ import org.apache.spark.sql.functions._
 object ScaleBench {
 
   /** Queries measured (the bench's top cost lines + the flagship +
-    * the r7 additions with non-trivial wide work).
+    * the later additions with non-trivial wide work).
     */
   val Heavy: Seq[String] = Seq(
     "q47_dedup_clusters", "q39_merge_sink", "q33_jaccard_pairs",
     "q31_minhash_lsh", "q28_per_aircraft_thresholds", "q20_approaches",
     "q75_chunk_dedup", "q77_bloom_prejoin",
-    // r8 additions: the HLL sketch (fixed-state vs the growing exact
+    // the HLL sketch (fixed-state vs the growing exact
     // distinct), both substring-dedup operators (shingle volume
     // grows linearly; the capped pair explode must not go quadratic),
     // and the two newly-native map-only scalars (pure scan
     // throughput — their decades pin the per-row cost constant)
     "q84_hll_distinct", "q85_span_dedup", "q86_span_cut",
     "q37_fingerprint", "q49_simhash64",
-    // r9 additions: the quantile sketch (fixed bucket state vs the
+    // the quantile sketch (fixed bucket state vs the
     // full-sort exact witness), unigram LM scoring (broadcast vocab
     // probe + integer per-doc fold), bigram PMI (pair-agg volume),
     // and the ORC read path (pushed-predicate scan throughput)
     "q89_quantile_sketch", "q90_unigram_logprob", "q91_pmi_bigrams",
     "q92_orc_roundtrip", "q93_weighted_sample",
-    // r10 additions: the partition-pruned scan (pruning must hold the
+    // the partition-pruned scan (pruning must hold the
     // read constant per day as total volume grows), the normalized
     // dedup (map-only normalize + digest agg), the sketch rollup
     // (fine sketch build grows, the rollup-over-sketches must not),
@@ -67,18 +67,18 @@ object ScaleBench {
     // fixed sample SIZE (n_queries constant), under which the exact
     // pass is linear in n — the plan/budget specs pin that shape
     "q106_key_skew",
-    // r10 batch 2: delta-vs-base near-dup (delta grows with the
+    // delta-vs-base near-dup (delta grows with the
     // corpus — a bigger base gets a bigger crawl batch — so the
     // band-join + confirm volume law is measurable), the hashed
     // classifier and the length histogram (both map-only scans whose
     // decades pin the per-row scoring/bucketing cost constant)
     "q107_delta_neardup", "q108_quality_classifier",
     "q109_length_histogram",
-    // r10 batch 3: importance resampling (vocab aggs + broadcast
+    // importance resampling (vocab aggs + broadcast
     // probe + bounded top-k — the q90+q93 composition's law) and the
     // drift monitor (one tagged (term, counts) agg)
     "q110_importance_resample", "q111_drift_stats",
-    // r10 batch 4: containment shares q33's inverted-index pair law
+    // containment shares q33's inverted-index pair law
     // (shingle volume grows linearly, candidate pairs with it); the
     // decon probe is corpus x FIXED-eval (the replica keeps the eval
     // suite replica-0-only, so the law is the linear map-only scan);
@@ -112,7 +112,7 @@ object ScaleBench {
     // that machinery under composition); the only work q124 adds is
     // one narrow (id, label) join and a map-only hash projection
     "q122_banded_align",
-    // r12 second-leg additions: three scan-throughput decades (the
+    // three scan-throughput decades (the
     // per-row cost must stay constant as volume grows — JSON parse
     // for q131, zlib deflate for q132, BMP raster walk for q133) and
     // the banded hard-negative miner (q134 — same linearity question
@@ -134,23 +134,23 @@ object ScaleBench {
     // here means the banding degenerated)
     "q140_image_neardup",
     // q142: HTML extraction — pure regex scan; its decade pins the
-    // per-document regex cost constant (r15: now including the
+    // per-document regex cost constant (including the
     // comment/CDATA/entity passes — the added per-row cost must stay
     // constant too)
     "q142_html_extract",
-    // r15 additions: q158's cost drivers are q150's line machinery +
+    // q158's cost drivers are q150's line machinery +
     // q47's pair/CC (both decades measured individually); measuring
     // the COMPOSITION pins that assembling them adds no superlinear
     // join (the q116-under-composition precedent). q159's decade pins
     // the delta-admission law: base index probe stays one column scan
     // while the delta grows with the corpus
     "q158_curation_v3", "q159_line_admit",
-    // r16 additions: q160/q161 curate from the real container fronts
+    // q160/q161 curate from the real container fronts
     // (ZIP / WebDataset tar) — their decades pin that the archive
     // encode/walk boundary (map-only per shard) and the downstream
     // q157-family stages compose without a superlinear term
     "q160_container_curation", "q161_webdataset_curation",
-    // r17 additions: q162 composes the cluster stage onto the q160
+    // q162 composes the cluster stage onto the q160
     // front (its decade pins the pair/CC term under the container
     // lineage); q163's decade pins the gzip member walk
     "q162_cluster_split_front", "q163_warc_curation")
@@ -197,7 +197,7 @@ object ScaleBench {
     // only if either table needs building; spans both maxima in case
     // an order carries no lineitem rows).
     // BOTH-or-neither: a dir holding one orderkey fact but not the
-    // other (e.g. pre-r12 pre-seeds had lineitem only) must rebuild
+    // other (e.g. an older pre-seed with lineitem only) must rebuild
     // BOTH — the surviving table's stride came from max(l_orderkey)
     // alone, and pairing it with a both-maxima stride silently breaks
     // the FK inside every replica k > 0 (joins drop rows, no error)
@@ -304,7 +304,7 @@ object ScaleBench {
     }
   }
 
-  /** Build-only entry (r12's above-sf0.1 oracle gate): replicate the
+  /** Build-only entry (the above-sf0.1 oracle gate): replicate the
     * full 10-table corpus without measuring anything, so check.py can
     * run the DuckDB gate against the replica.
     * Usage: runMain graft.ScaleBenchBuild [sfDir] [out] [factor]
@@ -327,7 +327,7 @@ object ScaleBench {
       // toRdd, NOT count(): the count rewrite lets Catalyst prune
       // cardinality-neutral operators — q85's span left-join and
       // q86's aggregate expressions vanish under count(), and the
-      // "measurement" times the fixture scan (caught in r8: q85 at a
+      // "measurement" times the fixture scan (q85 at a
       // REAL 100x corpus timed 1.4x — physically impossible for 100x
       // the shingle volume). toRdd executes the plan as declared,
       // the same rule Bench documents.

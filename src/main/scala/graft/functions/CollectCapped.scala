@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * just an output bound: a shingle with df ~10^9 at 100 TB costs each
   * task at most `cap` buffered entries before collapsing to the flag,
   * where a plain collect_list-then-filter buffers the full reduce-side
-  * member list first (the r17-verdict OOM).
+  * member list first (which ran out of memory on hot groups).
   */
 final class CappedMembersBuffer(val cap: Int) {
   var ids: Array[Long] = null
@@ -65,8 +65,8 @@ final class CappedMembersBuffer(val cap: Int) {
 /** `collect_members_capped(doc_id, n_sh, cap)`: the group's
   * (doc_id, n_sh) members sorted by (doc_id, n_sh) as an
   * array<struct<doc_id,n_sh>>, or NULL once the group exceeds `cap`
-  * members — the df-cap filter `size(ms) <= maxDf` of the r17 pair
-  * core, moved INSIDE the aggregate so the cap bounds the aggregation
+  * members — the pair core's df-cap filter `size(ms) <= maxDf`,
+  * moved INSIDE the aggregate so the cap bounds the aggregation
   * buffer itself (guide §5: what a task holds in memory). Sorting at
   * eval replaces the old `sort_array(collect_list(...))` and is the
   * same struct order, so the output is total and does not depend on

@@ -64,7 +64,7 @@ object Mp4 {
     // `depth` is explicit because `end == b.length` does NOT imply
     // top level: a nested scope ends at the file end whenever its
     // container is the last top-level box (moov-last layouts), and
-    // size==0 must still be rejected there (r16 advice).
+    // size==0 must still be rejected there.
     def walk(start: Int, end: Int, depth: Int): Boolean = {
       var off = start
       while (off < end) {

@@ -26,8 +26,7 @@ package graft.multimodal
   * degenerates to sum > sum.
   *
   * Reference posture: the reference (ngafid_cpat) has no media path;
-  * this is §2.11 multimodal x dedup (SURVEY.md), the r13 verdict's
-  * top-ranked gap.
+  * this is §2.11 multimodal x dedup (SURVEY.md).
   */
 object Phash {
 

@@ -203,8 +203,7 @@ object AsOfJoin {
   /** The composed measure-then-salt as-of: scout the LEFT side's key
     * distribution ([[Skew.measureSkew]] — one map-side-combined
     * aggregate), then run the as-of with exactly the fan-out the
-    * measurement derived. The r13 verdict's last manual salt count,
-    * retired.
+    * measurement derived, instead of a hand-picked salt count.
     */
   def asofJoinMeasured(left: DataFrame, right: DataFrame, key: String,
       time: String, payload: Seq[String], out: String = "asof",

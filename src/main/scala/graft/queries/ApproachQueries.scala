@@ -222,8 +222,8 @@ object ApproachQueries {
         element_at(array(lit("C172"), lit("PA28"), lit("SR20"), lit("BE36")),
           (col("flight") % 4 + 1).cast("int")))
     // thresholds as a broadcast dimension TABLE (the reference's
-    // exceedance_thresholds read) — the at-scale form, and since r8
-    // the only one (a driver-side Map config converts via toDF)
+    // exceedance_thresholds read) — the at-scale form, and the only
+    // one (a driver-side Map config converts via toDF)
     import spark.implicits._
     val thDim = Seq(
       ("PA28", graft.model.Thresholds(approachMaxIas = 85)),

@@ -63,7 +63,7 @@ object MultimodalQueries {
         col("col").getItem(1).as("f1"),
         col("col").getItem(2).as("f2"),
         col("col").getItem(3).as("f3"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -102,7 +102,7 @@ object MultimodalQueries {
     graft.multimodal.BatchedDecode
       .decodeBatched(mediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole decode stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -258,7 +258,7 @@ object MultimodalQueries {
     graft.multimodal.BatchedDecode
       .decodeStats(bmpMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -310,7 +310,7 @@ object MultimodalQueries {
     graft.multimodal.BatchedDecode
       .decodeStats(jpegMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole decode stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -466,7 +466,7 @@ object MultimodalQueries {
     graft.multimodal.BatchedDecode
       .decodeStats(audioMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -619,8 +619,8 @@ object MultimodalQueries {
   // 25000, i.e. at most 1000 probes regardless of corpus size) — a
   // production audit samples a constant probe panel, so the exact
   // side costs |panel| x n, LINEAR in the corpus, and the replica
-  // oracle gate can run this audit at every factor (the r13 verdict's
-  // item 7 posture, designed in rather than retrofitted).
+  // oracle gate can run this audit at every factor (designed in
+  // rather than retrofitted).
   def q141(spark: SparkSession, dir: String): DataFrame = {
     val hashes = graft.multimodal.BatchedDecode
       .decodeDHash(dhashMediaFromDocuments(tbl(spark, dir, "documents")))
@@ -721,7 +721,7 @@ object MultimodalQueries {
       .toDF()
       .withColumn("nacf_e4",
         round(lit(10000.0) * col("r_best") / col("energy")).cast("long"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole decode stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -785,7 +785,7 @@ object MultimodalQueries {
       .toDF("media_id", "payload")
     graft.multimodal.BatchedDecode.decodeStats(media)
       .toDF()
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()

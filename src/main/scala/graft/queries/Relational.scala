@@ -648,7 +648,7 @@ object Relational {
         sqrt(col("dux") * col("dux") + col("duy") * col("duy")))), 4)
         .as("dest_lat"),
       round(degrees(atan2(col("duy"), col("dux"))), 4).as("dest_lon"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -891,9 +891,8 @@ object Relational {
     * This is SETUP, not query work — a warehouse writes its bucketed
     * facts once and amortizes them over every co-located join, so the
     * bench warm-up calls this and [[q48]] itself spends its time on
-    * the join (the r3 form rewrote both tables into a fresh temp dir
-    * inside the timed body every run, measuring parquet writes and
-    * littering temp dirs).
+    * the join (rewriting both tables into a fresh temp dir inside the
+    * timed body would measure parquet writes and litter temp dirs).
     */
   def prepareBucketedTables(spark: SparkSession, dir: String): (String, String) = {
     val mt = Seq("orders", "lineitem")
@@ -1254,7 +1253,7 @@ object Relational {
   // replays registers, checksum, and estimate bit-for-bit.
   def q84(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    // scale-adaptive fan-out (r17): the witness's multi-distinct
+    // scale-adaptive fan-out: the witness's multi-distinct
     // Expand + the per-row hll_build digest both run in the scan
     // stage — serial on the one-rowgroup fixture (the sketch's
     // register-partial exchange law is pinned on its own pipeline in
@@ -1874,7 +1873,7 @@ object Relational {
   // distinct column; at 100 TB swap them for the HLL sketch (q84) —
   // the shape is otherwise a single map-side-combined aggregate.
   def q104(spark: SparkSession, dir: String): DataFrame = {
-    // scale-adaptive fan-out (r17): three multi-distinct aggregates
+    // scale-adaptive fan-out: three multi-distinct aggregates
     // Expand the 600k-row fact 4x through the partial-agg stage, and
     // the fixture scan is one unsplittable rowgroup — the whole
     // profile ran in one task. The narrow 3-column projection crosses
@@ -1902,7 +1901,7 @@ object Relational {
         |'l_extendedprice_cents', n_rows, n_rows - price_n, price_d, price_min, price_max,
         |'l_discount_nz_e4', n_rows, n_rows - disc_n, disc_d, disc_min, disc_max)
         | AS (column, n_rows, n_null, n_distinct, min_v, max_v)""".stripMargin)
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -2008,9 +2007,8 @@ object Relational {
       |ORDER BY metric, key_id""".stripMargin
 
   // ---- q139: measured salting — q106's scout FEEDING q26's join ----
-  // r12's verdict item: the skew audit (q106) and the salted join
-  // (q26) existed side by side but the salt count was still a
-  // hand-picked constant. This query composes them: measure the fact
+  // The skew audit (q106) and the salted join (q26) alone leave the
+  // salt count a hand-picked constant. This query composes them: measure the fact
   // side's key distribution (Skew.measureSkew — one map-side-combined
   // aggregate, a stats row + a BOUNDED hot-key list driver-side),
   // derive the fan-out (salts = ceil(max/mean), clamped) and the hot
@@ -2049,7 +2047,7 @@ object Relational {
     // integer math (q106's divide-first floor-mean sequence). n_hot
     // reports the CAPPED hot-list size (maxHot = 1000 bounds the
     // driver-side collect and the isin literal), and the oracle
-    // mirrors the cap with least(count, 1000) — the r13 100x gate
+    // mirrors the cap with least(count, 1000) — the 100x replica gate
     // caught the uncapped oracle diverging exactly there (spark 1000
     // vs duck 3000 hot keys at 1.5M events); result identity is
     // unaffected (which keys get salted never changes join output),

@@ -123,7 +123,7 @@ object TextQueries {
   // family) -> 4 bands x 2 rows -> bucket join on band key ->
   // m8 >= 4 calibrated pre-filter -> exact-Jaccard confirm >= 0.5.
   //
-  // The pre-filter is q127's calibration table APPLIED (r12): the
+  // The pre-filter is q127's calibration table APPLIED: the
   // confirm bar J >= 0.5 implies E[m8] >= 4, and the measured table
   // shows every true pair at m8 >= 4 on all gate SFs while organic
   // band collisions (J ~ 0.01) sit at m8 <= 3 — so candidates with
@@ -143,7 +143,7 @@ object TextQueries {
     // below each re-read this, and sibling branches of one job would
     // otherwise race to re-run the md5 digest pass 2-3x (measured:
     // 27 s -> ~10 s at sf0.1 when the barrier landed). A repartition
-    // replaces the r3-r4 persist+count: the shuffle map stage runs
+    // replaces a persist+count: the shuffle map stage runs
     // exactly once per job and every branch reads its output — same
     // guarantee, no extra action, no cache lifecycle (see
     // TextOps.jaccardPairs).
@@ -281,7 +281,7 @@ object TextQueries {
       tbl(spark, dir, "documents").select(col("doc_id"), col("text")),
       col("text"), "simhash64")
       .select(col("doc_id"), col("simhash64"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -425,7 +425,7 @@ object TextQueries {
         floor(sumLen * 100 / nTok).cast("long").as("avg_tok_len_e2"),
         floor(stopHits * 10000 / nTok).cast("long").as("stop_ratio_e4"),
         qualityE4Col.as("quality_e4"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -460,7 +460,7 @@ object TextQueries {
         size(expr(
           "regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\\\s]', 0)"))
           .cast("long").as("bpe_tokens"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -486,7 +486,7 @@ object TextQueries {
         col("doc_id"),
         col("s.fingerprint").as("fingerprint"),
         col("s.n_distinct").as("n_distinct_8grams"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -515,8 +515,8 @@ object TextQueries {
     // scan (explodes ~20 docs), while df runs one full-corpus
     // count_distinct (two-phase: map-side partial distinct on
     // (term, doc_id), then one shuffle of the survivors). No persist,
-    // no eager barrier, one job — the r3 form cached the full-corpus
-    // tf table only to aggregate it straight down to df.
+    // no eager barrier, one job — caching the full-corpus tf table
+    // would only feed an aggregate straight down to df.
     val tf = tok.filter(col("doc_id") < 20)
       .groupBy(col("doc_id"), col("doc_len"), col("term"))
       .agg(count(lit(1)).as("occ"))
@@ -1107,7 +1107,7 @@ object TextQueries {
         expr("dup_c * 10000 div n_2grams").as("dup_frac_e4"))
       .withColumn("keep",
         col("top_frac_e4") <= 2000 && col("dup_frac_e4") <= 6000)
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -1292,7 +1292,7 @@ object TextQueries {
       StructField("doc_id", LongType),
       StructField("quality_e4", LongType),
       StructField("train_idx", LongType))))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -1479,7 +1479,7 @@ object TextQueries {
   // 100 TB this is embarrassingly parallel and the output is what
   // gets Z-ordered/bucketed for the ANN build downstream.
   def q76(spark: SparkSession, dir: String): DataFrame =
-    // scale-adaptive fan-out (r17): ~40 chunk digests per doc, all
+    // scale-adaptive fan-out: ~40 chunk digests per doc, all
     // computed in the scan stage — serial on the one-rowgroup
     // fixture; no-op at production scale (see ScanFanOut)
     graft.operators.ScanFanOut(tbl(spark, dir, "documents"))
@@ -1534,7 +1534,7 @@ object TextQueries {
         regexp_count(col("text"), lit(phoneRe)).cast("long").as("n_phones"),
         md5(regexp_replace(regexp_replace(col("text"), emailRe, "<email>"),
           phoneRe, "<phone>")).as("scrubbed_md5"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -1649,7 +1649,7 @@ object TextQueries {
     */
   private[queries] def spanFixture(spark: SparkSession,
       dir: String): DataFrame = {
-    // (r17: a ScanFanOut here was tried and REVERTED — no in-bench
+    // (a ScanFanOut here was tried and REVERTED — no in-bench
     // win: the fixture feeds several consumers across q85/q86's
     // subplans and the digest front's serial share is small)
     val docs = tbl(spark, dir, "documents")
@@ -2334,8 +2334,8 @@ object TextQueries {
         // distance (identical output rows); past it, -1 (the rows the
         // filter dropped anyway). The oracle keeps the unbounded form
         // + filter: same relation, engine-independent.
-        // The explode(array(struct)) wrap is a Generate BARRIER
-        // (r17): without it Catalyst pushes the `lev != -1` filter
+        // The explode(array(struct)) wrap is a Generate BARRIER:
+        // without it Catalyst pushes the `lev != -1` filter
         // into the join condition by SUBSTITUTING the levenshtein
         // expression, and the projection recomputes it — every
         // surviving pair paid the banded scorer TWICE (verified in
@@ -2352,7 +2352,7 @@ object TextQueries {
       .select(col("r.id_a").as("id_a"), col("r.id_b").as("id_b"),
         col("r.lev").as("lev"), col("r.max_len").as("max_len"))
       .filter(col("lev") =!= -1L)
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's final stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -2584,7 +2584,7 @@ object TextQueries {
           aggregate(col("big"), lit(0L), (acc, b) => acc + wInt(b)))
           .as("score_int"))
       .withColumn("keep", col("score_int") > 0)
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -3212,7 +3212,7 @@ object TextQueries {
         // way, but CJK-heavy real documents flag 3x differently
         octet_length(body).cast("long").as("raw_len"),
         TextOps.repetitiveFlag(body).cast("int").as("is_repetitive"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -3228,9 +3228,8 @@ object TextQueries {
       |FROM documents ORDER BY doc_id""".stripMargin
 
   // ---- q142: HTML/boilerplate main-content extraction ----
-  // The CCNet/RefinedWeb front door (r13 verdict gap #2; REAL-CRAWL
-  // HARDENED r15, the r14 verdict's top item): every text operator
-  // above starts from clean `text`, but real crawl curation starts
+  // The CCNet/RefinedWeb front door (REAL-CRAWL HARDENED): every
+  // text operator above starts from clean `text`, but real crawl curation starts
   // from HTML. Planted closed-form pages wrap each doc's
   // (ASCII-sanitized) text in the full boilerplate zoo — doctype,
   // title, UPPERCASE style/script tags with attributes containing
@@ -3286,7 +3285,7 @@ object TextQueries {
       lit("]]> plus enough visible characters to pass</p>"),
       lit("<footer><a href=\"/c\">Contact</a> (c) "), s(id % 100),
       lit("</footer></body></html>"))
-    // scale-adaptive fan-out (r17): the extraction is the suite's
+    // scale-adaptive fan-out: the extraction is the suite's
     // heaviest per-row map work and the fixture scan is one
     // unsplittable rowgroup — serial without this (measured 4.3 s
     // 1-task vs ~1 s fanned; no-op at production scale, see
@@ -3398,8 +3397,7 @@ object TextQueries {
   }
 
   // ---- q143: URL canonicalization + blocklist filter ----
-  // The step between the crawl and q61's curation (r13 verdict gap
-  // #5): raw crawl URLs arrive in every casing/port/fragment/query
+  // The step between the crawl and q61's curation: raw crawl URLs arrive in every casing/port/fragment/query
   // variant, and dedup-by-URL or blocklist filtering is meaningless
   // until they canonicalize. Rules (the standard WHATWG-ish subset,
   // all expressible as Column regex combinators in the RE2∩Java
@@ -3440,8 +3438,8 @@ object TextQueries {
     // userinfo stripped at the LAST '@', bracket-aware host capture,
     // single trailing root-dot stripped — graft.text.Urls.hostOf's
     // full hardened rule, mirrored expression-for-expression in the
-    // oracle SQL below so the two cannot drift (r16 advice: the
-    // earlier '^([^:]+)' capture parsed '[2001:db8::1]' as '[2001');
+    // oracle SQL below so the two cannot drift (a '^([^:]+)' capture
+    // would parse '[2001:db8::1]' as '[2001');
     // the fixture carries none of these forms, so output is unchanged
     val noUser = regexp_replace(hostport, "^.*@", "")
     val host = regexp_replace(
@@ -3472,7 +3470,7 @@ object TextQueries {
         col("domain") === col("blocked_domain"), "left")
       .select(id, col("canon_url"), col("domain"),
         col("blocked_domain").isNotNull.as("blocked"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -3561,7 +3559,7 @@ object TextQueries {
   // 100 TB posture: digest pass + df aggregate + prefix-only index
   // self-join (candidates collapse toward the true pair count because
   // prefixes hold the rarest shingles) + two doc_id-keyed verify
-  // joins on compact hashed-set rows. r15 adds PPJoin's POSITION
+  // joins on compact hashed-set rows, plus PPJoin's POSITION
   // bound to the candidate join (a shared prefix token at positions
   // (i,j) witnesses overlap ≤ 1 + min(na−i, nb−j), pruned below the
   // required α) — adopted after measurement (SCALE.md):
@@ -3632,7 +3630,7 @@ object TextQueries {
   // map-side-combined min aggregate + equi join (no window over the
   // corpus line table); PlanSpec pins it.
   def q150(spark: SparkSession, dir: String): DataFrame =
-    // scale-adaptive fan-out (r17): the re-line + per-line digest
+    // scale-adaptive fan-out: the re-line + per-line digest
     // front runs in the scan stage — serial on the one-rowgroup
     // fixture; no-op at production scale (ScanFanOut)
     TextOps.lineDedup(withBoilerLines(
@@ -3693,7 +3691,7 @@ object TextQueries {
       |ORDER BY nl.doc_id""".stripMargin
 
   // ---- q159: incremental (delta-vs-base) line dedup ----
-  // The standing-crawl form of q150 (survey r16 candidate #3): a
+  // The standing-crawl form of q150: a
   // release's line-digest index is a persisted artifact, and each
   // crawl delta admits lines against base ∪ its own keep-first —
   // re-crawled docs read as all-boilerplate (n_kept 0), edited docs
@@ -3713,7 +3711,7 @@ object TextQueries {
   // sort-merge fallback past it); everything else is delta-sized
   // digest machinery.
   def q159(spark: SparkSession, dir: String): DataFrame = {
-    // (r17: a ScanFanOut on this seed was tried and REVERTED — the
+    // (a ScanFanOut on this seed was tried and REVERTED — the
     // base-index and four batch parts consume the seed from several
     // eager subplans, each re-paying the repartition: measured
     // 3.7 s -> 5.3 s in-bench. The serial digest front is the
@@ -3735,7 +3733,7 @@ object TextQueries {
     val partD = docs.filter(id % 9 === 2)
       .select(Fixtures.plantedId(id, 6000000L).as("doc_id"),
         freshToks(21, "f").as("text"))
-    // r18: persist the constructed batch — the LineDedupStream
+    // persist the constructed batch — the LineDedupStream
     // pattern applied to the one-shot query. THREE subplans evaluate
     // the batch lineage (the transport estimator, the keeper side,
     // and lineStatsFrom's n_lines scan), and the lineage is the
@@ -3813,8 +3811,8 @@ object TextQueries {
   }
 
   // ---- q157: curation pipeline v2 (URL gate -> line dedup -> rules) ----
-  // The r14 stages composed into ONE query the way a production
-  // curation job runs them (q61 composed the r6-era stages; this
+  // The crawl-side stages composed into ONE query the way a production
+  // curation job runs them (q61 composed the earlier stages; this
   // extends the chain with the crawl-side front): per doc, the
   // planted messy URL (q143's fixture) canonicalizes to a registrable
   // domain and gates on the broadcast blocklist; survivors re-line
@@ -3863,7 +3861,7 @@ object TextQueries {
       withBoilerLines(gated.filter(!col("blocked"))
         .select(col("doc_id"), col("text"))))
       .select(col("doc_id"), col("n_lines"), col("n_kept"))
-    // (r18: computing the signals INLINE on the assembly scan was
+    // (computing the signals INLINE on the assembly scan was
     // tried and REVERTED — measured 1.32 s -> 2.30 s best-of-3. The
     // final orderBy is a RANGE exchange, and range partitioning
     // SAMPLES its child: everything below it with no intervening
@@ -3983,8 +3981,7 @@ object TextQueries {
        |FROM j ORDER BY doc_id""".stripMargin
 
   // ---- q158: curation pipeline v3 (HTML front + cluster-aware split) ----
-  // Completes the composition the r14 verdict called half-delivered:
-  // q157 chained URL gate -> line dedup -> rules but started from
+  // Completes the composition: q157 chained URL gate -> line dedup -> rules but started from
   // clean text and split PER DOC (q46's salted hash), so a near-dup
   // group could still straddle train/test. v3 is the full crawl
   // shape: each doc (organic ∪ planted near-copies ∪ planted THIN
@@ -4033,7 +4030,7 @@ object TextQueries {
     val thinDocs = base.filter(id % 97 === 0)
       .select(Fixtures.plantedId(id, 3000000L).as("doc_id"),
         concat(lit("tiny page "), (id % 9).cast("string")).as("text"))
-    // scale-adaptive fan-out (r17): extraction below is q142's heavy
+    // scale-adaptive fan-out: extraction below is q142's heavy
     // regex pipeline over every corpus row and the fixture scan is
     // one unsplittable rowgroup — the (doc_id, text) seed crosses one
     // tiny exchange so the page build + extraction run wide (ext
@@ -4098,7 +4095,7 @@ object TextQueries {
     // stage 3: near-dup clusters over the live set
     val clusters = TextOps.dedupClusters(TextOps.jaccardPairs(live, 0.5))
     // stage 4: language/quality signals over the live set.
-    // (r18: inlining these on the assembly scan was tried and
+    // (inlining these on the assembly scan was tried and
     // REVERTED — the final orderBy's range exchange SAMPLES its
     // child, so expressions below it with no intervening shuffle
     // evaluate twice; the broadcast-built branch here evaluates once.
@@ -4133,7 +4130,7 @@ object TextQueries {
         coalesce(col("lang_pred"), lit("und")).as("lang_pred"),
         coalesce(col("quality_e4"), lit(0L)).as("quality_e4"),
         col("reason"), col("reason").isNull.as("keep"))
-      // r18: cache the small pre-sort result — the orderBy's range
+      // cache the small pre-sort result — the orderBy's range
       // partitioner samples its child with one extra execution, which
       // re-ran this query's final stage (measured; see OPTIMIZATION_r18.md)
       .persist()
@@ -4293,7 +4290,7 @@ object TextQueries {
   }
 
   // ---- q160: curation over the REAL container front ----
-  // Closes the last composition gap the r15 verdict named: q157/q158
+  // Closes the last composition gap: q157/q158
   // curate from the documents parquet, but a real crawl run starts at
   // the CONTAINER boundary — shards of pages that must be walked on
   // the executors before any curation stage sees text. Here every doc
@@ -4306,7 +4303,7 @@ object TextQueries {
   // curation chain: HTML extract -> thin gate -> HARDENED host gate
   // (graft.text.Urls: userinfo-safe capture + host-suffix blocklist —
   // every 11th planted URL carries `user:pass@`, the exact bypass the
-  // r15 advice flagged, and the oracle mirrors the hardened rule) ->
+  // hardened rule blocks, and the oracle mirrors that rule) ->
   // corpus line dedup -> lang/quality -> salted per-doc split.
   // Scope note: the cluster-aware split stays q158's stage (near-dup
   // CC is proven there); q160's new ground is the container boundary
@@ -4396,7 +4393,7 @@ object TextQueries {
   }
 
   /** The planted crawl URL for `doc_id` — q157's messy-URL cycle plus
-    * a `user:pass@` userinfo segment every 11th doc (the r15-advice
+    * a `user:pass@` userinfo segment every 11th doc (the
     * blocklist bypass the hardened gate must still block). Shared by
     * q160 (recomputed from doc_id) and q161 (carried as a REAL json
     * member through the tar round trip).
@@ -4423,7 +4420,7 @@ object TextQueries {
     * through into the output. The gated frame is PERSISTED here:
     * the sibling consumers (line stats, signals, clusters when
     * cluster-aware, final assembly) read it with different column
-    * sets — q158's measured ReuseExchange argument. (r18: inlining
+    * sets — q158's measured ReuseExchange argument. (Inlining
     * the per-row signals on the assembly scan was tried and REVERTED
     * — the final orderBy's range exchange SAMPLES its child, so the
     * inlined expressions evaluated twice; measured +0.2 s on
@@ -4996,7 +4993,7 @@ object TextQueries {
     Seq("shard_id", "m_idx", "n_members", "named"))
 
   // ---- q164: table-backed blocklist gate (PSL shape) ----
-  // The residual Urls.scala documented honestly since r16: the
+  // The residual Urls.scala documents: the
   // literal-array gate (blockedByHostSuffix) is right for a service's
   // parameter-passed list, but "block every site under a freehoster"
   // needs a public-suffix-scale TABLE — and a table must not ride the

@@ -60,8 +60,8 @@ object VectorQueries {
   private[graft] def withNorm(df: DataFrame): DataFrame =
     df.withColumn("nv", sqrt(dot(col("v"), col("v"))))
 
-  /** FIXED-SIZE anchor panels for the exact audit baselines (r14,
-    * the q141 posture applied to the vector family): the 8 queries
+  /** FIXED-SIZE anchor panels for the exact audit baselines (the
+    * q141 posture applied to the vector family): the 8 queries
     * that embed an all-pairs/exact scorer as ground truth (q40, q70,
     * q105, q118, q123, q126, q128, q135) used samples that GROW with
     * the corpus (every 100th/50th vector), so their DuckDB oracles
@@ -1444,7 +1444,7 @@ object VectorQueries {
 
   def q118(spark: SparkSession, dir: String): DataFrame = {
     val (a0, b) = alignSides(spark, dir)
-    // scale-adaptive fan-out (r17): the |panel| x |b| exact scorer
+    // scale-adaptive fan-out: the |panel| x |b| exact scorer
     // inherits the probe side's scan partitioning, and the fixture
     // embeddings are one unsplittable rowgroup — every dot product
     // ran in one task (measured: q118 1.94 s -> ~1.5 s; banded paths
@@ -1771,7 +1771,7 @@ object VectorQueries {
 
   /** The margin-admission tail over a scored-pairs frame (xid, yid,
     * cos_e6, extra columns ignored): both top-4 partials + the 1.4x
-    * margin filter — split out (r17) so q123 can run it per config
+    * margin filter — split out so q123 can run it per config
     * over ONE shared scored table.
     */
   private def marginAdmitted(scored: DataFrame): DataFrame = {
@@ -1926,14 +1926,14 @@ object VectorQueries {
   }
 
   /** Self-describing oracle regeneration for the banded alignment
-    * family (the r12 verdict's replica-gate item): derive the SRP
+    * family (for the replica gate): derive the SRP
     * plane count from the dir's ACTUAL side cardinalities — the same
     * formula the Spark path uses — and emit q122's oracle SQL at that
     * count, so the replica gate covers the production ANN path
     * instead of excluding it at the 2048/side boundary. At every
     * driver gate SF the derived count IS the 8-plane default, so the
     * overlay is the identity there (OracleOverlaySpec pins this).
-    * r14 adds q123: its exclusion had TWO legs — the plane boundary
+    * q123 is covered too: its exclusion had TWO legs — the plane boundary
     * (its banded configs replay the 8-plane CTEs) and the
     * O(n^2)-priced exact ground truth — and both are closed: the
     * overlay regenerates its banded CTEs at the derived plane count,
@@ -1968,10 +1968,9 @@ object VectorQueries {
     // band3x8 and band3x8c differ ONLY by the confirm floor — a
     // filter on a column the candidate stage already computed — so
     // both configs derive from ONE persisted admitted set and the
-    // identical 3-table band join runs once, not twice (the r12
-    // verdict measured the rebuild as ~a third of q123's cost).
-    // r17: the 3-table and 6-table configs now ALSO share one
-    // candidate pass. BandSalts is a strict prefix of BandSalts6 and
+    // identical 3-table band join runs once, not twice (the rebuild
+    // measured ~a third of q123's cost). The 3-table and 6-table
+    // configs also share one candidate pass. BandSalts is a strict prefix of BandSalts6 and
     // a band key is struct(table_idx, bucket) over the SAME salted
     // sign tables, so the 3-table candidate set is exactly the
     // 6-table pairs that collide in some table < 3 — per-key bucket
@@ -2007,11 +2006,11 @@ object VectorQueries {
     // unsorted admitted set directly (counts are order-free)
     val b6 = marginAdmitted(scored6).persist()
     b6.count()
-    // r17 restructure (same three rows, same arithmetic): the audits
-    // previously ran PER CONFIG — each one an exact-count aggregate
-    // plus two broadcast-built count subplans, so the union plan
-    // spawned ~9 tiny aggregate/broadcast jobs and re-counted the
-    // persisted exact set three times. The three configs now ride
+    // one audit pass (same three rows, same arithmetic): audits run
+    // PER CONFIG — each one an exact-count aggregate plus two
+    // broadcast-built count subplans — make the union plan spawn ~9
+    // tiny aggregate/broadcast jobs and re-count the persisted exact
+    // set three times. The three configs now ride
     // ONE cfg-tagged union: one grouped count for the banded sides,
     // one hit join + grouped count against the exact set, one exact
     // count — 3 jobs total. Counts per cfg are unchanged (the tag

@@ -1,6 +1,12 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -43,15 +49,45 @@ object Sinks {
     * approach ids a re-run no longer produces also survive — exactly
     * the reference's upsert (it never deletes).
     *
-    * 100 TB posture: only the flight buckets the batch touches are
-    * rewritten; the existing-table read is partition-pruned to those
-    * buckets and the anti join broadcasts the batch's key projection
-    * (two small columns). The batch is evaluated once per merge: it
-    * is persisted for the merge's duration (unless the caller already
-    * cached it) and the touched-bucket collect, the key projection
-    * and the staged write all read that cache. The write runs
-    * min(touched buckets, defaultParallelism) tasks and puts exactly
-    * one file in each touched bucket dir per merge.
+    * COST. A batch of more than ~64 flights touches every bucket, so
+    * rewriting each touched bucket would rewrite the whole table on
+    * every merge. Instead each touched bucket is either APPENDED to,
+    * at O(batch) cost, or REWRITTEN, at O(bucket) cost:
+    *   - one job collects, per touched bucket, the batch's
+    *     [min, max] flight id;
+    *   - the driver reads the flight_id footer statistics of the
+    *     touched buckets' live files (see [[collidingBuckets]]). A
+    *     bucket may collide, and is rewritten as survivors ∪ batch,
+    *     when a file's range overlaps the batch's, a file has no
+    *     usable range, or the bucket already holds
+    *     [[MaxFilesPerBucket]] files (so appends cannot grow a bucket's
+    *     file count without bound);
+    *   - every other touched bucket gets the batch's rows as one new
+    *     file. New flights arrive as new id ranges, so in the common
+    *     case nothing collides and the live table is not read.
+    * The file cap is a compaction, and a compaction is not O(batch):
+    * it rewrites the whole bucket, its oldest and largest file
+    * included. Under a fleet stream every bucket fills at the same
+    * rate, so one merge in every [[MaxFilesPerBucket]] rewrites the
+    * whole table: about table/8 written per merge amortized, paid as
+    * a periodic full-table spike. Compacting only the appended files
+    * into one, leaving the bucket's largest file in place, with the
+    * trigger staggered per bucket, would make it O(batch); that is
+    * not done. The probe's driver cost also grows with the files: one
+    * listing per touched bucket and one footer open per live file, in
+    * series, so up to 64 × 7 = 448 opens just before a compaction.
+    * On local disk an open costs well under a millisecond (SCALE.md,
+    * "Keyed merge"); on an object store each is a remote round trip,
+    * and these reads would have to run in parallel.
+    *
+    * The rewrite read covers only the colliding bucket dirs, and its
+    * anti join broadcasts the batch's key projection (two small
+    * columns). The table still holds one row per key. The batch is
+    * evaluated once per merge: it is persisted for the merge's
+    * duration (unless the caller already cached it) and the range
+    * probe, the key projection and the staged write all read that
+    * cache. The write runs min(touched buckets, defaultParallelism)
+    * tasks and stages exactly one file per touched bucket.
     *
     * Every evaluation of the batch — including Spark's recompute of
     * an evicted cached partition — happens before the first promote
@@ -59,15 +95,21 @@ object Sinks {
     * cross-batch dedup probe) always observes the pre-merge table.
     *
     * CRASH SAFETY (the reference got this from MySQL's transaction,
-    * py:432-437): the merged buckets are STAGED in a sibling dir while
-    * the live table stays untouched — the write's input files are
-    * never its output files, so no mid-write state can corrupt or
-    * recompute-from-deleted anything — then promoted bucket-by-bucket
-    * with atomic renames through a backup dir. A crash at ANY point
-    * leaves each bucket wholly old or wholly new, never half-written:
+    * py:432-437): every touched bucket's new content is STAGED in a
+    * sibling dir while the live table stays untouched — the write's
+    * input files are never its output files, so no mid-write state
+    * can corrupt or recompute-from-deleted anything — then promoted
+    * with atomic renames. A crash at ANY point leaves each bucket
+    * wholly old or wholly new, never half-written:
     *   - during staging: live table untouched; stale staging is
     *     discarded by the next merge's recovery;
-    *   - during promotion: replaced buckets are PARKED in the backup
+    *   - during an append: each appended bucket takes one rename (its
+    *     staged file into the live dir, or the whole staged dir when
+    *     the bucket is new), so it holds the batch's rows or it does
+    *     not. A replay finds the appended buckets' footer ranges
+    *     overlapping the batch, rewrites them with the same rows, and
+    *     converges;
+    *   - during a rewrite: replaced buckets are PARKED in the backup
     *     dir, not deleted — [[recoverInterruptedMerge]] (run at every
     *     merge start) restores any bucket missing from the live table,
     *     so survivor rows are never lost; deleting the backup is the
@@ -79,7 +121,8 @@ object Sinks {
     *
     * SCHEMA EVOLUTION, additive only: a batch may carry columns the
     * table lacks — surviving rows in rewritten buckets null-fill
-    * them, untouched buckets keep their old footers, and readers
+    * them, untouched buckets and files an append leaves in place keep
+    * their old footers, and readers
     * take the authoritative schema from the `_graft_schema` marker
     * (one tiny file — never a per-merge footer sweep at 100 TB; see
     * [[schemaMarker]] for the crash-ordering argument), written
@@ -104,15 +147,15 @@ object Sinks {
     // FIRST batch would otherwise create a file-less table dir that
     // the next merge's read cannot infer a schema from (streaming
     // micro-batches before the first emission hit exactly this)
-    val touched = touchedBuckets(batch, buckets)
-    if (touched.isEmpty) return
+    val ranges = batchRanges(batch, buckets)
+    if (ranges.isEmpty) return
     val fs = new Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverInterruptedMerge(fs, path)
     if (!hasCommittedData(fs, path)) {
       val withBucket = withBucketCol(batch, buckets)
       withBucket
-        .transform(byBucket(touched.size))
+        .transform(byBucket(ranges.size))
         .write.mode(SaveMode.Overwrite)
         .partitionBy("flight_bucket").parquet(path)
       writeBucketsMarker(fs, path, buckets)
@@ -158,20 +201,108 @@ object Sinks {
           current.fields ++ added)))
     else if (marker.isEmpty)
       writeSchemaMarker(fs, path, asNullable(current)) // legacy upgrade
-    stageMerge(batch, path, buckets, touched)
-    promoteStaged(fs, path, touched)
+    val plan = planMerge(fs, path, ranges)
+    stageMerge(batch, path, buckets, plan)
+    promoteStaged(fs, path, plan)
   }
 
   private def withBucketCol(batch: DataFrame, buckets: Int): DataFrame =
     batch.withColumn("flight_bucket",
       pmod(col("flight_id"), lit(buckets)).cast("int"))
 
-  /** The bucket ids `batch` touches, collected (at most `buckets`
-    * small ints); empty iff the batch is.
+  /** Per bucket the batch touches, the batch's [min, max] flight id,
+    * collected in one job (at most `buckets` small rows); empty iff the
+    * batch is.
     */
-  private def touchedBuckets(batch: DataFrame, buckets: Int): Seq[Int] =
-    withBucketCol(batch, buckets).select(col("flight_bucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+  private[graft] def batchRanges(batch: DataFrame,
+      buckets: Int): Map[Int, (Long, Long)] = {
+    val id = col("flight_id").cast("long")
+    withBucketCol(batch, buckets).groupBy(col("flight_bucket"))
+      .agg(min(id), max(id)).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+  }
+
+  /** A bucket holding this many files is rewritten to one file by the
+    * next merge that touches it: each append adds a file, and every
+    * read of the bucket pays per file. The value comes from the
+    * steady-state curve in SCALE.md ("Keyed merge", `Dev merges`): a
+    * full read of a 64-bucket table grew by about 0.05 s for each file
+    * added per bucket, and a compaction merge cost about 0.8–2.3 s
+    * more than an append. With one full read per merge, the sum of the
+    * amortized compaction and the extra read time is least for a cap
+    * between about 6 and 10; a table read more often wants a lower cap.
+    */
+  private[graft] val MaxFilesPerBucket = 8
+
+  /** Which touched buckets a merge rewrites and which it appends to.
+    * `touched` is sorted; `colliding` is the subset to rewrite.
+    */
+  private[graft] final case class MergePlan(touched: Seq[Int],
+      colliding: Set[Int]) {
+    def appended: Seq[Int] = touched.filterNot(colliding)
+  }
+
+  private[graft] def planMerge(fs: FileSystem, path: String,
+      ranges: Map[Int, (Long, Long)]): MergePlan =
+    MergePlan(ranges.keys.toSeq.sorted, collidingBuckets(fs, path, ranges))
+
+  private def isPartFile(st: FileStatus): Boolean =
+    st.isFile && st.getPath.getName.startsWith("part-")
+
+  /** The touched buckets the batch may share a key with: a live
+    * `part-` file's flight_id range overlaps the batch's range for
+    * that bucket, or a file has no usable range, or the bucket already
+    * holds [[MaxFilesPerBucket]] files. The footers are read on the
+    * driver, only for touched buckets, with the read options built once
+    * per merge: opening each file with options rebuilt from the Hadoop
+    * conf (`HadoopInputFile.fromPath`) cost about 10 ms a file, against
+    * 0.3 ms with shared options (64 footers, 4-core VM). The listings
+    * and opens run one after another: with 7 files in each of 64
+    * buckets (448 footers) they took 0.13–0.23 s on local disk. On an
+    * object store each open is a remote round trip, so there they
+    * would need to run in parallel.
+    */
+  private def collidingBuckets(fs: FileSystem, path: String,
+      ranges: Map[Int, (Long, Long)]): Set[Int] = {
+    val conf = fs.getConf
+    val options = HadoopReadOptions.builder(conf).build()
+    val live = fs.listStatus(new Path(path)).filter(_.isDirectory)
+      .map(_.getPath.getName).toSet
+    ranges.filter { case (b, (lo, hi)) =>
+      live(bucketDir(b)) && {
+        val files = fs.listStatus(new Path(path, bucketDir(b)))
+          .filter(isPartFile)
+        files.length >= MaxFilesPerBucket ||
+        files.exists(f => footerIdRange(f, conf, options)
+          .forall { case (fLo, fHi) => fLo <= hi && lo <= fHi })
+      }
+    }.keySet
+  }
+
+  /** The [min, max] flight_id over a parquet file's row groups, from
+    * its footer statistics; None when any row group lacks a usable
+    * range (no statistics, only nulls, not an integer) or the file has
+    * no row groups.
+    */
+  private def footerIdRange(st: FileStatus, conf: Configuration,
+      options: ParquetReadOptions): Option[(Long, Long)] = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromStatus(st, conf), options)
+    val perGroup =
+      try reader.getFooter.getBlocks.asScala.toSeq.map { block =>
+        block.getColumns.asScala
+          .find(_.getPath.toDotString == "flight_id")
+          .map(_.getStatistics)
+          .filter(s => s != null && s.hasNonNullValue)
+          .flatMap(s => (s.genericGetMin, s.genericGetMax) match {
+            case (lo: java.lang.Number, hi: java.lang.Number) =>
+              Some((lo.longValue, hi.longValue))
+            case _ => None
+          })
+      } finally reader.close()
+    if (perGroup.isEmpty || perGroup.exists(_.isEmpty)) None
+    else Some((perGroup.flatten.map(_._1).min, perGroup.flatten.map(_._2).max))
+  }
 
   /** Hash-partitions rows on `flight_bucket` into
     * min(`touched`, defaultParallelism) tasks for a partitioned write.
@@ -308,14 +439,19 @@ object Sinks {
   /** Read the table with the marker schema when present (one tiny
     * file instead of every footer); legacy tables without a marker
     * fall back to a footer merge, which the next merge upgrades.
+    * Non-empty `dirs` narrows the read to those bucket dirs of the
+    * table, keeping `flight_bucket` as a partition column.
     */
   private def readTableSchemaAware(
       spark: org.apache.spark.sql.SparkSession, fs: FileSystem,
-      path: String): DataFrame =
-    readSchemaMarker(fs, path) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None => spark.read.option("mergeSchema", "true").parquet(path)
+      path: String, dirs: Seq[String] = Nil): DataFrame = {
+    val reader = readSchemaMarker(fs, path) match {
+      case Some(schema) => spark.read.schema(schema)
+      case None => spark.read.option("mergeSchema", "true")
     }
+    if (dirs.isEmpty) reader.parquet(path)
+    else reader.option("basePath", path).parquet(dirs: _*)
+  }
 
   private def writeBucketsMarker(fs: FileSystem, path: String,
       buckets: Int): Unit = {
@@ -366,72 +502,93 @@ object Sinks {
   private def backupPath(path: String) = new Path(path + ".__backup")
   private def bucketDir(b: Int) = s"flight_bucket=$b"
 
-  /** Phase 1 of the merge commit: compute survivors ∪ batch for the
-    * touched buckets and write them to the staging sibling dir. The
-    * live table is only READ here — staging failure leaves it exactly
-    * as it was. Returns the touched bucket ids (at most `buckets`
-    * small ints on the driver).
+  /** Phase 1 of the merge commit: write every touched bucket's new
+    * content to the staging sibling dir — survivors ∪ batch for the
+    * colliding buckets, the batch's rows alone for the appended ones.
+    * The live table is only READ here — staging failure leaves it
+    * exactly as it was. Returns the plan the promote follows.
     */
   private[sinks] def stageMerge(batch: DataFrame, path: String,
-      buckets: Int): Seq[Int] = {
-    val touched = touchedBuckets(batch, buckets)
-    stageMerge(batch, path, buckets, touched)
-    touched
+      buckets: Int): MergePlan = {
+    val fs = new Path(path)
+      .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    val plan = planMerge(fs, path, batchRanges(batch, buckets))
+    stageMerge(batch, path, buckets, plan)
+    plan
   }
 
   private def stageMerge(batch: DataFrame, path: String, buckets: Int,
-      touched: Seq[Int]): Unit = {
+      plan: MergePlan): Unit = {
     val spark = batch.sparkSession
     val newRows = withBucketCol(batch, buckets)
-    // schema-aware read: after a previous ADDITIVE evolution,
-    // untouched buckets still carry the old footer — a single-footer
-    // read would make the new column invisible for exactly those
-    // buckets. The marker (written ahead of the widening merge)
-    // provides the authoritative schema without a footer sweep; the
-    // additive-only guard lives in [[mergeApproachesTable]].
-    val fs = new Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val existing = readTableSchemaAware(spark, fs, path)
-      .filter(col("flight_bucket").isin(touched: _*))
-      .withColumn("flight_bucket", col("flight_bucket").cast("int"))
-    val survivors = existing.join(
-      broadcast(batch.select(col("flight_id"), col("approach_id")).distinct()),
-      Seq("flight_id", "approach_id"), "left_anti")
-    survivors.unionByName(newRows, allowMissingColumns = true)
-      .transform(byBucket(touched.size))
+    val staged = if (plan.colliding.isEmpty) newRows else {
+      // schema-aware read: after a previous ADDITIVE evolution, older
+      // files still carry the old footer — a single-footer read would
+      // make the new column invisible for exactly those files. The
+      // marker (written ahead of the widening merge) provides the
+      // authoritative schema without a footer sweep; the additive-only
+      // guard lives in [[mergeApproachesTable]]. Only the colliding
+      // bucket dirs are read, so up to Spark's parallel-discovery
+      // threshold (32 paths) they are listed on the driver.
+      val fs = new Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val existing = readTableSchemaAware(spark, fs, path,
+        plan.colliding.toSeq.sorted.map(b => new Path(path, bucketDir(b)).toString))
+        .withColumn("flight_bucket", col("flight_bucket").cast("int"))
+      val survivors = existing.join(
+        broadcast(batch.select(col("flight_id"), col("approach_id")).distinct()),
+        Seq("flight_id", "approach_id"), "left_anti")
+      survivors.unionByName(newRows, allowMissingColumns = true)
+    }
+    staged
+      .transform(byBucket(plan.touched.size))
       .write.mode(SaveMode.Overwrite)
       .partitionBy("flight_bucket").parquet(stagingPath(path).toString)
   }
 
-  /** Phase 2 of the merge commit: swap the staged bucket dirs into the
-    * live table via atomic renames. Old bucket versions are PARKED in
-    * the backup dir (never deleted before the swap completes); the
-    * backup delete at the end is the commit point. Interrupted at any
-    * rename, [[recoverInterruptedMerge]] restores every parked bucket
-    * the live table is missing — each bucket is always wholly old or
-    * wholly new.
+  /** Phase 2 of the merge commit: move the staged buckets into the
+    * live table via atomic renames.
+    *   - An appended bucket takes one rename: its staged file into the
+    *     live bucket dir, or the whole staged dir when the bucket is
+    *     new.
+    *   - A colliding bucket is swapped: the old version is PARKED in
+    *     the backup dir (never deleted before the swap completes) and
+    *     the staged dir renamed in; the backup delete at the end is
+    *     the commit point. Interrupted at any rename,
+    *     [[recoverInterruptedMerge]] restores every parked bucket the
+    *     live table is missing.
+    * Each bucket is always wholly old or wholly new.
     */
   private[sinks] def promoteStaged(fs: FileSystem, path: String,
-      touched: Seq[Int]): Unit = {
+      plan: MergePlan): Unit = {
     val staging = stagingPath(path)
     val backup = backupPath(path)
-    // validate BEFORE parking anything: a missing staged bucket must
+    // validate BEFORE renaming anything: a missing staged bucket must
     // abort while the live table is still fully intact
-    touched.foreach { b =>
+    plan.touched.foreach { b =>
       require(fs.exists(new Path(staging, bucketDir(b))),
         s"staged bucket $b missing under $staging — aborting promote")
     }
-    fs.mkdirs(backup)
-    touched.foreach { b =>
-      val live = new Path(path, bucketDir(b))
-      if (fs.exists(live)) checkedRename(fs, live, new Path(backup, bucketDir(b)))
+    plan.appended.foreach { b =>
+      val (staged, live) = (new Path(staging, bucketDir(b)), new Path(path, bucketDir(b)))
+      if (!fs.exists(live)) checkedRename(fs, staged, live)
+      else fs.listStatus(staged).filter(isPartFile).foreach { f =>
+        checkedRename(fs, f.getPath, new Path(live, f.getPath.getName))
+      }
     }
-    touched.foreach { b =>
-      checkedRename(fs, new Path(staging, bucketDir(b)),
-        new Path(path, bucketDir(b)))
+    if (plan.colliding.nonEmpty) {
+      val colliding = plan.touched.filter(plan.colliding)
+      fs.mkdirs(backup)
+      colliding.foreach { b =>
+        checkedRename(fs, new Path(path, bucketDir(b)), new Path(backup, bucketDir(b)))
+      }
+      colliding.foreach { b =>
+        checkedRename(fs, new Path(staging, bucketDir(b)),
+          new Path(path, bucketDir(b)))
+      }
+      // the commit point: after this, recovery keeps the new versions
+      fs.delete(backup, true)
     }
-    // the commit point: after this, recovery keeps the new versions
-    fs.delete(backup, true)
     fs.delete(staging, true)
   }
 

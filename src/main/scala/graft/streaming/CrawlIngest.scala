@@ -10,7 +10,7 @@ import graft.sources.Jsonl
 import graft.text.{Html, Urls}
 
 /** Streaming curation with the CRAWL front — q158's chain as the
-  * drop-folder service (survey r16 candidate #1): shards carry RAW
+  * drop-folder service: shards carry RAW
   * pages `{doc_id, url, html}`, and each micro-batch runs
   * HTML extract (comments/CDATA/entities/quoted-attrs — the hardened
   * q142 pipeline) -> thin gate -> hardened host + suffix blocklist
@@ -40,8 +40,8 @@ import graft.text.{Html, Urls}
   * literal probed per row (Urls.blockedByHostSuffix), and a
   * corpus-scale blocklist TABLE gates via
   * [[graft.text.Urls.blockedKeysByTable]]'s broadcast equi-join on
-  * the exploded suffix chain (the `blocklistTable` parameter — r16
-  * verdict #3, oracled as q164); everything wide is curateAndMerge's
+  * the exploded suffix chain (the `blocklistTable` parameter,
+  * oracled as q164); everything wide is curateAndMerge's
   * documented machinery.
   */
 object CrawlIngest {
@@ -55,7 +55,7 @@ object CrawlIngest {
   private val Corrupt = "_corrupt_record"
   private val parseSchema = crawlSchema.add(Corrupt, StringType)
 
-  /** `blocklistTable` is the CORPUS-SCALE gate (r16 verdict #3): a
+  /** `blocklistTable` is the CORPUS-SCALE gate: a
     * (entry) table — public-suffix-backed deny lists, freehoster
     * registries — matched by [[Urls.blockedKeysByTable]]'s exploded
     * suffix-chain broadcast equi-join instead of riding the plan as
@@ -114,7 +114,7 @@ object CrawlIngest {
     * recorded `domain` stays the last-two-label DISPLAY heuristic,
     * the gate key is the host itself), optional table gate, thin
     * gate, gated-doc recording, within-batch doc_id dedupe, then
-    * `Ingest.curateAndMerge`. Factored out (r17) so the JSONL crawl
+    * `Ingest.curateAndMerge`. Factored out so the JSONL crawl
     * front and the WARC-shard front ([[ShardIngest
     * .warcCurationIngest]]) share one definition — the service and
     * the container boundary cannot drift.

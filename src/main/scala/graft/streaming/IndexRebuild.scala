@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Release-time index REBUILD — the loop-closing operator between
-  * the streaming admissions and the batch releases (survey r16
-  * candidate #3): LineDedupStream and NearDupStream accrue one small
+  * the streaming admissions and the batch releases:
+  * LineDedupStream and NearDupStream accrue one small
   * `batch=<id>` growth shard per micro-batch, and a release build
   * compacts base ∪ growth into the NEXT release's single artifact so
   * the per-batch shard list never grows unboundedly.

@@ -184,8 +184,8 @@ object Ingest {
       // Lost-cache safety: if evicted/lost `hits` partitions are
       // recomputed, the lineage re-scans the table — which is
       // SAFE here because the merge protocol evaluates its input
-      // (one touched-bucket collect that fills the merge's cache,
-      // then the staged write reading it; a recompute of an evicted
+      // (one per-bucket id-range collect that fills the merge's
+      // cache, then the staged write reading it; a recompute of an evicted
       // cached partition included) strictly BEFORE the first
       // promote rename: every possible recompute observes the
       // stable pre-merge table, the same one the original scan

@@ -8,8 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.queries.MultimodalQueries.limbKeysOf
 
 /** Streaming perceptual near-dup admission for IMAGES and AUDIO —
-  * the q140/q155 fingerprints' streaming twin (the r14 verdict's
-  * item #5): NearDupStream covers text MinHash and PrefixDedupStream
+  * the q140/q155 fingerprints' streaming twin: NearDupStream covers text MinHash and PrefixDedupStream
   * exact text, but a crawl's media arrivals need the same
   * admit-against-release-time-index service. Each micro-batch's
   * payloads decode ON THE EXECUTORS to the 64-bit fingerprint

@@ -4,8 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One-command corpus RELEASE build — the orchestration over
-  * [[IndexRebuild]]'s per-artifact rebuilds (survey r17 candidate #4,
-  * delivered r16): a release compacts every admission artifact the
+  * [[IndexRebuild]]'s per-artifact rebuilds: a release compacts every admission artifact the
   * standing services consume —
   *
   *   - the LINE index (LineDedupStream: base ∪ growth shards,
@@ -58,8 +57,8 @@ object ReleaseBuild {
 
   /** JSON string escaping for the manifest's path values (keys are
     * fixed safe literals). Hand-rolled JSON without this corrupts on
-    * roots containing '"' or backslashes (Windows paths) — r16
-    * advice; the 6-field manifest doesn't warrant a parser dep.
+    * roots containing '"' or backslashes (Windows paths); the
+    * 6-field manifest doesn't warrant a parser dep.
     */
   private[streaming] def jsonEscape(s: String): String = {
     val sb = new StringBuilder

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType,
 import graft.sinks.Sinks
 
 /** Streaming WARC/TFRecord drop-folder ingest — `Ingest`'s
-  * exactly-once protocol composed with the q153/q154 container walks
-  * (the r14 verdict's item #3): crawl/training shards land as FILES
+  * exactly-once protocol composed with the q153/q154 container walks:
+  * crawl/training shards land as FILES
   * in a directory, each micro-batch walks the new shards' bytes on
   * the executors, and the decoded records upsert into a bucketed
   * keyed table through the same crash-atomic merge the JSONL ingest
@@ -215,7 +215,7 @@ object ShardIngest {
   final case class WarcPage(shard: String, member: Long,
       reason: String, doc_id: Long, url: String, html: String)
 
-  /** WARC-shard CURATION ingest (r17) — the container boundary driven
+  /** WARC-shard CURATION ingest — the container boundary driven
     * INTO the curation chain, closing the gap between "the walk is
     * proven" (q153/q163 batch oracles; gzipShardIngest lands digests)
     * and "a pipeline can actually run from shards": crawl archives

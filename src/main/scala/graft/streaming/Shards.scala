@@ -35,7 +35,7 @@ private[streaming] object Shards {
   }
 
   /** Refuse a growth dir carrying shards from batches LATER than the
-    * one being processed (r17, found by the release-cycle rehearsal):
+    * one being processed (found by the release-cycle rehearsal):
     * under one checkpoint lineage that state is impossible — shards
     * land in batch order, and a replayed batch N implies no batch > N
     * ever committed — so a later shard means the stream was restarted

@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   *      short and link-dense; body text is long and link-sparse);
   *   6. the main content is the kept blocks joined in document order.
   *
-  * Real-crawl hardening (r15, closing the r14 verdict's top gap —
-  * the previous revision required callers to pre-sanitize to ASCII
-  * with no entities/comments):
+  * Real-crawl hardening (callers need not pre-sanitize to ASCII or
+  * strip entities/comments):
   *   - tag matching is QUOTED-ATTRIBUTE-SAFE: `<div title="a > b">`
   *     is one tag (the attribute alternation `[^"'>]|"[^"]*"|'[^']*'`
   *     crosses `>` inside quotes) — the naive `[^>]*` split such tags

@@ -231,7 +231,7 @@ object TextOps {
     * [[graft.functions.GraftFunctions.register]].
     */
   def withSimHash64(df: DataFrame, textCol: Column, out: String): DataFrame =
-    // native one-pass expression (r8): the staged composed form paid
+    // native one-pass expression: a staged composed form pays
     // 64 interpreted `aggregate` HOF passes per row over four
     // materialized hash arrays (the q64 CodegenFallback disease) —
     // measured 3.4 s -> sub-second at sf0.1. Value parity with the
@@ -313,11 +313,12 @@ object TextOps {
   def shinglePairCounts(docs: DataFrame,
       shingleN: Int = 5, maxDf: Long = 1000000L): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    // r17 optimization (guide §2.4 "remove shuffles outright"): the
-    // previous shape was an inverted-index SELF-JOIN — repartition the
-    // (doc_id, 250-hash array) table as a sibling-branch barrier, a
-    // df aggregate for the stop-shingle cap, a join to apply the cap,
-    // then pruned ⋈ pruned on the shingle — 4 exchanges, with the
+    // one aggregate instead of a self-join (guide §2.4 "remove
+    // shuffles outright"): an inverted-index SELF-JOIN would
+    // repartition the (doc_id, 250-hash array) table as a
+    // sibling-branch barrier, then run a df aggregate for the
+    // stop-shingle cap, a join to apply the cap, and pruned ⋈ pruned
+    // on the shingle — 4 exchanges, with the
     // heavy shingle arrays riding the barrier exchange. But everything
     // downstream of the explode is PER-SHINGLE work, so one grouped
     // aggregate does it all: group the exploded index by shingle,
@@ -327,7 +328,7 @@ object TextOps {
     // group's C(k,2) ordered pairs directly. 2 exchanges total — the
     // (s, doc_id, n_sh) index by shingle and the pair-count aggregate
     // — the digest pass runs exactly once by construction (single
-    // consumer, so the old barrier is moot), and no join remains.
+    // consumer, so no barrier is needed), and no join remains.
     // Measured at sf0.1 (best-of-passes): q162 8.64 s -> 4.93 s,
     // q117 3.69 -> 1.99, q47 3.73 -> 2.39, q124 3.57 -> 2.31,
     // q112 1.76 -> 1.16, q158 6.85 -> 5.18, q103 5.12 -> 4.03 —
@@ -335,8 +336,8 @@ object TextOps {
     // Pair multiset, counts, and arithmetic are unchanged: the
     // brute-force DuckDB oracles replay every consumer bit-exact.
     //
-    // r18 memory hardening (guide §5, r17-verdict items 1+2): the df
-    // cap must bound MEMORY, not just output.
+    // memory hardening (guide §5): the df cap must bound MEMORY, not
+    // just output.
     //   1. member collection is collect_members_capped — a capped
     //      TypedImperativeAggregate that stops accumulating (and drops
     //      its buffer) the moment a group exceeds maxDf, so a
@@ -642,10 +643,10 @@ object TextOps {
           col("doc_id") * LineKeyPosBound + col("pos")))
 
   def lineDedup(docs: DataFrame): DataFrame = {
-    // r17 optimization (guide §2.4): the keeper was a min aggregate
+    // one exchange (guide §2.4): a keeper as a min aggregate
     // JOINED back against a second scan of the line table — two
     // shuffles of the exploded lines plus the join (and the narrow
-    // line pipeline re-ran once per sibling branch). min_by carries
+    // line pipeline re-runs once per sibling branch). min_by carries
     // the keeper's own (doc_id, pos) through the SAME map-side-
     // combined aggregate, so one exchange replaces both and the join
     // disappears. rank_key is unique per line occurrence (packed
@@ -700,7 +701,7 @@ object TextOps {
     */
   private[graft] def lineAdmitKept(batch: DataFrame,
       baseLineIndex: DataFrame): DataFrame = {
-    // min_by keeper — same one-exchange shape as [[lineDedup]] (r17);
+    // min_by keeper — same one-exchange shape as [[lineDedup]];
     // kept set identical to the min+join-back form
     val ranked = rankedLines(batch)
     val kept0 = ranked.groupBy(col("lh"))
@@ -711,8 +712,7 @@ object TextOps {
     // ONE estimator job, shared with matchedBaseDigests' transport
     // decision via knownDeltaCount (its internal estimator would
     // recompute kept0's digest+keeper lineage for the same number).
-    // r18 (r17-verdict item 5): the estimate runs over the RANKED
-    // lines, not kept0 — HyperLogLog++ registers depend only on the
+    // The estimate runs over the RANKED lines, not kept0 — HyperLogLog++ registers depend only on the
     // distinct value set, and kept0 has exactly one row per distinct
     // lh, so the estimate is bit-identical while the estimator job
     // drops the keeper exchange (map-side HLL partials, one tiny
@@ -847,9 +847,8 @@ object TextOps {
       .select(col("doc_id"),
         posexplode(call_function("shingle_hash60", t, lit(shingleN)))
           .as(Seq("pos", "h")))
-    // r18 (guide §5 + §2.4): occ collection is the capped aggregate
-    // (collect_members_capped, the pair core's r18 hardening) so a
-    // boilerplate 8-gram with 10^8 occurrences at 100 TB costs one
+    // occ collection is the capped aggregate (guide §5 + §2.4;
+    // collect_members_capped, as in the pair core) so a boilerplate 8-gram with 10^8 occurrences at 100 TB costs one
     // flag byte per task, not an unbounded reduce-side list before
     // the between(2, maxOcc) filter — null == over-cap == dropped,
     // the same group set. Field names rename via a no-op struct cast.
@@ -865,8 +864,7 @@ object TextOps {
       .filter(col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("ad"), col("a.pos").as("ap"),
         (col("a.pos") - col("b.pos")).as("diag"), col("b.doc_id").as("bd"))
-    // r18 (guide §2.4, r17-verdict item 3): islands come from ONE
-    // grouped aggregate over (ad, bd, diag) — sort_array of the
+    // islands come from ONE (guide §2.4) grouped aggregate over (ad, bd, diag) — sort_array of the
     // group's (distinct — one digest per (doc, pos)) positions, then
     // per-group array math finds the consecutive runs — replacing the
     // whole-partition Sort + Window(row_number) + second aggregate.
@@ -1028,7 +1026,7 @@ object TextOps {
     // pairs subplan's top aggregate exchange, so ReuseExchange
     // computes the expensive explode/join shuffle once and only the
     // cheap post-exchange agg+filter replays per reference — no
-    // persist barrier, no extra job (r5; measured equal-or-faster
+    // persist barrier, no extra job (measured equal-or-faster
     // than the persisted form and one action shorter). This is safe
     // ONLY because the pairs pipeline ends in an aggregate; a
     // narrow-plan input would race its siblings and recompute (the
@@ -1046,13 +1044,13 @@ object TextOps {
     //      both destroyed the partitioning info and referenced the
     //      labels plan twice per round, doubling the logical plan
     //      every iteration (exponential analyze/optimize cost, the
-    //      dominant cost of the r3 form at shallow graphs). With one
-    //      reference per round the plan grows linearly; deployments
+    //      dominant cost of a per-round join form at shallow
+    //      graphs). With one reference per round the plan grows linearly; deployments
     //      on deep graphs should additionally checkpoint labels every
     //      ~10 rounds to re-truncate lineage.
     val nodes = edges.select(col("id_a").as("id"))
       .union(edges.select(col("id_b").as("id"))).distinct()
-    // localCheckpoint, not persist (r10): persist caches the DATA but
+    // localCheckpoint, not persist: persist caches the DATA but
     // every round's hop/doubling plan still carries bidir's FULL
     // logical lineage (the whole pairs pipeline), and re-analyzing +
     // re-planning that tree per round cost ~2 s/round at sf0.1 — 10x
@@ -1067,7 +1065,7 @@ object TextOps {
       .union(nodes.select(col("id").as("id_a"), col("id").as("id_b")))
       .repartition(col("id_a"))
       .localCheckpoint()
-    // Degree-aware seed (r18, r17-verdict item 4): label = min over
+    // Degree-aware seed: label = min over
     // self ∪ neighbors, computed directly on bidir with ONE aggregate
     // that reuses bidir's id_a partitioning — no join, no exchange.
     // This is exactly what round 1's hop over identity labels would
@@ -1103,7 +1101,7 @@ object TextOps {
     // round's plan twice, so a plan-based loop would double its
     // logical plan EVERY round (exponential analyze/AQE-explain cost
     // by round ~10 — exactly the blow-up the self-loop trick removed
-    // from the r3 form); the RDD wrap truncates lineage to O(1) plan
+    // from the per-round join form); the RDD wrap truncates lineage to O(1) plan
     // nodes per round at the cost of one narrow (id, label) exchange
     // re-keying the labels side of the hop join
     var labelsRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null

@@ -26,7 +26,7 @@ import graft.streaming.FunnelStream.FEvent
   * genuinely crossed a process boundary. Scenarios 3-6 extend the
   * gate to the foreachBatch admission/ingest services (media
   * admission, gzip shard ingest, incremental line dedup with
-  * admit-and-grow, crawl-HTML ingest) — the surface where r15's
+  * admit-and-grow, crawl-HTML ingest) — the surface where a
   * local-cluster run caught a REAL session-clone registry bug that
   * local[*] masks.
   *
@@ -170,7 +170,7 @@ object ClusterStream {
       } finally q.stop()
     }
 
-    // ---- scenario 3 (r15): perceptual image admission — the decode
+    // ---- scenario 3: perceptual image admission — the decode
     // lambda (PGM -> dHash limbs) and the broadcast limb probe must
     // survive executor serde; verdicts checked against the
     // driver-side brute-force limb-collision fold ----
@@ -215,7 +215,7 @@ object ClusterStream {
       } finally { q.stop(); baseIndex.unpersist() }
     }
 
-    // ---- scenario 4 (r15): gzip shard ingest — the byte walk runs
+    // ---- scenario 4: gzip shard ingest — the byte walk runs
     // executor-side and the crash-atomic merge's staged writes cross
     // processes; table checked against the direct walks ----
     locally {
@@ -251,7 +251,7 @@ object ClusterStream {
         s"rows=${got.size} master=$master")
     }
 
-    // ---- scenario 5 (r16): incremental line dedup with admit-and-
+    // ---- scenario 5: incremental line dedup with admit-and-
     // grow — the base-index broadcast probe, per-batch growth-shard
     // writes, and the keeper aggregate all cross processes; stats
     // checked against the batch twin fed the same index state ----
@@ -299,10 +299,10 @@ object ClusterStream {
       index.unpersist()
     }
 
-    // ---- scenario 6 (r16): crawl-HTML ingest — the q142 extraction
+    // ---- scenario 6: crawl-HTML ingest — the q142 extraction
     // Columns, the hardened host gate, and curateAndMerge's staged
     // bucket merge (plus its foreachBatch-clone function registration,
-    // the exact bug class scenarios 3/4 caught in r15) run under a
+    // the exact bug class scenarios 3/4 caught) run under a
     // real multi-JVM master ----
     locally {
       import graft.streaming.CrawlIngest
@@ -350,11 +350,11 @@ object ClusterStream {
         s"admitted=${admitted.size} master=$master")
     }
 
-    // ---- scenario 7 (r17): the FULL release cycle — streams up,
+    // ---- scenario 7: the FULL release cycle — streams up,
     // batch A, quiesce, ReleaseBuild into a versioned root, restart
     // every stream from the MANIFEST's paths with fresh growth, old
     // growth deleted, batch B — under a real multi-JVM master (the
-    // gate class that caught r15's session-clone registry bug).
+    // gate class that caught the session-clone registry bug).
     // Batch-B verdicts must equal the single-corpus derivation for
     // all four artifacts (ReleaseCycleSpec's bar, now cross-process:
     // the manifest parquet reads, the growth-shard lists, and the
@@ -476,7 +476,7 @@ object ClusterStream {
         s"admittedA=${admittedA.size} master=$master")
     }
 
-    // ---- scenario 8 (r17): WARC-shard curation ingest — the
+    // ---- scenario 8: WARC-shard curation ingest — the
     // container boundary driven INTO the curation chain: the
     // bodies-carrying gzip walk + the shared Warc codec run in
     // executor flatMap closures, then curatePages' extraction

@@ -1,9 +1,15 @@
 package graft.tools
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
 
 import graft.{Bench, GraftSession, SparkEntry}
+import graft.approach.ApproachPipeline
+import graft.model.FlightSample
+import graft.sinks.Sinks
+import graft.sources.{Dims, FlightGen}
 
 /** Dev probes over the query registry, run in one session built
   * through [[GraftSession]]:
@@ -12,6 +18,8 @@ import graft.{Bench, GraftSession, SparkEntry}
   * runMain graft.tools.Dev time <q...>       3 timed runs per query
   * runMain graft.tools.Dev plan <sf> <q...>  formatted explain per query
   * runMain graft.tools.Dev shuffle [sf]      shuffle volume of every query
+  * runMain graft.tools.Dev merges <dir> [flights] [batches]
+  *                                           keyed-merge steady state
   * }}}
   *
   * Like [[Bench]], it reads the thread count from SPARK_GRAFT_CPUS and
@@ -80,14 +88,84 @@ object Dev {
     println(f"| TOTAL |  | $totW | ${totB / 1e6}%.2f |  |")
   }
 
+  /** The keyed merge's steady state, behind SCALE.md's "Keyed merge"
+    * curve. Writes the FlightGen-detected approaches of flights
+    * [0, `flights`) to a 64-bucket table under `dir` with one merge,
+    * then merges `batches` batches of 500 fresh flight ids, so the
+    * buckets fill up to [[Sinks.MaxFilesPerBucket]] files and compact.
+    * One line per merge: its seconds; the probe's two parts, timed
+    * apart before the merge (the batch-range job, and the driver's
+    * listing and footer reads); how many buckets it rewrote; the bytes
+    * it wrote; the most files a bucket holds after it; and the median
+    * of 5 full reads of the table through [[Sinks.readKeyedTable]]
+    * (every column hashed, listing included). Each batch is detected
+    * and cached before its timers.
+    */
+  def merges(spark: SparkSession, dir: String, flights: Long,
+      batches: Int): Unit = {
+    import spark.implicits._
+    val airports = Dims.syntheticAirports()
+    def detect(lo: Long, hi: Long) = ApproachPipeline.approachesTable(
+      ApproachPipeline.detectApproaches(
+        FlightGen.trace(spark.range(lo, hi).toDF("flight")).as[FlightSample],
+        airports))
+    val table = s"$dir/approaches-$flights"
+    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(table), true)
+    def parts(): Map[Path, Long] = {
+      val it = fs.listFiles(new Path(table), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filter(_.getPath.getName.startsWith("part-"))
+        .map(f => f.getPath -> f.getLen).toMap
+    }
+    def secs[T](f: => T): (T, Double) = {
+      val t0 = System.nanoTime(); val v = f
+      (v, (System.nanoTime() - t0) / 1e9)
+    }
+    def read(): Double = {
+      val times = (1 to 5).map { _ =>
+        secs {
+          val t = Sinks.readKeyedTable(spark, table, "flight_id", "approach_id")
+          t.agg(count(lit(1)),
+            max(xxhash64(t.columns.toIndexedSeq.map(col): _*))).collect()
+        }._2
+      }
+      times.sorted.apply(2)
+    }
+    Sinks.mergeApproachesTable(detect(0, flights), table)
+    println(f"MERGES flights=$flights cap=${Sinks.MaxFilesPerBucket} " +
+      f"table_kb=${parts().values.sum / 1e3}%.0f read_s=${read()}%.3f")
+    (0 until batches).foreach { i =>
+      val lo = flights + 500L * i
+      val batch = detect(lo, lo + 500).persist()
+      batch.count()
+      val (ranges, rangeS) = secs(Sinks.batchRanges(batch, 64))
+      val (plan, probeS) = secs(Sinks.planMerge(fs, table, ranges))
+      val before = parts()
+      val (_, mergeS) = secs(Sinks.mergeApproachesTable(batch, table))
+      batch.unpersist()
+      val after = parts()
+      val written = after.collect { case (p, n) if !before.get(p).contains(n) => n }.sum
+      val maxFiles = after.keys.groupBy(_.getParent).values.map(_.size).max
+      println(f"MERGE flights=$flights i=$i merge_s=$mergeS%.3f " +
+        f"range_job_s=$rangeS%.3f listing_footers_s=$probeS%.4f " +
+        s"rewritten=${plan.colliding.size}/${plan.touched.size} " +
+        f"written_kb=${written / 1e3}%.0f max_files=$maxFiles read_s=${read()}%.3f")
+    }
+    fs.delete(new Path(table), true)
+  }
+
   def main(args: Array[String]): Unit = {
     val run: SparkSession => Unit = args.toList match {
       case "time" :: names if names.nonEmpty => time(_, Bench.sfDir, names)
       case "plan" :: sf :: names if names.nonEmpty => plan(_, sf, names)
       case "shuffle" :: Nil => shuffle(_, Bench.sfDir)
       case "shuffle" :: sf :: Nil => shuffle(_, sf)
-      case _ => sys.error(
-        "usage: Dev time <q...> | plan <sf> <q...> | shuffle [sf]")
+      case "merges" :: dir :: rest if rest.size <= 2 =>
+        merges(_, dir, rest.headOption.fold(10000L)(_.toLong),
+          rest.lift(1).fold(16)(_.toInt))
+      case _ => sys.error("usage: Dev time <q...> | plan <sf> <q...> | " +
+        "shuffle [sf] | merges <dir> [flights] [batches]")
     }
     val cpus = Bench.cpus
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()

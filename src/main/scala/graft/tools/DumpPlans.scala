@@ -109,7 +109,7 @@ object DumpPlans {
       "q135_negatives_recall" -> "hard-negative recall audit (exact different-label baseline on the anchor sample vs the banded miner)",
       "q136_archive_explode" -> "archive-shard explode (real ZIP walk + per-entry inflate in narrow batches, output-only sort)",
       "q137_tar_samples" -> "WebDataset tar-shard explode (checksummed ustar walk, in-worker stem grouping, output-only sort)",
-      // ---- r13: full-registry coverage (the 51 previously absent) ----
+      // ---- the rest of the registry ----
       "q02_filter_project" -> "projection + pushed filter (scan-dominated plan, pruned ReadSchema)",
       "q06_semi_join" -> "left semi join (broadcast build side)",
       "q07_anti_join" -> "left anti join (work-list complement)",
@@ -163,7 +163,7 @@ object DumpPlans {
       "q88_domain_stats" -> "URL/domain extraction + per-domain stats (one domain-key agg)",
       "q138_jpeg_decode" -> "real JPEG decode via the JDK ImageIO reader (narrow batches, one reader handle per batch, output-only sort)",
       "q139_measured_salt_join" -> "measured salting: skew scout derives fan-out + hot set; hot-key-only salted join (decision rows oracle-checked)",
-      // ---- r14 ----
+      // ---- media near-dup, HTML extraction, container fronts ----
       "q140_image_neardup" -> "perceptual image near-dup (real decode -> dHash limbs, banded Hamming bucket join, never all-pairs)",
       "q141_image_neardup_audit" -> "image near-dup recall audit (fixed-size anchor panel broadcast against the corpus — linear exact side)",
       "q142_html_extract" -> "HTML boilerplate extraction (jusText-shaped block gate as pure Column regex combinators, map-only)",
@@ -182,10 +182,10 @@ object DumpPlans {
       "q155_audio_neardup" -> "perceptual audio near-dup (real decode -> energy-delta limbs, banded Hamming bucket join, never all-pairs)",
       "q156_audio_neardup_audit" -> "audio near-dup recall audit (fixed-size anchor panel broadcast against the corpus — linear exact side)",
       "q157_curation_v2" -> "composed curation v2 (broadcast URL blocklist -> q150 digest-keyed line dedup -> map-only signals; wide work = the line machinery only)",
-      // ---- r15 ----
+      // ---- composed curation, line admission ----
       "q158_curation_v3" -> "composed curation v3 (HTML extract front, persisted extracted frame for the 4 sibling stages, q150 line machinery + q47 pair/CC, cluster-keeper split)",
       "q159_line_admit" -> "incremental line admission (base index probed map-only under the broadcast cap, guarded merge fallback; shuffles scale with the delta, never the base)",
-      // ---- r16 ----
+      // ---- curation over the container fronts ----
       "q160_container_curation" -> "curation over the real container front (map-only zip walk on the executors, hardened host-suffix gate, q157-family stages over decoded members)",
       "q161_webdataset_curation" -> "curation over the WebDataset-tar front (checksummed ustar walk, stem-grouped samples, URL read from the decoded json member, same curation tail as q160)",
       "q163_warc_curation" -> "curation over the WARC-gzip front (q153's member walk carrying bodies, doc id + URL decoded from record bytes, FNAME bit observable, same curation tail as q160/q161)",

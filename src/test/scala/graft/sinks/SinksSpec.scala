@@ -514,6 +514,125 @@ class SinksSpec extends AnyFunSuite {
     assert(unstableByFlight(out) == Map(0L -> 9, 1L -> 9, 2L -> 9))
   }
 
+  /** Bucket dir name -> (part file name -> length) under `path`. */
+  private def partFiles(path: String): Map[String, Map[String, Long]] = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new Path(path)).filter(_.isDirectory)
+      .map(d => d.getPath.getName ->
+        fs.listStatus(d.getPath).filter(_.getPath.getName.startsWith("part-"))
+          .map(f => f.getPath.getName -> f.getLen).toMap)
+      .toMap
+  }
+
+  /** Every (flight_id, unstable) row, sorted: duplicates stay visible. */
+  private def rowsOf(path: String): Seq[(Long, Int)] =
+    spark.read.parquet(path).select("flight_id", "unstable").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toSeq.sorted
+
+  test("fresh-key merge appends one file per touched bucket and leaves every existing file as it was") {
+    val out = Files.createTempDirectory("append").toString + "/approaches"
+    Sinks.mergeApproachesTable(keyed(0L until 4L, 9), out, buckets = 8)
+    val before = partFiles(out)
+    // ids 100..105 land in buckets 4,5,6,7,0,1: two existing, four new
+    Sinks.mergeApproachesTable(keyed(100L until 106L, 1), out, buckets = 8)
+    val after = partFiles(out)
+    val touched = Set(0, 1, 4, 5, 6, 7).map(b => s"flight_bucket=$b")
+    assert(after.keySet == before.keySet ++ touched)
+    before.foreach { case (dir, files) =>
+      files.foreach { case (name, len) =>
+        assert(after(dir).get(name).contains(len), s"$dir/$name was rewritten")
+      }
+    }
+    after.foreach { case (dir, files) =>
+      val added = files.size - before.get(dir).map(_.size).getOrElse(0)
+      assert(added == (if (touched(dir)) 1 else 0),
+        s"$dir gained $added files: ${files.keys}")
+    }
+    assert(rowsOf(out) ==
+      (0L until 4L).map(_ -> 9) ++ (100L until 106L).map(_ -> 1))
+  }
+
+  test("append promote: EVERY crash point replays to the same converged table") {
+    import org.apache.hadoop.fs.Path
+    // buckets=4 over flights 0,1: the batch appends fresh flight 8 to
+    // bucket 0 and 13 to bucket 1 (one file rename each) and creates
+    // bucket 2 for flight 10 (one dir rename). Crash after each prefix
+    // of the renames, replay the merge, and expect one row per key.
+    val batch = keyed(Seq(8L, 13L, 10L), 1)
+    val expected = Seq(0L -> 9, 1L -> 9, 8L -> 1, 10L -> 1, 13L -> 1)
+    for (steps <- 0 to 3) {
+      val out = Files.createTempDirectory(s"appendcrash$steps").toString + "/t"
+      val fs = new Path(out)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Sinks.mergeApproachesTable(keyed(Seq(0L, 1L), 9), out, buckets = 4)
+      val plan = Sinks.stageMerge(batch, out, buckets = 4)
+      assert(plan.colliding.isEmpty && plan.appended == Seq(0, 1, 2))
+      val staging = new Path(out + ".__staging")
+      def appendFile(b: Int): Unit = {
+        val staged = fs.listStatus(new Path(staging, s"flight_bucket=$b"))
+          .map(_.getPath).filter(_.getName.startsWith("part-"))
+        assert(staged.length == 1)
+        assert(fs.rename(staged.head,
+          new Path(new Path(out, s"flight_bucket=$b"), staged.head.getName)))
+      }
+      val seq: Seq[() => Unit] = Seq(
+        () => appendFile(0),
+        () => appendFile(1),
+        () => assert(fs.rename(new Path(staging, "flight_bucket=2"),
+          new Path(out, "flight_bucket=2"))))
+      seq.take(steps).foreach(_.apply())
+      Sinks.mergeApproachesTable(batch, out, buckets = 4)
+      assert(rowsOf(out) == expected, s"crash after step $steps did not converge")
+      assert(!fs.exists(staging) && !fs.exists(new Path(out + ".__backup")),
+        s"crash after step $steps left recovery debris")
+    }
+  }
+
+  test("mixed batch: the colliding bucket is rewritten to one file, the others appended") {
+    val out = Files.createTempDirectory("mixed").toString + "/approaches"
+    Sinks.mergeApproachesTable(keyed(0L until 8L, 9), out, buckets = 4)
+    val before = partFiles(out)
+    // flight 4 already sits in bucket 0; 101..103 are fresh in 1..3
+    Sinks.mergeApproachesTable(keyed(Seq(4L, 101L, 102L, 103L), 1), out, buckets = 4)
+    val after = partFiles(out)
+    assert(after("flight_bucket=0").size == 1 &&
+      after("flight_bucket=0").keySet != before("flight_bucket=0").keySet,
+      s"bucket 0 was not rewritten to one file: ${after("flight_bucket=0")}")
+    (1 to 3).map(b => s"flight_bucket=$b").foreach { dir =>
+      assert(after(dir).size == 2 &&
+        before(dir).forall { case (n, len) => after(dir).get(n).contains(len) },
+        s"$dir was not appended to: ${before(dir)} -> ${after(dir)}")
+    }
+    assert(rowsOf(out) == ((0L until 8L).map(f => f -> (if (f == 4L) 1 else 9)) ++
+      Seq(101L -> 1, 102L -> 1, 103L -> 1)).sorted)
+  }
+
+  test("a batch inside a bucket's id range with no shared key takes the rewrite path") {
+    val out = Files.createTempDirectory("rangeonly").toString + "/approaches"
+    Sinks.mergeApproachesTable(keyed(Seq(0L, 4L), 9), out, buckets = 2)
+    // [2, 6] overlaps bucket 0's [0, 4] but shares no flight with it
+    Sinks.mergeApproachesTable(keyed(Seq(2L, 6L), 1), out, buckets = 2)
+    assert(partFiles(out)("flight_bucket=0").size == 1,
+      "an overlapping id range must rewrite the bucket, not append")
+    assert(rowsOf(out) == Seq(0L -> 9, 2L -> 1, 4L -> 9, 6L -> 1))
+  }
+
+  test("a bucket holding MaxFilesPerBucket files is compacted by the next merge") {
+    val out = Files.createTempDirectory("compact").toString + "/approaches"
+    // each merge brings fresh flights 10k (bucket 0) and 10k+1 (bucket 1)
+    def batch(k: Int) = keyed(Seq(10L * k, 10L * k + 1), k)
+    (0 until Sinks.MaxFilesPerBucket).foreach { k =>
+      Sinks.mergeApproachesTable(batch(k), out, buckets = 2)
+    }
+    assert(partFiles(out).values.forall(_.size == Sinks.MaxFilesPerBucket))
+    Sinks.mergeApproachesTable(batch(Sinks.MaxFilesPerBucket), out, buckets = 2)
+    assert(partFiles(out).values.forall(_.size == 1),
+      s"full buckets were not compacted: ${partFiles(out).map(_._2.size)}")
+    assert(rowsOf(out) == (0 to Sinks.MaxFilesPerBucket)
+      .flatMap(k => Seq(10L * k -> k, (10L * k + 1) -> k)))
+  }
+
   test("printApproaches: console sink renders without throwing (S8)") {
     import spark.implicits._
     Sinks.printApproaches(Seq((1L, "AP01")).toDF("flight_id", "airport_id"), 5)
