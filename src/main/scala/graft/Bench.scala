@@ -32,9 +32,8 @@ object Bench {
     spark.catalog.clearCache()
     // fixed name order: stable warm-up attribution across runs
     // toRdd, NOT count(): under count() Catalyst's rewrite prunes
-    // cardinality-neutral operators — projection-terminated queries
-    // are timed without their map work and EliminateSorts drops the
-    // final orderBy from under the counting aggregate. toRdd executes
+    // cardinality-neutral operators, so projection-terminated queries
+    // would be timed without their map work. toRdd executes
     // the plan exactly as declared, which is what a user's
     // write/collect pays. Cache teardown sits OUTSIDE the timed
     // window, matching ScaleBench, so a query that persists an
@@ -152,8 +151,10 @@ object Bench {
       .mkString("{", ",", "}")
     val ratioMedian = BenchPolicy.ratioMedian(ratios.map(_._2))
     val total = best.collect { case (_, v, true) => v }.sum
-    // "semantics" marks that totals time plans AS DECLARED (toRdd);
-    // count()-based totals are not comparable 1:1 (SCALE.md bridge).
+    // "semantics" marks that totals time plans AS DECLARED (toRdd) for
+    // queries that return row sets; count()-based totals and totals
+    // from before the trailing presentation sorts were dropped are not
+    // comparable 1:1 (SCALE.md bridges).
     // Key order matters: a reader that keeps only the tail of stdout
     // still gets the headline, because the two big per-query maps lead
     // and every headline scalar (total, failed, contended) trails. The
@@ -161,7 +162,7 @@ object Bench {
     // cpus-suffixed copy under target/ so runs at two core counts don't
     // clobber each other and no run overwrites a tracked capture.
     val window = BenchPolicy.window(expectApplicable, ratioMedian)
-    val line = s"""{"queries":$qs,"over_expect":$ratioJson,"failed":$failed,"contended":$contendedJson,"no_expect":$noExpect,"reruns":$reruns,"extra_passes":$extraPasses,"window":"$window","over_expect_median":${f"$ratioMedian%.2f"},"sf":"$sfDir","passes":$passes,"semantics":"as-declared(toRdd); r7-and-earlier used count() which pruned projection+sort work","metric":"total","unit":"sec","value":$total}"""
+    val line = s"""{"queries":$qs,"over_expect":$ratioJson,"failed":$failed,"contended":$contendedJson,"no_expect":$noExpect,"reruns":$reruns,"extra_passes":$extraPasses,"window":"$window","over_expect_median":${f"$ratioMedian%.2f"},"sf":"$sfDir","passes":$passes,"semantics":"as-declared(toRdd) over row-set queries, no presentation sort (SCALE.md contract bridge); r7-and-earlier used count() which pruned projection+sort work","metric":"total","unit":"sec","value":$total}"""
     try {
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_full.json"),

@@ -11,7 +11,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ApproachQueries.q20(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2.
+    *
+    * Output contract: a query returns a row set. Row order is part of
+    * the result only where the query itself consumes it — an
+    * `orderBy` under a `limit` (top-k), one that feeds `zipWithIndex`,
+    * `collect`, `head` or `first`, and every window or
+    * `sortWithinPartitions`. No query sorts only to present its
+    * result; a caller that wants an order applies `orderBy` itself.
+    * The oracle compare sorts both sides' rows before comparing.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.queries ++ ApproachQueries.queries ++ TextQueries.queries ++
       VectorQueries.queries ++ MultimodalQueries.queries

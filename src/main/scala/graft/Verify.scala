@@ -83,7 +83,7 @@ object Verify {
       def secs = (System.nanoTime() - t0) / 1e9
       val status =
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          fn(spark, sfDir).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           Status(name, secs, Right(parquetRows(spark, s"$outDir/$name")))
         } catch { case NonFatal(e) =>

@@ -37,8 +37,7 @@ case class DHashRow(media_id: Long, l0: Int, l1: Int, l2: Int, l3: Int)
   * `mapInPandas`): payloads stream through each partition in
   * fixed-size batches, one codec handle per batch, never a
   * driver-side collect and never a shuffle of the binary column (the
-  * operator is narrow; only the final oracle orderBy exchanges, and
-  * it carries the 7-column typed rows, not payloads).
+  * operator is narrow, so nothing exchanges).
   *
   * [[MultimodalOps]] parses headers with codegen'd Column
   * expressions — right for metadata probes. Pixel/sample decode can't

@@ -39,7 +39,7 @@ object ApproachQueries {
   // ---- q20: full 18-column approaches table, hash-checked against a
   //      closed-form oracle (plus goldens in ApproachDetectorSpec) ----
   def q20(spark: SparkSession, dir: String): DataFrame =
-    approaches(spark, dir).orderBy(col("flight_id"), col("approach_id"))
+    approaches(spark, dir)
 
   /** q20 oracle: every column is a closed-form function of the flight
     * id mods (flavor = f%3, violations = f%5/7/11/13, airport =
@@ -117,7 +117,6 @@ object ApproachQueries {
     approaches(spark, dir)
       .groupBy(col("landing_type"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("landing_type"))
 
   val q21Sql: String =
     """SELECT CASE CAST(user_id % 3 AS INT)
@@ -140,7 +139,6 @@ object ApproachQueries {
         col("f2_crosstrack").isNotNull.cast("int").as("has_f2"),
         col("a_ias").isNotNull.cast("int").as("has_a"),
         col("s_vsi").isNotNull.cast("int").as("has_s"))
-      .orderBy(col("flight_id"), col("approach_id"))
 
   val q22Sql: String =
     """SELECT user_id AS flight_id, 1 AS approach_id,
@@ -166,7 +164,6 @@ object ApproachQueries {
     flights.join(counts, Seq("flight_id"), "left")
       .select(col("flight_id"), col("approach_analysis"),
         coalesce(col("n_approaches"), lit(0L)).as("n_approaches"))
-      .orderBy(col("flight_id"))
   }
 
   val q23Sql: String =
@@ -187,7 +184,6 @@ object ApproachQueries {
       .agg(count(lit(1)).as("n_airports"),
         sum(size(col("runways"))).cast("long").as("n_runways"),
         max(col("alt")).cast("long").as("max_elev_ft"))
-      .orderBy(col("state"))
   }
 
   val q24Sql: String =
@@ -241,7 +237,6 @@ object ApproachQueries {
         col("s_vsi").isNotNull.cast("int").as("has_s"),
         col("f1_heading").isNotNull.cast("int").as("has_f1"),
         col("f2_crosstrack").isNotNull.cast("int").as("has_f2"))
-      .orderBy(col("flight_id"))
   }
 
   val q28Sql: String =
@@ -280,7 +275,6 @@ object ApproachQueries {
     spark.read.parquet(out)
       .select(col("flight_id"), col("approach_id"), col("airport_id"),
         col("landing_type"), col("unstable"))
-      .orderBy(col("flight_id"), col("approach_id"))
   }
 
   val q39Sql: String =
@@ -310,7 +304,7 @@ object ApproachQueries {
       .withColumn("longitude",
         when(col("flight") % 4 === 0, lit(null).cast("double"))
           .otherwise(col("longitude")))
-    ApproachPipeline.flightValidity(planted).orderBy(col("flight_id"))
+    ApproachPipeline.flightValidity(planted)
   }
 
   val q44Sql: String =

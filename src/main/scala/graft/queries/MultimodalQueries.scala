@@ -28,7 +28,6 @@ object MultimodalQueries {
       col("meta.body_bytes").as("body_bytes"),
       resizeMeta(col("meta"), 32).getField("width").as("resized_w"),
       resizeMeta(col("meta"), 32).getField("height").as("resized_h"))
-      .orderBy(col("media_id"))
   }
 
   val q50Sql: String =
@@ -63,11 +62,6 @@ object MultimodalQueries {
         col("col").getItem(1).as("f1"),
         col("col").getItem(2).as("f2"),
         col("col").getItem(3).as("f3"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"), col("frame_idx"))
   }
 
   val q51Sql: String = {
@@ -102,11 +96,6 @@ object MultimodalQueries {
     graft.multimodal.BatchedDecode
       .decodeBatched(mediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole decode stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"))
 
   val q59Sql: String = {
     // first 15 md5 hex digits of `text` as a BIGINT (shared Horner
@@ -138,12 +127,11 @@ object MultimodalQueries {
   //
   // 100 TB posture: identical to q59 — narrow decode, payloads never
   // shuffled, one codec handle per 64-payload batch, compact typed
-  // rows out; only the final oracle orderBy exchanges.
+  // rows out; nothing exchanges.
   def q129(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.BatchedDecode
       .decodeStats(codecMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      .orderBy(col("media_id"))
 
   val q129Sql: String = {
     // coalesce: NULL text is an EMPTY body on the Spark side (see
@@ -203,13 +191,11 @@ object MultimodalQueries {
   // planting, so the query replays identically at any SF or replica.
   //
   // 100 TB posture: identical to q59/q129 — narrow decode, payloads
-  // never shuffled, compact typed rows out; only the final oracle
-  // orderBy exchanges.
+  // never shuffled, compact typed rows out; nothing exchanges.
   def q130(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.BatchedDecode
       .decodeStats(pngMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      .orderBy(col("media_id"))
 
   val q130Sql: String =
     """WITH g AS (
@@ -253,16 +239,11 @@ object MultimodalQueries {
   //
   // 100 TB posture: identical to q129/q130 — narrow decode through
   // the one-handle-per-batch seam, payloads never shuffled, compact
-  // typed rows out; only the final oracle orderBy exchanges.
+  // typed rows out; nothing exchanges.
   def q133(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.BatchedDecode
       .decodeStats(bmpMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"))
 
   val q133Sql: String =
     """WITH g AS (
@@ -304,17 +285,11 @@ object MultimodalQueries {
   // 100 TB posture: identical to q129/q130/q133 — narrow decode
   // through the one-reader-handle-per-batch seam (the ImageIO reader
   // is reused across the batch's payloads and disposed at batch
-  // end), payloads never shuffled, compact typed rows out; only the
-  // final oracle orderBy exchanges.
+  // end), payloads never shuffled, compact typed rows out; nothing exchanges.
   def q138(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.BatchedDecode
       .decodeStats(jpegMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole decode stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"))
 
   val q138Sql: String =
     """WITH g AS (
@@ -356,14 +331,13 @@ object MultimodalQueries {
   // 100 TB posture: the BatchedDecode seam — archives stream through
   // partitions in 64-payload batches, one digest handle per batch,
   // one member's bytes in memory at a time, compact typed rows out;
-  // only the final oracle orderBy exchanges.
+  // nothing exchanges.
   def q136(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Archives
       .explodeZipStats(
         graft.multimodal.Archives.zipMediaFromDocuments(
           tbl(spark, dir, "documents")))
       .toDF()
-      .orderBy(col("media_id"), col("entry"))
 
   val q136Sql: String =
     """WITH g AS (
@@ -403,14 +377,13 @@ object MultimodalQueries {
   // never reads `text`.
   //
   // 100 TB posture: the BatchedDecode seam, one member's bytes in
-  // memory at a time; only the final oracle orderBy exchanges.
+  // memory at a time; nothing exchanges.
   def q137(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Archives
       .explodeTarSamples(
         graft.multimodal.Archives.tarMediaFromDocuments(
           tbl(spark, dir, "documents")))
       .toDF()
-      .orderBy(col("media_id"), col("entry"))
 
   val q137Sql: String =
     """WITH g AS (
@@ -461,16 +434,11 @@ object MultimodalQueries {
   //
   // 100 TB posture: identical to q129/q138 — narrow decode through
   // the one-handle-per-batch seam, payloads never shuffled, compact
-  // typed rows out; only the final oracle orderBy exchanges.
+  // typed rows out; nothing exchanges.
   def q144(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.BatchedDecode
       .decodeStats(audioMediaFromDocuments(tbl(spark, dir, "documents")))
       .toDF()
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"))
 
   val q144Sql: String =
     """WITH g AS (
@@ -550,7 +518,6 @@ object MultimodalQueries {
         hamming("a", "b").cast("long").as("hamming"))
       .filter(col("hamming") <= MaxHam)
       .distinct() // one row per pair, however many limbs collided
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Shared oracle CTE chain for the dHash pipeline: planted cell
@@ -657,7 +624,6 @@ object MultimodalQueries {
       .select(col("anchor_id"), col("n_exact"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
       .withColumn("recall_e6", expr("n_hit * 1000000 div n_exact"))
-      .orderBy(col("anchor_id"))
   }
 
   val q141Sql: String = {
@@ -701,7 +667,7 @@ object MultimodalQueries {
   //
   // 100 TB posture: identical to q129/q144 — map-side decode+DSP
   // (O(n·maxLag) per payload), payloads never shuffled, 6 compact
-  // columns out; only the final oracle orderBy exchanges.
+  // columns out; nothing exchanges.
   def q146(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.multimodal.{Acf, Codecs}
@@ -721,11 +687,6 @@ object MultimodalQueries {
       .toDF()
       .withColumn("nacf_e4",
         round(lit(10000.0) * col("r_best") / col("energy")).cast("long"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole decode stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"))
   }
 
   val q146Sql: String =
@@ -771,8 +732,7 @@ object MultimodalQueries {
   // for the gate to pass.
   //
   // 100 TB posture: identical to q129/q138/q144 — narrow decode,
-  // payloads never shuffled, compact typed rows out; only the final
-  // oracle orderBy exchanges.
+  // payloads never shuffled, compact typed rows out; nothing exchanges.
   def q148(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val media = tbl(spark, dir, "documents").select(col("doc_id").cast("long")).as[Long]
@@ -785,11 +745,6 @@ object MultimodalQueries {
       .toDF("media_id", "payload")
     graft.multimodal.BatchedDecode.decodeStats(media)
       .toDF()
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("media_id"))
   }
 
   val q148Sql: String =
@@ -826,7 +781,7 @@ object MultimodalQueries {
   // duration_ms = dur·1000 div timescale).
   //
   // 100 TB posture: map-only probe, payloads never shuffled, 10
-  // compact columns out; only the final oracle orderBy exchanges.
+  // compact columns out; nothing exchanges.
   def q151(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.multimodal.Mp4
@@ -845,7 +800,6 @@ object MultimodalQueries {
         Mp4.probe(id, payload)
       }
       .toDF()
-      .orderBy(col("media_id"))
   }
 
   val q151Sql: String =
@@ -889,7 +843,7 @@ object MultimodalQueries {
   // recomputed closed-form by the DuckDB oracle.
   //
   // 100 TB posture: map-only probe, payloads never shuffled, compact
-  // typed rows out; only the final oracle orderBy exchanges.
+  // typed rows out; nothing exchanges.
   def q152(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.multimodal.Tiff
@@ -905,7 +859,6 @@ object MultimodalQueries {
         Tiff.probe(id, payload) // a failure drops the row -> red gate
       }
       .toDF()
-      .orderBy(col("media_id"))
   }
 
   val q152Sql: String =
@@ -934,8 +887,7 @@ object MultimodalQueries {
   // hash-fail. A shard failing any checksum quarantines WHOLE.
   //
   // 100 TB posture: identical to q136/q137 — narrow member walk,
-  // payloads never shuffled, compact typed rows out; only the final
-  // oracle orderBy exchanges.
+  // payloads never shuffled, compact typed rows out; nothing exchanges.
   def q153(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.multimodal.GzipMembers
@@ -952,7 +904,6 @@ object MultimodalQueries {
           .getOrElse(Vector.empty) // drop-on-failure -> red gate
       }
       .toDF()
-      .orderBy(col("media_id"), col("member"))
   }
 
   val q153Sql: String =
@@ -991,8 +942,7 @@ object MultimodalQueries {
   // mismatch, not silence.
   //
   // 100 TB posture: identical to q136/q137/q153 — narrow record
-  // walk, payloads never shuffled, compact typed rows out; only the
-  // final oracle orderBy exchanges.
+  // walk, payloads never shuffled, compact typed rows out; nothing exchanges.
   def q154(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.multimodal.Tfrecord
@@ -1007,7 +957,6 @@ object MultimodalQueries {
           .getOrElse(Vector.empty) // drop-on-failure -> red gate
       }
       .toDF()
-      .orderBy(col("media_id"), col("rec"))
   }
 
   val q154Sql: String = {
@@ -1104,7 +1053,6 @@ object MultimodalQueries {
         hamming("a", "b").cast("long").as("hamming"))
       .filter(col("hamming") <= MaxHam)
       .distinct()
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Shared oracle CTE chain for the audio fingerprint (planted
@@ -1196,7 +1144,6 @@ object MultimodalQueries {
       .select(col("anchor_id"), col("n_exact"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
       .withColumn("recall_e6", expr("n_hit * 1000000 div n_exact"))
-      .orderBy(col("anchor_id"))
   }
 
   val q156Sql: String = {

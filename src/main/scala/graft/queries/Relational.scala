@@ -21,8 +21,8 @@ import graft.geo.Geo
   *     (`round(x*100) :: long`) — order-independent, bit-exact;
   *   - `l_quantity` is integer-valued, so double sums/avgs are exact;
   *   - trig outputs are rounded to 4 decimals (libm last-ulp slack);
-  *   - every query ends in a total ORDER BY so row order is
-  *     deterministic in both engines.
+  *   - a query returns a row set: the compare sorts both sides'
+  *     rows, so no query sorts only to present its result.
   */
 object Relational {
 
@@ -142,7 +142,6 @@ object Relational {
           .as("sum_disc_e4"),
         avg(col("l_quantity")).as("avg_qty"),
         count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   val q01Sql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -164,7 +163,6 @@ object Relational {
         col("l_shipdate") < lit("2001-01-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
         col("l_returnflag"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   val q02Sql: String =
     """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
@@ -205,7 +203,6 @@ object Relational {
         col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"), sum(col("l_quantity")).as("sum_qty"))
-      .orderBy(col("p_brand"))
 
   val q04Sql: String =
     """SELECT p_brand, count(*) AS n_items, sum(l_quantity) AS sum_qty
@@ -220,7 +217,6 @@ object Relational {
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_lines"),
         sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
-      .orderBy(col("o_orderstatus"))
 
   val q05Sql: String =
     """SELECT o_orderstatus, count(*) AS n_lines,
@@ -235,7 +231,6 @@ object Relational {
         col("o_orderkey") === col("l_orderkey"), "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_orders"))
-      .orderBy(col("o_orderpriority"))
 
   val q06Sql: String =
     """SELECT o_orderpriority, count(*) AS n_orders
@@ -254,7 +249,6 @@ object Relational {
         col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_custs"), min(col("c_custkey")).as("min_custkey"))
-      .orderBy(col("c_mktsegment"))
 
   val q07Sql: String =
     """SELECT c_mktsegment, count(*) AS n_custs, min(c_custkey) AS min_custkey
@@ -277,7 +271,6 @@ object Relational {
         coalesce(col("r_name"), lit("ALL")).as("region"),
         coalesce(col("n_name"), lit("ALL")).as("nation"),
         col("n_custs"), col("sum_bal_cents"))
-      .orderBy(col("region"), col("nation"))
   }
 
   val q08Sql: String =
@@ -298,7 +291,6 @@ object Relational {
       .filter(col("rn") <= 3)
       .select(col("c_mktsegment"), col("rn"), col("c_custkey"),
         cents(col("c_acctbal")).as("bal_cents"))
-      .orderBy(col("c_mktsegment"), col("rn"))
   }
 
   val q09Sql: String =
@@ -320,7 +312,6 @@ object Relational {
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         sum(col("l_quantity")).over(w).as("roll_sum"),
         avg(col("l_quantity")).over(w).as("roll_avg"))
-      .orderBy(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"))
   }
 
   val q10Sql: String =
@@ -353,7 +344,6 @@ object Relational {
       .agg(count(lit(1)).as("n_sessions"),
         max(col("n_events")).as("max_session_events"),
         sum(col("n_events")).as("n_events"))
-      .orderBy(col("user_id"))
   }
 
   val q11Sql: String =
@@ -399,7 +389,7 @@ object Relational {
     val u = cn.union(sn).distinct().select(lit("union").as("op"), col("nk"))
     val i = cn.intersect(sn).select(lit("intersect").as("op"), col("nk"))
     val e = cn.except(sn).select(lit("except").as("op"), col("nk"))
-    u.union(i).union(e).orderBy(col("op"), col("nk"))
+    u.union(i).union(e)
   }
 
   val q13Sql: String =
@@ -418,7 +408,6 @@ object Relational {
       .groupBy(col("c_nationkey").cast("int").as("nationkey"))
       .agg(countDistinct(col("c_mktsegment")).as("n_segments"),
         count(lit(1)).as("n_custs"))
-      .orderBy(col("nationkey"))
 
   val q14Sql: String =
     """SELECT CAST(c_nationkey AS INT) AS nationkey,
@@ -434,7 +423,6 @@ object Relational {
         sum(e6(col("value"))).as("sum_value_e6"),
         min(col("value")).as("min_value"),
         max(col("value")).as("max_value"))
-      .orderBy(col("hour"), col("event_type"))
 
   val q15Sql: String =
     """SELECT strftime(date_trunc('hour', CAST(ts AS TIMESTAMP)), '%Y-%m-%d %H:00') AS hour,
@@ -508,7 +496,6 @@ object Relational {
       Geo.headingDifference(col("h1"), col("h2")).as("hdg_diff"),
       round(when(col("alpha0") < 0, -halfPi - col("alpha0"))
         .otherwise(halfPi - col("alpha0")) * lit(20900000d), 2).as("xtrack_ft"))
-      .orderBy(col("c_custkey"))
   }
 
   // Same n-vector formulas in DuckDB SQL (reference LatLon.py:95-117,
@@ -648,11 +635,6 @@ object Relational {
         sqrt(col("dux") * col("dux") + col("duy") * col("duy")))), 4)
         .as("dest_lat"),
       round(degrees(atan2(col("duy"), col("dux"))), 4).as("dest_lon"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("c_custkey"))
   }
 
   val q25Sql: String =
@@ -735,7 +717,6 @@ object Relational {
         expr("percentile(l_quantity, 0.25)").as("p25"),
         expr("percentile(l_quantity, 0.5)").as("median"),
         expr("percentile(l_quantity, 0.9)").as("p90"))
-      .orderBy(col("l_returnflag"))
 
   val q29Sql: String =
     """SELECT l_returnflag, count(*) AS n,
@@ -756,7 +737,6 @@ object Relational {
         coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
         coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
         col("n"), col("sum_price_cents"))
-      .orderBy(col("gid"), col("status"), col("priority"))
   }
 
   val q27Sql: String =
@@ -780,7 +760,6 @@ object Relational {
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
         sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
-      .orderBy(col("p_brand"))
 
   val q26Sql: String =
     """SELECT p_brand, count(*) AS n_items,
@@ -797,7 +776,6 @@ object Relational {
     val all = events(spark, dir).select(col("user_id")).distinct()
     val done = all.filter(col("user_id") % 3 === 0)
     all.join(done, Seq("user_id"), "left_anti")
-      .orderBy(col("user_id"))
   }
 
   val q17Sql: String =
@@ -818,7 +796,6 @@ object Relational {
       .groupBy(col("aircraft_type"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_flights"))
-      .orderBy(col("aircraft_type"))
   }
 
   val q18Sql: String =
@@ -839,7 +816,6 @@ object Relational {
       .na.drop("any")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(e6(col("value"))).as("sum_value_e6"))
-      .orderBy(col("event_type"))
 
   val q19Sql: String =
     """SELECT event_type, count(*) AS n,
@@ -860,7 +836,6 @@ object Relational {
         Geo.formatLatLon(
           (k % 120) - lit(60) + lit(0.25),
           ((k * 7) % 300) - lit(150) + lit(0.5)).as("pos"))
-      .orderBy(col("c_custkey"))
   }
 
   val q45Sql: String =
@@ -932,7 +907,6 @@ object Relational {
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"),
         sum(cents(col("l_extendedprice"))).as("sum_price_cents"))
-      .orderBy(col("o_orderpriority"))
   }
 
   val q48Sql: String =
@@ -961,7 +935,6 @@ object Relational {
       .asofJoin(ev, marks, Seq("user_id"), "ts", Seq("mark_id"))
       .select(col("event_id"), col("user_id"),
         col("asof.mark_id").as("mark_id"))
-      .orderBy(col("event_id"))
   }
 
   val q53Sql: String =
@@ -993,7 +966,6 @@ object Relational {
       .asofJoinForward(ev, marks, Seq("user_id"), "ts", Seq("mark_id"))
       .select(col("event_id"), col("user_id"),
         col("asof_next.mark_id").as("mark_id"))
-      .orderBy(col("event_id"))
   }
 
   val q87Sql: String =
@@ -1035,7 +1007,6 @@ object Relational {
       .groupBy(col("mark_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(e6(col("value"))).as("sum_value_e6"))
-      .orderBy(col("mark_id"))
   }
 
   val q54Sql: String =
@@ -1083,7 +1054,6 @@ object Relational {
       .select(col("event_id"), col("user_id"),
         col("asof.mark_id").as("mark_id"),
         col("asof.ts_us").as("mark_ts_us"))
-      .orderBy(col("event_id"))
   }
 
   val q60Sql: String =
@@ -1121,7 +1091,6 @@ object Relational {
       .pivot("o_orderpriority",
         Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"))
       .agg(sum(cents(col("o_totalprice"))))
-      .orderBy(col("o_orderstatus"))
 
   val q55Sql: String = {
     val cols = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED",
@@ -1158,7 +1127,6 @@ object Relational {
         ZOrder.quantize(col("lon"), -180, 180, 10).as("cell_y"))
       .withColumn("zcode", ZOrder.zOrderCode(
         col("cell_x").cast("int"), col("cell_y").cast("int"), 10))
-      .orderBy(col("zcode"), col("c_custkey"))
   }
 
   val q67Sql: String = {
@@ -1226,7 +1194,6 @@ object Relational {
       .agg(count(lit(1)).as("n_items"),
         sum(e4(col("l_extendedprice") * (lit(1d) - col("l_discount"))))
           .as("revenue_e4"))
-      .orderBy(col("p_brand"))
   }
 
   val q77Sql: String =
@@ -1267,7 +1234,6 @@ object Relational {
       .select(col("flag"), col("exact_nd"),
         call_function("hll_card", col("sk")).as("hll_nd"),
         call_function("hll_regsum", col("sk")).as("reg_sum"))
-      .orderBy(col("flag"))
   }
 
   val q84Sql: String = {
@@ -1365,7 +1331,6 @@ object Relational {
       .select(col("flag"), col("p"), col("total").as("n_rows"),
         col("est_cents"), col("wn").as("exact_cents"),
         expr("abs(est_cents - wn) * 10000 DIV wn").as("err_e4"))
-      .orderBy(col("flag"), col("p"))
   }
 
   val q89Sql: String =
@@ -1437,7 +1402,6 @@ object Relational {
       .select(col("flag"), col("n_parts"),
         call_function("hll_card", col("msk")).as("hll_nd"),
         call_function("hll_regsum", col("msk")).as("reg_sum"))
-      .orderBy(col("flag"))
   }
 
   val q96Sql: String = {
@@ -1524,7 +1488,6 @@ object Relational {
       .agg(count(lit(1)).as("n"),
         sum(e6(col("value"))).as("sum_value_e6"),
         countDistinct(col("user_id")).as("n_users"))
-      .orderBy(col("day"), col("event_type"))
   }
 
   val q94Sql: String =
@@ -1644,7 +1607,6 @@ object Relational {
       .groupBy(date_format(col("cd"), "yyyy-MM-dd").as("cohort_day"),
         expr("CAST(datediff(d, cd) DIV 7 AS BIGINT)").as("week_offset"))
       .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy(col("cohort_day"), col("week_offset"))
   }
 
   val q98Sql: String =
@@ -1696,7 +1658,6 @@ object Relational {
       .select(col("nationkey"), col("n_name"), col("cust_debtors"),
         col("cust_debt_cents"), col("supp_debtors"),
         col("supp_debt_cents"))
-      .orderBy(col("nationkey"))
   }
 
   val q99Sql: String =
@@ -1738,8 +1699,7 @@ object Relational {
       """SELECT c_custkey, c_name, bal_cents
         |FROM q100_customer c
         |WHERE bal_cents > (SELECT avg(c2.bal_cents) FROM q100_customer c2
-        |                   WHERE c2.c_nationkey = c.c_nationkey)
-        |ORDER BY c_custkey""".stripMargin)
+        |                   WHERE c2.c_nationkey = c.c_nationkey)""".stripMargin)
   }
 
   val q100Sql: String =
@@ -1815,7 +1775,6 @@ object Relational {
       .select(col("C_CUSTKEY").as("c_custkey"), col("C_NAME").as("c_name"),
         col("BAL_CENTS").as("bal_cents"),
         col("C_NATIONKEY").as("c_nationkey"))
-      .orderBy(col("c_custkey"))
   }
 
   val q101Sql: String =
@@ -1847,7 +1806,7 @@ object Relational {
     val e = cn.exceptAll(sn).groupBy(col("nk"))
       .agg(count(lit(1)).as("n")).select(lit("except_all").as("op"),
         col("nk"), col("n"))
-    i.union(e).orderBy(col("op"), col("nk"))
+    i.union(e)
   }
 
   val q102Sql: String =
@@ -1901,11 +1860,6 @@ object Relational {
         |'l_extendedprice_cents', n_rows, n_rows - price_n, price_d, price_min, price_max,
         |'l_discount_nz_e4', n_rows, n_rows - disc_n, disc_d, disc_min, disc_max)
         | AS (column, n_rows, n_null, n_distinct, min_v, max_v)""".stripMargin)
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("column"))
   }
 
   val q104Sql: String =
@@ -1980,7 +1934,7 @@ object Relational {
         |'max_cnt', CAST(NULL AS BIGINT), mx,
         |'skew_x1000', CAST(NULL AS BIGINT), mx * 1000L div (total div d))
         | AS (metric, key_id, n)""".stripMargin)
-    top.unionAll(summary).orderBy(col("metric"), col("key_id"))
+    top.unionAll(summary)
   }
 
   val q106Sql: String =
@@ -2059,7 +2013,6 @@ object Relational {
          |'max_cnt', CAST(NULL AS BIGINT), ${prof.maxCnt}L)
          | AS (metric, key_id, n)""".stripMargin)
     nationRows.unionAll(nationSums).unionAll(decision)
-      .orderBy(col("metric"), col("key_id"))
   }
 
   val q139Sql: String =
@@ -2111,7 +2064,6 @@ object Relational {
     q55(spark, dir)
       .unpivot(Array(col("o_orderstatus")), "priority", "total_cents")
       .filter(col("total_cents").isNotNull)
-      .orderBy(col("o_orderstatus"), col("priority"))
 
   val q115Sql: String =
     """SELECT o_orderstatus, o_orderpriority AS priority,
@@ -2213,7 +2165,6 @@ object Relational {
               "i.e. ~1.2e9 events per (type, hour)); re-bucket to a " +
               "finer time unit — q="), col("qw").cast("string"))).isNull,
           col("qw").cast("long")).as("q"))
-      .orderBy(col("event_type"), col("hour"))
   }
 
   val q119Sql: String =
@@ -2284,7 +2235,6 @@ object Relational {
         wide(col("k")) * wide(col("st2")) - wide(col("st")) * wide(col("st")))
       .select(col("event_type"), col("k"), col("sy"),
         expr("CAST(num div den AS LONG)").as("slope_e6"))
-      .orderBy(col("event_type"))
   }
 
   val q120Sql: String =
@@ -2358,7 +2308,6 @@ object Relational {
         count(when(col("ok"), 1)).as("n_ok"),
         sum(size(col("tags")).cast("long")).as("sum_tags"),
         countDistinct(col("tags").getItem(0)).as("first_tags"))
-      .orderBy(col("tier"))
   }
 
   val q131Sql: String =

@@ -109,7 +109,6 @@ object TextQueries {
       .groupBy(md5(col("text")).as("h"))
       .agg(min(col("doc_id")).as("keeper"),
         count(lit(1)).cast("long").as("n_copies"))
-      .orderBy(col("keeper"))
 
   val q30Sql: String =
     s"""WITH docs AS (
@@ -171,7 +170,6 @@ object TextQueries {
       .filter(col("jac") >= 0.5)
       .select(col("id_a"), col("id_b"),
         round(col("jac") * 10000).cast("long").as("jaccard_e4"))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** The calibrated m8 pre-confirm floor (see q31's header and the
@@ -248,7 +246,6 @@ object TextQueries {
       .select(col("doc_id"), tokenHashes16(toks).as("__tv"))
       .select(col("doc_id"),
         simHash16FromHashes(col("__tv")).cast("int").as("simhash"))
-      .orderBy(col("doc_id"))
   }
 
   val q32Sql: String = {
@@ -281,11 +278,6 @@ object TextQueries {
       tbl(spark, dir, "documents").select(col("doc_id"), col("text")),
       col("text"), "simhash64")
       .select(col("doc_id"), col("simhash64"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q49Sql: String = {
@@ -317,7 +309,6 @@ object TextQueries {
   // ---- q33: n-gram-Jaccard near-dup via inverted shingle index ----
   def q33(spark: SparkSession, dir: String): DataFrame =
     jaccardPairs(withNearCopies(tbl(spark, dir, "documents")), 0.5)
-      .orderBy(col("id_a"), col("id_b"))
 
   /** Shared oracle CTE chain producing the inverted-index candidate
     * pairs (used by q33 and the q47 cluster resolution on top of it).
@@ -367,7 +358,6 @@ object TextQueries {
       col("text"), "predicted")
       .groupBy(col("lang"), col("predicted"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("lang"), col("predicted"))
 
   /** SQL projection list of per-language profile-hit counts over a
     * `toks` column (shared by the q34 and q61 oracles).
@@ -425,11 +415,6 @@ object TextQueries {
         floor(sumLen * 100 / nTok).cast("long").as("avg_tok_len_e2"),
         floor(stopHits * 10000 / nTok).cast("long").as("stop_ratio_e4"),
         qualityE4Col.as("quality_e4"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q35Sql: String =
@@ -460,11 +445,6 @@ object TextQueries {
         size(expr(
           "regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\\\\s]', 0)"))
           .cast("long").as("bpe_tokens"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
 
   val q36Sql: String =
     """SELECT doc_id,
@@ -486,11 +466,6 @@ object TextQueries {
         col("doc_id"),
         col("s.fingerprint").as("fingerprint"),
         col("s.n_distinct").as("n_distinct_8grams"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q37Sql: String =
@@ -533,7 +508,6 @@ object TextQueries {
         round((col("occ") / col("doc_len")) *
           log(col("n_docs") / col("df")) * 1e6).cast("long")
           .as("tfidf_e6"))
-      .orderBy(col("doc_id"), col("term"))
   }
 
   val q38Sql: String =
@@ -563,7 +537,6 @@ object TextQueries {
     tbl(spark, dir, "documents")
       .select(col("doc_id"), splitBucket(spark).as("bucket"),
         splitLabel(spark).as("split"))
-      .orderBy(col("doc_id"))
 
   val q46Sql: String =
     s"""SELECT doc_id,
@@ -580,7 +553,6 @@ object TextQueries {
   def q47(spark: SparkSession, dir: String): DataFrame =
     dedupClusters(jaccardPairs(withNearCopies(tbl(spark, dir, "documents")), 0.5))
       .select(col("id").as("doc_id"), col("label").as("keeper"))
-      .orderBy(col("doc_id"))
 
   val q47Sql: String =
     s"""WITH RECURSIVE $nearPairsCte,
@@ -655,7 +627,6 @@ object TextQueries {
       .select(col("m8"), col("n_pairs"),
         expr("sj DIV n_pairs").as("mean_jac_e4"),
         col("min_jac_e4"), col("max_jac_e4"))
-      .orderBy(col("m8"))
   }
 
   val q127Sql: String = {
@@ -715,7 +686,6 @@ object TextQueries {
         col("n_straddle"),
         expr("n_straddle * 1000000 DIV n_docs").as("straddle_e6"),
         col("max_span"))
-      .orderBy(col("split"))
 
   val q125Sql: String =
     s"""WITH d AS (
@@ -783,7 +753,6 @@ object TextQueries {
       .select(col("doc_id"), col("keeper"), col("bucket"),
         when(col("bucket") < 80, "train").when(col("bucket") < 90, "valid")
           .otherwise("test").as("split"))
-      .orderBy(col("doc_id"))
   }
 
   val q124Sql: String = {
@@ -865,7 +834,6 @@ object TextQueries {
       .select(col("doc_id"), col("lang"), bucket.as("bucket"),
         rate.as("rate_e4"))
       .filter(col("bucket") < col("rate_e4"))
-      .orderBy(col("doc_id"))
   }
 
   val q57Sql: String = {
@@ -907,7 +875,6 @@ object TextQueries {
       .select(col("doc_id"), col("split"), col("n_tokens"),
         expr("cum_before DIV 2048").as("bin"),
         (col("cum_before") % 2048).as("bin_offset"))
-      .orderBy(col("doc_id"))
   }
 
   val q58Sql: String = {
@@ -942,7 +909,6 @@ object TextQueries {
   // composition adds nothing beyond its most expensive member.
   def q61(spark: SparkSession, dir: String): DataFrame =
     curate(withExactCopies(tbl(spark, dir, "documents")))
-      .orderBy(col("doc_id"))
 
   /** The curation decision applied to any (doc_id, text) frame — the
     * q61 logic factored out so the streaming drop-folder ingest
@@ -1039,7 +1005,6 @@ object TextQueries {
         concat(col("text"), lit(" "), col("excerpt")).as("text"))
     TextOps.contaminationPairs(docs.unionByName(planted),
         isBench = col("doc_id") % 50 === 0, minOverlap = 5L)
-      .orderBy(col("doc_id"), col("bench_id"))
   }
 
   val q63Sql: String = {
@@ -1083,8 +1048,8 @@ object TextQueries {
   // Scale shape: MAP-ONLY. The metric is strictly per-document, so no
   // row ever needs another row's grams — the native `rep_stats2`
   // expression ([[graft.functions.RepStats2]]) counts each row's
-  // adjacent 2-grams in one codegen'd pass and ZERO shuffle; the only
-  // exchange is the oracle orderBy. Two earlier formulations were
+  // adjacent 2-grams in one codegen'd pass and ZERO shuffle; the
+  // query has no exchange at all. Two earlier formulations were
   // measurably wrong: explode -> groupBy(doc_id, gram) shuffled the
   // corpus's entire token stream to answer a question each row can
   // answer about itself, and the sort-grams-then-fold-runs HOF kept
@@ -1107,11 +1072,6 @@ object TextQueries {
         expr("dup_c * 10000 div n_2grams").as("dup_frac_e4"))
       .withColumn("keep",
         col("top_frac_e4") <= 2000 && col("dup_frac_e4") <= 6000)
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q64Sql: String =
@@ -1157,7 +1117,6 @@ object TextQueries {
       .select(col("source"), col("n_docs"), col("n_tokens"),
         expr("tot_tokens * 1000000 div (n_sources * n_tokens)")
           .as("weight_e6"))
-      .orderBy(col("source"))
   }
 
   val q65Sql: String =
@@ -1206,7 +1165,6 @@ object TextQueries {
           transform(col("ps"), s => s.getField("id").cast("string")))
           .as("token_ids"),
         size(col("ps")).cast("long").as("n_tokens"))
-      .orderBy(col("doc_id"))
   }
 
   val q66Sql: String =
@@ -1250,7 +1208,6 @@ object TextQueries {
       .select(col("lang"), posexplode(col("top")))
       .select(col("lang"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("doc_id"), col("col.score").as("r"))
-      .orderBy(col("lang"), col("rank"))
   }
 
   val q68Sql: String =
@@ -1292,11 +1249,6 @@ object TextQueries {
       StructField("doc_id", LongType),
       StructField("quality_e4", LongType),
       StructField("train_idx", LongType))))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("train_idx"))
   }
 
   val q72Sql: String =
@@ -1360,7 +1312,6 @@ object TextQueries {
         sum(col("n_chars")).as("sum_chars"),
         sum(call_function("md5_long60", col("text")) % 1000000000000L)
           .as("text_hash_sum"))
-      .orderBy(col("lang"), col("source"))
   }
 
   val q73Sql: String =
@@ -1399,7 +1350,6 @@ object TextQueries {
         sum(col("n_chars")).as("sum_chars"),
         sum(call_function("md5_long60", col("text")) % 1000000000000L)
           .as("text_hash_sum"))
-      .orderBy(col("lang"))
   }
 
   val q92Sql: String =
@@ -1444,7 +1394,6 @@ object TextQueries {
         sum((col("n_occ") > 1).cast("long")).as("n_dup_chunks"))
       .select(col("doc_id"), col("n_chunks"), col("n_dup_chunks"),
         expr("n_dup_chunks * 10000 div n_chunks").as("dup_frac_e4"))
-      .orderBy(col("doc_id"))
   }
 
   val q75Sql: String =
@@ -1491,7 +1440,6 @@ object TextQueries {
         least(lit(8), size(toks) - col("start_tok")).cast("long").as("n_toks"),
         md5(concat_ws(" ", slice(toks, col("start_tok") + 1, lit(8))))
           .as("chunk_md5"))
-      .orderBy(col("doc_id"), col("chunk_id"))
 
   val q76Sql: String =
     s"""WITH t AS (
@@ -1534,11 +1482,6 @@ object TextQueries {
         regexp_count(col("text"), lit(phoneRe)).cast("long").as("n_phones"),
         md5(regexp_replace(regexp_replace(col("text"), emailRe, "<email>"),
           phoneRe, "<phone>")).as("scrubbed_md5"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q78Sql: String =
@@ -1599,7 +1542,6 @@ object TextQueries {
         when(col("in_base"), "dup_base")
           .when(col("doc_id") =!= col("keeper"), "dup_delta"))
       .select(col("doc_id"), col("reason"), col("reason").isNull.as("keep"))
-      .orderBy(col("doc_id"))
   }
 
   val q80Sql: String =
@@ -1704,7 +1646,7 @@ object TextQueries {
        |)""".stripMargin
 
   def q85(spark: SparkSession, dir: String): DataFrame =
-    TextOps.maxSharedSpans(spanFixture(spark, dir)).orderBy(col("doc_id"))
+    TextOps.maxSharedSpans(spanFixture(spark, dir))
 
   val q85Sql: String =
     s"""WITH $spanRunsCteSql, spans AS (
@@ -1728,7 +1670,7 @@ object TextQueries {
   // copies collapse to the empty string, the misaligned plants lose
   // exactly their 16 borrowed tokens.
   def q86(spark: SparkSession, dir: String): DataFrame =
-    TextOps.cutSharedSpans(spanFixture(spark, dir)).orderBy(col("doc_id"))
+    TextOps.cutSharedSpans(spanFixture(spark, dir))
 
   val q86Sql: String =
     s"""WITH $spanRunsCteSql, runcnt AS (
@@ -1777,7 +1719,6 @@ object TextQueries {
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("h")).as("n_unique_texts"),
         sum(col("n_toks")).as("sum_tokens"))
-      .orderBy(col("domain"))
   }
 
   val q88Sql: String =
@@ -1834,7 +1775,6 @@ object TextQueries {
       .crossJoin(broadcast(z))
       .select(col("doc_id"), col("n_toks"), col("sum_ll_e6"),
         (expr("sum_ll_e6 DIV n_toks") - col("ln_z_e6")).as("avg_ll_e6"))
-      .orderBy(col("doc_id"))
   }
 
   val q90Sql: String =
@@ -1966,7 +1906,6 @@ object TextQueries {
       .select(col("lang"), posexplode(col("top")))
       .select(col("lang"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("doc_id"), col("col.score").as("key_e9"))
-      .orderBy(col("lang"), col("rank"))
   }
 
   val q93Sql: String = {
@@ -2035,7 +1974,6 @@ object TextQueries {
         count(lit(1)).as("n_docs"),
         countDistinct(col("raw_h")).as("n_raw_variants"))
       .filter(col("n_docs") > 1)
-      .orderBy(col("canon_id"))
   }
 
   val q95Sql: String = {
@@ -2158,7 +2096,6 @@ object TextQueries {
     try
       bpeLearn(words0, 4)
         .toDF("merge_rank", "left_sym", "right_sym", "pair_count")
-        .orderBy(col("merge_rank"))
     finally words0.unpersist()
   }
 
@@ -2276,7 +2213,6 @@ object TextQueries {
       .orderBy(col("exact_n").desc, col("term")).limit(20)
       .withColumn("cms_n", call_function(queryFn, col("k")))
       .select(col("term"), col("exact_n"), col("cms_n"))
-      .orderBy(col("exact_n").desc, col("term"))
   }
 
   val q83Sql: String = {
@@ -2352,11 +2288,6 @@ object TextQueries {
       .select(col("r.id_a").as("id_a"), col("r.id_b").as("id_b"),
         col("r.lev").as("lev"), col("r.max_len").as("max_len"))
       .filter(col("lev") =!= -1L)
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's final stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   val q103Sql: String =
@@ -2399,7 +2330,6 @@ object TextQueries {
     val delta = q107Delta(docs)
     nearDupVerdicts(delta.select(col("doc_id")),
       minHashSig(docs), minHashSig(delta))
-      .orderBy(col("doc_id"))
   }
 
   /** The q107 delta fixture: near-copies (every 7th base doc, last 3
@@ -2584,11 +2514,6 @@ object TextQueries {
           aggregate(col("big"), lit(0L), (acc, b) => acc + wInt(b)))
           .as("score_int"))
       .withColumn("keep", col("score_int") > 0)
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q108Sql: String =
@@ -2645,7 +2570,6 @@ object TextQueries {
       .withColumn("cum_share_e4", expr("__cum * 10000 div __tot"))
       .select(col("bucket"), col("n_docs"), col("n_toks"),
         col("cum_share_e4"))
-      .orderBy(col("bucket"))
   }
 
   val q109Sql: String =
@@ -2727,7 +2651,6 @@ object TextQueries {
       .select(posexplode(col("top")))
       .select((col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("doc_id"), col("col.score").as("key_e6"))
-      .orderBy(col("rank"))
   }
 
   val q110Sql: String = {
@@ -2894,7 +2817,6 @@ object TextQueries {
         count(lit(1)).as("n_members"))
       .select(col("cluster"), col("k.kid").as("keeper"),
         (-col("k.nq")).as("keeper_quality_e4"), col("n_members"))
-      .orderBy(col("cluster"))
   }
 
   val q116Sql: String =
@@ -3124,7 +3046,6 @@ object TextQueries {
   // (TextOps.shinglePairCounts); both metrics are emitted per pair.
   def q112(spark: SparkSession, dir: String): DataFrame =
     TextOps.containmentPairs(withExcerpts(tbl(spark, dir, "documents")), 0.9)
-      .orderBy(col("id_a"), col("id_b"))
 
   /** documents ∪ planted first-half excerpts of every 11th doc with
     * > 20 tokens (at doc_id + 2000000).
@@ -3191,8 +3112,8 @@ object TextQueries {
   // the actual ratio margins and an inflate round-trip so a wrong
   // length can't hide behind the wide threshold.
   //
-  // 100 TB posture: map-only scan (PlanSpec-pinned zero exchanges
-  // before the oracle orderBy); the per-row cost is zlib over ~200
+  // 100 TB posture: map-only scan (PlanSpec-pinned zero
+  // exchanges); the per-row cost is zlib over ~200
   // bytes, and the output is 4 narrow columns — the payload never
   // shuffles.
   def q132(spark: SparkSession, dir: String): DataFrame = {
@@ -3212,11 +3133,6 @@ object TextQueries {
         // way, but CJK-heavy real documents flag 3x differently
         octet_length(body).cast("long").as("raw_len"),
         TextOps.repetitiveFlag(body).cast("int").as("is_repetitive"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q132Sql: String =
@@ -3254,7 +3170,7 @@ object TextQueries {
   //
   // 100 TB posture: map-only (a few regex passes plus one
   // split/interleave per document, the q34/q35 cost class); zero
-  // shuffle beyond the oracle orderBy.
+  // shuffle.
   def q142(spark: SparkSession, dir: String): DataFrame = {
     import graft.text.Html
     val id = col("doc_id")
@@ -3296,7 +3212,6 @@ object TextQueries {
         md5(col("m.content")).as("content_md5"),
         length(col("m.content")).cast("long").as("content_len"),
         col("m.n_blocks"), col("m.n_kept"))
-      .orderBy(col("doc_id"))
   }
 
   val q142Sql: String = {
@@ -3413,8 +3328,7 @@ object TextQueries {
   // canonicalize the same strings, so a slipped rule hash-fails.
   //
   // 100 TB posture: map-only canonicalization + one broadcast hash
-  // join against the (tiny) blocklist dim; zero data shuffle beyond
-  // the oracle orderBy.
+  // join against the (tiny) blocklist dim; zero data shuffle.
   def q143(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val id = col("doc_id")
@@ -3470,11 +3384,6 @@ object TextQueries {
         col("domain") === col("blocked_domain"), "left")
       .select(id, col("canon_url"), col("domain"),
         col("blocked_domain").isNotNull.as("blocked"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's whole map stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q143Sql: String =
@@ -3571,7 +3480,6 @@ object TextQueries {
   def q145(spark: SparkSession, dir: String): DataFrame =
     TextOps.prefixJaccardPairs(
       withFirstCutCopies(tbl(spark, dir, "documents")), 7, 10, 4)
-      .orderBy(col("id_a"), col("id_b"))
 
   /** documents ∪ planted near-copies (FIRST 2 tokens dropped) of
     * every 5th doc with > 6 tokens — q145's fixture.
@@ -3635,7 +3543,6 @@ object TextQueries {
     // fixture; no-op at production scale (ScanFanOut)
     TextOps.lineDedup(withBoilerLines(
       graft.operators.ScanFanOut(tbl(spark, dir, "documents"))))
-      .orderBy(col("doc_id"))
 
   /** documents re-lined for q150: a fixed boilerplate header line,
     * the body re-chunked 7 tokens per line, a fixed footer line.
@@ -3743,7 +3650,7 @@ object TextQueries {
     val batch = withBoilerLines(
       partA.unionByName(partB).unionByName(partC).unionByName(partD))
       .persist()
-    TextOps.lineAdmitStats(batch, index).orderBy(col("doc_id"))
+    TextOps.lineAdmitStats(batch, index)
   }
 
   val q159Sql: String = {
@@ -3861,12 +3768,11 @@ object TextQueries {
       withBoilerLines(gated.filter(!col("blocked"))
         .select(col("doc_id"), col("text"))))
       .select(col("doc_id"), col("n_lines"), col("n_kept"))
-    // (computing the signals INLINE on the assembly scan was
-    // tried and REVERTED — measured 1.32 s -> 2.30 s best-of-3. The
-    // final orderBy is a RANGE exchange, and range partitioning
-    // SAMPLES its child: everything below it with no intervening
-    // shuffle executes twice, so inlined signal expressions pay 2x
-    // while this broadcast-built side evaluates exactly once.)
+    // (computing the signals INLINE on the assembly scan measured
+    // 1.32 s -> 2.30 s best-of-3 while the query still ended in a
+    // range-partitioned sort, which sampled its child and so ran
+    // inlined expressions twice; this broadcast-built side evaluates
+    // exactly once.)
     val signals = TextOps.withLanguageId(
       gated.select(col("doc_id"), col("text")), col("text"), "lang_pred")
       .withColumn("quality_e4", qualityE4Col)
@@ -3885,7 +3791,6 @@ object TextQueries {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"),
         col("lang_pred"), col("quality_e4"), col("split"),
         col("reason"), col("reason").isNull.as("keep"))
-      .orderBy(col("doc_id"))
   }
 
   val q157Sql: String =
@@ -4095,11 +4000,10 @@ object TextQueries {
     // stage 3: near-dup clusters over the live set
     val clusters = TextOps.dedupClusters(TextOps.jaccardPairs(live, 0.5))
     // stage 4: language/quality signals over the live set.
-    // (inlining these on the assembly scan was tried and
-    // REVERTED — the final orderBy's range exchange SAMPLES its
-    // child, so expressions below it with no intervening shuffle
-    // evaluate twice; the broadcast-built branch here evaluates once.
-    // Measured: q157 1.32 s -> 2.30 s inlined; q158 itself a wash.)
+    // (inlining these on the assembly scan measured q157 1.32 s ->
+    // 2.30 s and q158 a wash, while both still ended in a range-
+    // partitioned sort that ran inlined expressions twice; the
+    // broadcast-built branch here evaluates once.)
     val signals = TextOps.withLanguageId(live, col("text"), "lang_pred")
       .withColumn("quality_e4", qualityE4Col)
       .select(col("doc_id"), col("lang_pred"), col("quality_e4"))
@@ -4130,11 +4034,6 @@ object TextQueries {
         coalesce(col("lang_pred"), lit("und")).as("lang_pred"),
         coalesce(col("quality_e4"), lit(0L)).as("quality_e4"),
         col("reason"), col("reason").isNull.as("keep"))
-      // cache the small pre-sort result — the orderBy's range
-      // partitioner samples its child with one extra execution, which
-      // re-ran this query's final stage (measured; see OPTIMIZATION_r18.md)
-      .persist()
-      .orderBy(col("doc_id"))
   }
 
   val q158Sql: String = {
@@ -4421,11 +4320,10 @@ object TextQueries {
     * the sibling consumers (line stats, signals, clusters when
     * cluster-aware, final assembly) read it with different column
     * sets — q158's measured ReuseExchange argument. (Inlining
-    * the per-row signals on the assembly scan was tried and REVERTED
-    * — the final orderBy's range exchange SAMPLES its child, so the
-    * inlined expressions evaluated twice; measured +0.2 s on
-    * q160/q161 and +1.0 s on the unpersisted q157, vs once on this
-    * broadcast-built branch.)
+    * the per-row signals on the assembly scan measured +0.2 s on
+    * q160/q161 and +1.0 s on the unpersisted q157 while the queries
+    * still ended in a range-partitioned sort, which ran inlined
+    * expressions twice; this broadcast-built branch evaluates once.)
     *
     * `clusterAware = true` (q162) composes q158's near-dup stage onto
     * the container lineage: jaccardPairs + CC keeper over the live
@@ -4465,7 +4363,6 @@ object TextQueries {
           coalesce(col("quality_e4"), lit(0L)).as("quality_e4"),
           col("split"), col("reason"),
           col("reason").isNull.as("keep")): _*)
-        .orderBy(col("doc_id"))
     } else {
       val clusters = TextOps.dedupClusters(TextOps.jaccardPairs(live, 0.5))
       val bucket = call_function("md5_long60",
@@ -4495,7 +4392,6 @@ object TextQueries {
           coalesce(col("lang_pred"), lit("und")).as("lang_pred"),
           coalesce(col("quality_e4"), lit(0L)).as("quality_e4"),
           col("reason"), col("reason").isNull.as("keep")): _*)
-        .orderBy(col("doc_id"))
     }
   }
 
@@ -5040,7 +4936,6 @@ object TextQueries {
         coalesce(col("__hit"), lit(false)).as("blocked"),
         size(Urls.hostSuffixChain(col("host"))).cast("long")
           .as("n_suffixes"))
-      .orderBy(id)
   }
 
   val q164Sql: String =

@@ -117,7 +117,6 @@ object VectorQueries {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("neighbor_id"), col("col.score").as("cos_e6"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** DuckDB CTE chain for the exact baseline — `e` (vectors), `q`
@@ -154,7 +153,6 @@ object VectorQueries {
   def q41(spark: SparkSession, dir: String): DataFrame =
     vecs(spark, dir)
       .select(col("vec_id"), srpBucket(col("v"), signs).cast("int").as("bucket"))
-      .orderBy(col("vec_id"))
 
   val q41Sql: String =
     s"""WITH e AS (
@@ -180,7 +178,6 @@ object VectorQueries {
         transform(col("v"), (x, i) => when(i === 0, x + 0.05).otherwise(x))
           .as("v"))
     annNearDupPairs(base.union(planted), signs)
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** SRP-bucketed cosine near-dup pairs over `(vec_id, v)` rows:
@@ -312,7 +309,6 @@ object VectorQueries {
           .as("v"))
     annNearDupPairsBanded(base.union(planted), bandTables,
       minCosE6 = 985000L)
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** DuckDB literal for plane `p` of a salted table. */
@@ -466,7 +462,6 @@ object VectorQueries {
       .withColumn("rank", row_number().over(wRank))
       .filter(col("rank") <= 3)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_e6"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   val q43Sql: String = {
@@ -554,7 +549,6 @@ object VectorQueries {
         concat_ws(",",
           transform(call_function("pq_encode", col("v")),
             c => c.cast("string"))).as("codes"))
-      .orderBy(col("vec_id"))
   }
 
   /** Shared oracle CTE chain: double-cast embeddings, indexed
@@ -613,7 +607,6 @@ object VectorQueries {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("neighbor_id"), (-col("col.score")).as("dist_e6"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Shared oracle CTE for the ADC scoring pass (`adc_scored`): the
@@ -683,7 +676,6 @@ object VectorQueries {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("neighbor_id"), (-col("col.score")).as("dist_e6"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   val q71Sql: String = {
@@ -765,7 +757,6 @@ object VectorQueries {
           transform(
             call_function("pq_encode", call_function("ivf_residual", col("v"))),
             c => c.cast("string"))).as("codes"))
-      .orderBy(col("vec_id"))
   }
 
   val q74Sql: String = {
@@ -829,7 +820,6 @@ object VectorQueries {
       .select(col("id_a"), col("id_b"))
     graft.text.TextOps.dedupClusters(pairs)
       .select(col("id").as("vec_id"), col("label").as("keeper"))
-      .orderBy(col("vec_id"))
   }
 
   val q79Sql: String =
@@ -869,7 +859,6 @@ object VectorQueries {
       .groupBy(col("cid"), col("dim").cast("long").as("dim"))
       .agg(count(lit(1)).as("n"),
         sum(round(col("x") * 1e6).cast("long")).as("sum_e6"))
-      .orderBy(col("cid"), col("dim"))
   }
 
   val q52Sql: String = {
@@ -966,7 +955,6 @@ object VectorQueries {
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
       .withColumn("recall_e6",
         expr("n_hit * 1000000L div n_exact"))
-      .orderBy(col("cfg"), col("query_id"))
   }
 
   val q105Sql: String = {
@@ -1057,7 +1045,6 @@ object VectorQueries {
         size(array_intersect(col("exact_ids"), col("adc_ids")))
           .cast("long").as("n_hit"))
       .withColumn("recall_e6", expr("n_hit * 1000000 DIV n_exact"))
-      .orderBy(col("query_id"))
   }
 
   val q128Sql: String = {
@@ -1136,7 +1123,6 @@ object VectorQueries {
         col("n_hit_p2"),
         expr("n_hit_p1 * 1000000 DIV n_exact").as("recall_p1_e6"),
         expr("n_hit_p2 * 1000000 DIV n_exact").as("recall_p2_e6"))
-      .orderBy(col("query_id"))
   }
 
   val q126Sql: String = {
@@ -1199,7 +1185,6 @@ object VectorQueries {
   // reads every vector exactly once by design.
   def q113(spark: SparkSession, dir: String): DataFrame =
     deconFlags(q113Corpus(spark, dir), q113Eval(spark, dir))
-      .orderBy(col("vec_id"))
 
   /** The q113 corpus fixture: non-eval vectors ∪ planted perturbed
     * eval twins (the leaks). Shared with DeconStreamSpec, which
@@ -1304,7 +1289,6 @@ object VectorQueries {
       .select(col("source"), posexplode(col("bottom")))
       .select(col("source"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("doc_id"), (-col("col.score")).as("cos_e6"))
-      .orderBy(col("source"), col("rank"))
 
   /** The q114 input relation: documents joined to their embeddings —
     * (source, doc_id, v). Shared with EmbDriftStreamSpec.
@@ -1477,7 +1461,6 @@ object VectorQueries {
         expr("cos_e6 * 1000000 DIV nullif((ax + ay) DIV 2, 0)"))
       .filter(col("margin_e6") >= 1400000L)
       .select(col("xid"), col("yid"), col("cos_e6"), col("margin_e6"))
-      .orderBy(col("xid"))
   }
 
   /** DuckDB CTE chain for the alignment sides (e, a = source, bb =
@@ -1673,7 +1656,6 @@ object VectorQueries {
       confirmFloorE6: Option[Long]): DataFrame =
     confirmFloorE6.fold(admitted)(f => admitted.filter(col("cos_e6") >= f))
       .select(col("xid"), col("yid"), col("cos_e6"), col("margin_e6"))
-      .orderBy(col("xid"))
 
   /** Everything up to margin admission — band keys, capped bipartite
     * join, exact cosine, both top-4 partials, the margin filter —
@@ -2047,7 +2029,6 @@ object VectorQueries {
       .select(col("cfg"), col("n_exact"), col("n_banded"), col("n_hit"),
         expr("n_hit * 1000000 DIV nullif(n_exact, 0)").as("recall_e6"),
         expr("n_hit * 1000000 DIV nullif(n_banded, 0)").as("precision_e6"))
-      .orderBy(col("cfg"))
   }
 
   /** q123's oracle at an explicit SRP plane count (the q122SqlFor
@@ -2149,7 +2130,6 @@ object VectorQueries {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("neighbor_id"), col("col.score").as("cos_e6"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Shared oracle CTE chain for the banded hard-negative miner —
@@ -2250,7 +2230,6 @@ object VectorQueries {
       .select(col("query_id"), col("n_exact"),
         coalesce(col("n_hit"), lit(0L)).as("n_hit"))
       .withColumn("recall_e6", expr("n_hit * 1000000L div n_exact"))
-      .orderBy(col("query_id"))
   }
 
   val q135Sql: String = {
@@ -2341,7 +2320,6 @@ object VectorQueries {
         when(col("idcg_e6") === 0, 0L)
           .otherwise(round(lit(10000.0) * col("dcg_e6") / col("idcg_e6")))
           .cast("long").as("ndcg_e4"))
-      .orderBy(col("query_id"))
   }
 
   /** round(1e6 / log2(r+1)) for r = 1..10 — THE DCG weight table,
@@ -2468,7 +2446,6 @@ object VectorQueries {
         size(array_intersect(col("exact_ids"), col("sq_ids")))
           .cast("long").as("n_hit"))
       .withColumn("recall_e6", expr("n_hit * 1000000 DIV n_exact"))
-      .orderBy(col("query_id"))
   }
 
   val q149Sql: String =

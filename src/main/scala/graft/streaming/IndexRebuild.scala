@@ -162,12 +162,19 @@ object IndexRebuild {
     * merge didn't happen.
     */
   def rebuiltKeeperMap(docs: DataFrame, minJaccard: Double = 0.5)
-      : DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val clusters = graft.text.TextOps.dedupClusters(
+      : DataFrame =
+    keeperMap(docs, clusters(docs, minJaccard))
+
+  /** The near-dup (id, label) clusters of `docs`, as a persisted frame
+    * the caller unpersists ([[graft.text.TextOps.dedupClusters]]). */
+  private def clusters(docs: DataFrame, minJaccard: Double): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    graft.text.TextOps.dedupClusters(
       graft.text.TextOps.jaccardPairs(docs, minJaccard))
+  }
+
+  private def keeperMap(docs: DataFrame, clusters: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
     docs.select(col("doc_id"))
       .join(clusters, col("doc_id") === col("id"), "left")
       .select(col("doc_id"),
@@ -180,9 +187,12 @@ object IndexRebuild {
           .when(col("bucket") < 90, "valid").otherwise("test"))
   }
 
-  /** Write the re-derived keeper map — same swap protocol. */
+  /** Write the re-derived keeper map — same swap protocol — and
+    * release the cluster labels' cache once the write has finished. */
   def compactKeeperMap(docs: DataFrame, outPath: String,
-      minJaccard: Double = 0.5): Unit =
-    rebuiltKeeperMap(docs, minJaccard)
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
+      minJaccard: Double = 0.5): Unit = {
+    val labels = clusters(docs, minJaccard)
+    try keeperMap(docs, labels).write.mode(SaveMode.Overwrite).parquet(outPath)
+    finally labels.unpersist()
+  }
 }

@@ -2,6 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
@@ -46,7 +48,7 @@ object DumpPlans {
       "q63_contamination" -> "decontamination probe (broadcast bench index, corpus never shuffles)",
       "q64_repetition" -> "repetition metrics (map-only run-length fold, zero data shuffle)",
       "q66_token_ids" -> "token-id encode (broadcast top-K vocab, TakeOrdered dim build)",
-      "q67_zorder" -> "Z-order code (zero-shuffle projection + output sort)",
+      "q67_zorder" -> "Z-order code (zero-shuffle projection)",
       "q69_pq_encode" -> "PQ encode (map-only, broadcast codebook)",
       "q70_pq_adc" -> "PQ ADC search (codes x broadcast queries, bounded top-k)",
       "q71_ivfpq_search" -> "IVF+PQ composed search (probe join + ADC + bounded top-k)",
@@ -100,15 +102,15 @@ object DumpPlans {
       "q126_ivf_recall" -> "IVF probe-depth recall audit (exact sample baseline, broadcast codebook + claim-set joins)",
       "q127_minhash_calibration" -> "MinHash estimator calibration (banded candidates, per-pair m8 vs exact Jaccard, <=7-row table: a matching band forces m8 >= 2)",
       "q128_pq_recall" -> "PQ/ADC recall audit (exact L2 sample baseline vs code-space top-3, broadcast codebook)",
-      "q129_codec_decode" -> "real PGM/WAV decode (narrow typed mapPartitions batches, payloads never shuffled, output-only sort)",
-      "q130_png_decode" -> "real PNG decode (CRC'd chunk walk + JDK-zlib inflate + filter reconstruction in narrow batches, output-only sort)",
+      "q129_codec_decode" -> "real PGM/WAV decode (narrow typed mapPartitions batches, payloads never shuffled)",
+      "q130_png_decode" -> "real PNG decode (CRC'd chunk walk + JDK-zlib inflate + filter reconstruction in narrow batches)",
       "q131_json_extract" -> "semi-structured JSON extraction (from_json under the partial agg, payloads never shuffle)",
-      "q132_compression_signal" -> "compression-ratio curation signal (codegen'd deflate_len, map-only, output-only sort)",
-      "q133_bmp_decode" -> "real BMP decode (BGR/bottom-up/padded rows in narrow batches, order-sensitive wsum, output-only sort)",
+      "q132_compression_signal" -> "compression-ratio curation signal (codegen'd deflate_len, map-only)",
+      "q133_bmp_decode" -> "real BMP decode (BGR/bottom-up/padded rows in narrow batches, order-sensitive wsum)",
       "q134_hard_negatives" -> "hard-negative mining (capped 3-table band join, label filter on candidates, bounded top-3 partial)",
       "q135_negatives_recall" -> "hard-negative recall audit (exact different-label baseline on the anchor sample vs the banded miner)",
-      "q136_archive_explode" -> "archive-shard explode (real ZIP walk + per-entry inflate in narrow batches, output-only sort)",
-      "q137_tar_samples" -> "WebDataset tar-shard explode (checksummed ustar walk, in-worker stem grouping, output-only sort)",
+      "q136_archive_explode" -> "archive-shard explode (real ZIP walk + per-entry inflate in narrow batches)",
+      "q137_tar_samples" -> "WebDataset tar-shard explode (checksummed ustar walk, in-worker stem grouping)",
       // ---- the rest of the registry ----
       "q02_filter_project" -> "projection + pushed filter (scan-dominated plan, pruned ReadSchema)",
       "q06_semi_join" -> "left semi join (broadcast build side)",
@@ -161,24 +163,24 @@ object DumpPlans {
       "q79_semantic_clusters" -> "embedding-cosine near-dup clusters (banded pairs into q47's pointer-doubled CC)",
       "q87_asof_forward" -> "forward as-of join (q53's tag-union window with the direction flipped)",
       "q88_domain_stats" -> "URL/domain extraction + per-domain stats (one domain-key agg)",
-      "q138_jpeg_decode" -> "real JPEG decode via the JDK ImageIO reader (narrow batches, one reader handle per batch, output-only sort)",
+      "q138_jpeg_decode" -> "real JPEG decode via the JDK ImageIO reader (narrow batches, one reader handle per batch)",
       "q139_measured_salt_join" -> "measured salting: skew scout derives fan-out + hot set; hot-key-only salted join (decision rows oracle-checked)",
       // ---- media near-dup, HTML extraction, container fronts ----
       "q140_image_neardup" -> "perceptual image near-dup (real decode -> dHash limbs, banded Hamming bucket join, never all-pairs)",
       "q141_image_neardup_audit" -> "image near-dup recall audit (fixed-size anchor panel broadcast against the corpus — linear exact side)",
       "q142_html_extract" -> "HTML boilerplate extraction (jusText-shaped block gate as pure Column regex combinators, map-only)",
       "q143_url_canonicalize" -> "URL canonicalization + blocklist (map-only regex rules, broadcast blocklist dim, zero data shuffle)",
-      "q144_audio_decode" -> "real AIFF/AU decode via the JDK javax.sound readers (narrow batches, one provider scan per batch, output-only sort)",
+      "q144_audio_decode" -> "real AIFF/AU decode via the JDK javax.sound readers (narrow batches, one provider scan per batch)",
       "q145_prefix_join" -> "exact all-pairs Jaccard via prefix filtering (rarest-first prefixes index, lossless candidates, doc_id-keyed verify joins)",
-      "q146_audio_pitch" -> "autocorrelation pitch over decoded PCM (map-side decode + O(n*maxLag) integer DSP, output-only sort)",
+      "q146_audio_pitch" -> "autocorrelation pitch over decoded PCM (map-side decode + O(n*maxLag) integer DSP)",
       "q147_ranking_eval" -> "retrieval eval recall/MRR/NDCG@10 (bounded panel exact top-k, broadcast label dims, integer DCG weights)",
-      "q148_gif_decode" -> "real GIF decode via the JDK ImageIO LZW reader (hand-written encoder, narrow batches, palette-aware luma, output-only sort)",
+      "q148_gif_decode" -> "real GIF decode via the JDK ImageIO LZW reader (hand-written encoder, narrow batches, palette-aware luma)",
       "q149_sq8_recall" -> "int8 scalar-quantization recall audit (64-value broadcast scale vector, dequantized L2 vs exact L2 on the bounded panel)",
       "q150_line_dedup" -> "C4-style corpus-wide line dedup (digest-keyed shuffles, map-side-combined min keeper + equi join, no window)",
-      "q151_mp4_probe" -> "MP4/BMFF container probe (map-only pre-order box walk, payloads never shuffled, output-only sort)",
-      "q152_tiff_probe" -> "TIFF/EXIF IFD probe, both byte orders (map-only walk, ASCII offsets dereferenced, output-only sort)",
-      "q153_warc_members" -> "WARC-style multi-member gzip explode (per-member raw inflate + trailer verify, narrow walk, output-only sort)",
-      "q154_tfrecord" -> "TFRecord framing + protobuf wire walk (masked CRC32C per record, varint field scan, narrow, output-only sort)",
+      "q151_mp4_probe" -> "MP4/BMFF container probe (map-only pre-order box walk, payloads never shuffled)",
+      "q152_tiff_probe" -> "TIFF/EXIF IFD probe, both byte orders (map-only walk, ASCII offsets dereferenced)",
+      "q153_warc_members" -> "WARC-style multi-member gzip explode (per-member raw inflate + trailer verify, narrow walk)",
+      "q154_tfrecord" -> "TFRecord framing + protobuf wire walk (masked CRC32C per record, varint field scan, narrow)",
       "q155_audio_neardup" -> "perceptual audio near-dup (real decode -> energy-delta limbs, banded Hamming bucket join, never all-pairs)",
       "q156_audio_neardup_audit" -> "audio near-dup recall audit (fixed-size anchor panel broadcast against the corpus — linear exact side)",
       "q157_curation_v2" -> "composed curation v2 (broadcast URL blocklist -> q150 digest-keyed line dedup -> map-only signals; wide work = the line machinery only)",
@@ -203,12 +205,15 @@ object DumpPlans {
     sb.append("\nRegenerate: `sbt \"runMain graft.tools.DumpPlans\"`. ")
     sb.append(s"Covers all ${all.size} registered queries.\n")
     all.map(n => n -> notes(n)).foreach { case (name, why) =>
-      val df = SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name — $why\n\n```\n")
+      // a query that cannot be planned on this host (q24 without its
+      // reference CSVs) gets its failure as the entry, not a dead dump
+      val explained =
+        try SparkEntry.queries(name)(spark, dir).queryExecution
+          .explainString(org.apache.spark.sql.execution.FormattedMode)
+        catch { case NonFatal(e) => s"not planned here: ${e.getMessage}" }
       // embedded array literals (e.g. q43's IVF codebook) blow single
       // plan lines to tens of KB — cap them so the doc stays readable
-      val explained = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
       val capped = explained.linesIterator.map { l =>
         if (l.length > 300) l.take(300) + " … (line truncated)" else l
       }.mkString("\n")

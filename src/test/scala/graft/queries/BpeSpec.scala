@@ -29,7 +29,7 @@ class BpeSpec extends AnyFunSuite {
     Seq((1L, "aaaa aaaa aaaa bc bc de"))
       .toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val got = TextQueries.q81(spark, dir).collect()
+    val got = TextQueries.q81(spark, dir).orderBy("merge_rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
     assert(got == Seq(
@@ -55,7 +55,7 @@ class BpeSpec extends AnyFunSuite {
     // throw or return empty
     Seq((1L, "ab ab cd")).toDF("doc_id", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val merges = TextQueries.q81(spark, dir).collect()
+    val merges = TextQueries.q81(spark, dir).orderBy("merge_rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
     assert(merges == Seq((1, "a", "b", 2L), (2, "c", "d", 1L)),

@@ -41,9 +41,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the digest agg to shuffle")
     // map-side combine: at most one partial row per (key, partition),
-    // so never more shuffled rows than input docs (x2 for the final
-    // orderBy's range exchange re-shuffling the aggregated rows)
-    assert(s.writeRecords <= 2 * nDocs,
+    // so never more shuffled rows than input docs
+    assert(s.writeRecords <= nDocs,
       s"digest agg lost its partial phase: ${s.writeRecords} records " +
         s"shuffled for $nDocs docs")
     // digests-only: a shuffled row is a 32-char hex + two longs plus
@@ -62,9 +61,9 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     val s = ShuffleMeter.measure(spark) {
       TextQueries.q61(spark, dir).queryExecution.toRdd.count()
     }
-    // keeper agg + keeper join + final orderBy may each move a
-    // doc-count-sized set of narrow rows; none may move text
-    assert(s.writeRecords <= 6 * nDocs,
+    // keeper agg + keeper join may each move a doc-count-sized set
+    // of narrow rows; neither may move text
+    assert(s.writeRecords <= 4 * nDocs,
       s"curation shuffles ${s.writeRecords} records for $nDocs docs")
     val avgDoc = textBytes.toDouble / nDocs
     val avgRow = s.writeBytes.toDouble / s.writeRecords
@@ -93,10 +92,9 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       Relational.q53(spark, dir).queryExecution.toRdd.count()
     }
     // the union-window design: every event + every mark crosses the
-    // window exchange once; the result orderBy re-shuffles the events
-    // once more. A join-based as-of (or a lost union) would multiply
-    // records or add exchanges
-    assert(s.writeRecords <= (1.1 * (2 * nEv + nMarks)).toLong,
+    // window exchange once. A join-based as-of (or a lost union)
+    // would multiply records or add exchanges
+    assert(s.writeRecords <= (1.1 * (nEv + nMarks)).toLong,
       s"as-of shuffled ${s.writeRecords} records for $nEv events + " +
         s"$nMarks marks — the single-window design has regressed")
     // lower bound: the window exchange must move the whole union (a
@@ -175,8 +173,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       Relational.q87(spark, dir).queryExecution.toRdd.count()
     }
     // mirrored plan, identical budget law: one window exchange of the
-    // union plus the result orderBy — direction must not change cost
-    assert(s.writeRecords <= (1.1 * (2 * nEv + nMarks)).toLong,
+    // union — direction must not change cost
+    assert(s.writeRecords <= (1.1 * (nEv + nMarks)).toLong,
       s"forward as-of shuffled ${s.writeRecords} records for $nEv " +
         s"events + $nMarks marks — the mirrored plan has regressed")
     assert(s.writeRecords >= nEv + nMarks,
@@ -222,7 +220,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     // wide work = vocab agg (term partials), the per-doc agg (one
     // partial row per doc per partition — docs are not split, so ~one
-    // per doc), and the final orderBy; the exploded token stream
+    // per doc); the exploded token stream
     // itself must collapse map-side, never travel
     assert(s.writeRecords <= nToks / 2,
       s"q90 shuffled ${s.writeRecords} records for $nToks tokens — " +
@@ -272,9 +270,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     assert(s.writeRecords > 0, "expected the digest agg to shuffle")
     // normalization + both digests happen map-side; the distinct
     // rewrite keys partials by (h, raw_h), so bound records by the
-    // input rows across the two agg exchanges + the orderBy range
-    // exchange on the collapsed groups
-    assert(s.writeRecords <= 3 * nRows,
+    // input rows across the two agg exchanges
+    assert(s.writeRecords <= 2 * nRows,
       s"q95 shuffled ${s.writeRecords} records for $nRows planted rows " +
         "— a partial phase has been lost")
     val avgDoc = textBytes.toDouble / base.count()
@@ -293,7 +290,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the two sketch aggs to shuffle")
     // fine build: <= one partial sketch per (fine group, task);
-    // rollup + final sort: a handful of per-flag rows — never keys
+    // rollup: a handful of per-flag rows — never keys
     assert(s.writeRecords <= nKeys / 100,
       s"q96 shuffled ${s.writeRecords} rows for $nKeys distinct keys — " +
         "a sketch exchange is shipping keys, not registers")
@@ -330,7 +327,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the collect_set exchange")
     // partial collect_set dedups map-side: <= one bounded-array row
-    // per (user, task) + the tiny (cohort, week) agg + final sort —
+    // per (user, task) + the tiny (cohort, week) agg —
     // never a row per event
     val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
       .max(spark.sparkContext.defaultParallelism)
@@ -354,8 +351,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
       Relational.q99(spark, dir).queryExecution.toRdd.count()
     }
     // both sides pre-aggregate map-side: the agg exchanges carry at
-    // most one partial row per (nation, task); the outer join and
-    // final sort then move <= |nation| rows each. Never a row per
+    // most one partial row per (nation, task); the outer join then
+    // moves <= |nation| rows per side. Never a row per
     // customer/supplier.
     assert(s.writeRecords <= 4L * nNations * tasks,
       s"q99 shuffled ${s.writeRecords} records for $nNations nations — " +
@@ -372,11 +369,10 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the de-correlated join exchanges")
     // the rewrite is agg + join on c_nationkey: per-nation partials
-    // (<= nations x tasks), the join's two sides (<= 2n), and the
-    // filtered survivors' final sort (<= n) — the naive correlated
-    // form would be n subquery executions, not expressible as a
-    // bounded shuffle at all
-    assert(s.writeRecords <= 4L * nCust + nNations * tasks,
+    // (<= nations x tasks) and the join's two sides (<= 2n) — the
+    // naive correlated form would be n subquery executions, not
+    // expressible as a bounded shuffle at all
+    assert(s.writeRecords <= 3L * nCust + nNations * tasks,
       s"q100 shuffled ${s.writeRecords} records for $nCust customers — " +
         "the de-correlation has regressed")
     val avgRow = s.writeBytes.toDouble / s.writeRecords
@@ -447,7 +443,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     // map-side combine: <= one partial row per (key, task) for the
     // count agg (run once — eager persist; stats + top-10 read the
     // cache), + <= a task-count trickle for the single-row stats agg
-    // and the 14-row output sort. The raw event stream never moves.
+    // and the top-10's sort. The raw event stream never moves.
     assert(s.writeRecords <= tasks.toLong * nKeys + 4L * tasks + 100,
       s"q106 shuffled ${s.writeRecords} records for $nKeys keys — " +
         "the map-side partial count has been lost")
@@ -468,7 +464,7 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the candidate distinct exchange")
     // base text/shingles must never travel: every exchange (candidate
-    // pair distinct, base-id distinct, best-match agg, final sort) is
+    // pair distinct, base-id distinct, best-match agg) is
     // bounded by delta rows x 4 band keys x a small candidate fan-out
     assert(s.writeRecords <= 60L * nDelta + 400,
       s"q107 shuffled ${s.writeRecords} records for a $nDelta-doc " +
@@ -487,8 +483,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the top-1 partial exchange")
     // the corpus is scored in place against the broadcast eval suite;
-    // the only exchanges are the per-vector best-match partial (one
-    // row per corpus vector per task) and the flagged-set orderBy
+    // the only exchange is the per-vector best-match partial (one
+    // row per corpus vector per task)
     assert(s.writeRecords <= 2 * nVecs + 64,
       s"q113 shuffled ${s.writeRecords} records for $nVecs vectors — " +
         "the scored pair table is travelling through an exchange")
@@ -537,8 +533,8 @@ class ShuffleBudgetSpec extends AnyFunSuite {
     }
     assert(s.writeRecords > 0, "expected the centroid aggregate exchange")
     // every exchange is catalog-shaped: (source x 64-dim) integer
-    // partials, per-source centroid-gather lists, bottom-3 partials,
-    // and the 3-per-source output orderBy. The corpus itself reaches
+    // partials, per-source centroid-gather lists and bottom-3
+    // partials. The corpus itself reaches
     // the centroid agg as map-side partials — at most one row per
     // (source, dim) per task — and the rescore pass is map-only
     // against the broadcast centroids, so no record count here may

@@ -34,7 +34,7 @@ class WeightedSampleSpec extends AnyFunSuite {
           .map { case ((_, id, k), i) => (lang, i + 1, id, k) }
       }
       .sortBy { case (lang, rank, _, _) => (lang, rank) }
-    val got = TextQueries.q93(spark, dir).collect()
+    val got = TextQueries.q93(spark, dir).orderBy("lang", "rank").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got == expected)

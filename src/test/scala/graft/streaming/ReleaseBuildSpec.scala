@@ -150,4 +150,30 @@ class ReleaseBuildSpec extends AnyFunSuite {
       "the unescaped path must survive the manifest round-trip")
     assert(spark.read.parquet(m.keeperMap).count() == 1L)
   }
+
+  test("a release leaves nothing cached") {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val base = Seq(
+      (1L, words("ash", 12)),
+      // a planted near-dup pair, so the keeper map clusters something
+      (5L, words("oak", 20)),
+      (6L, words("oak", 20).replace("oak20", "oakzz")))
+      .toDF("doc_id", "text")
+    val lineBase = LineDedupStream.buildIndex(base)
+    val sigBase = NearDupStream.buildBaseIndex(base)
+    val lineGrow = Files.createTempDirectory("rb_lg4").toString
+    val sigGrow = Files.createTempDirectory("rb_sg4").toString
+    val root = Files.createTempDirectory("rb_nc").toString
+    // earlier suites share this JVM's session and may leave caches:
+    // clear them, then count only what the release adds
+    spark.catalog.clearCache()
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
+    ReleaseBuild.release(spark, base, lineBase, lineGrow, sigBase,
+      sigGrow, root)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the release left a CacheManager entry")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+    assert(leaked.isEmpty, s"the release left persisted RDDs: $leaked")
+  }
 }
