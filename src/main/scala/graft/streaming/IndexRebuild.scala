@@ -131,12 +131,19 @@ object IndexRebuild {
 
   /** Write the re-derived prefix index (ordered-sets + (s, df)) —
     * step 1 of the same stop/compact/restart/delete swap protocol.
+    * The (s, df) table is written first and the sets are ordered
+    * against the written table, so the shingle pass runs twice (once
+    * per write) instead of three times: ordering against the lazy
+    * (s, df) frame would recompute it inside the ordered write. The
+    * rows equal [[rebuiltPrefixIndex]]'s.
     */
   def compactPrefixIndex(docs: DataFrame, orderedOutPath: String,
       dfOutPath: String, shingleN: Int = 3): Unit = {
-    val (ordered, dfTbl) = rebuiltPrefixIndex(docs, shingleN)
-    ordered.write.mode(SaveMode.Overwrite).parquet(orderedOutPath)
-    dfTbl.write.mode(SaveMode.Overwrite).parquet(dfOutPath)
+    import graft.text.TextOps
+    val inv = TextOps.shingleInv(docs, shingleN)
+    TextOps.shingleDf(inv).write.mode(SaveMode.Overwrite).parquet(dfOutPath)
+    TextOps.orderedSets(inv, docs.sparkSession.read.parquet(dfOutPath))
+      .write.mode(SaveMode.Overwrite).parquet(orderedOutPath)
   }
 
   // ---- cluster-split keeper map (q124) ----

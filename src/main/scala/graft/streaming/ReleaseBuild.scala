@@ -1,6 +1,10 @@
 package graft.streaming
 
+import java.util.UUID
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, Future, TimeUnit}
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One-command corpus RELEASE build — the orchestration over
@@ -25,6 +29,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * authoritative and the torn directory inert — re-running the build
   * overwrites it and lands the manifest.
   *
+  * The four artifact steps run CONCURRENTLY: none reads another's
+  * output, so [[release]] submits them to a pool of four threads it
+  * creates and shuts down itself, waits for all four, and only then
+  * lands the manifest. Each step's jobs carry the caller's job group
+  * and description (the pool threads inherit the caller's local
+  * properties) plus two job tags: `graft.release.<step>` names the
+  * step, and a tag unique to this call lets a failure cancel the
+  * other steps' jobs. When a step or `afterArtifact` throws, the
+  * release cancels through that tag until every step has stopped,
+  * and only then rethrows: a re-run into the same manifest-less root
+  * never races a leftover writer.
+  *
   * Step 0 is the caller's (IndexRebuild's protocol): the admission
   * streams MUST be stopped before the build reads growth dirs, and
   * restarted against the new base paths with FRESH growth dirs
@@ -32,8 +48,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * 100 TB posture: the four rebuilds are the rebuilds' own documented
   * plans (distinct over digests; by-key union; buildPrefixIndex's
-  * shingle machinery; q47's pair+CC) — this file adds sequencing and
-  * the visibility swap, no new data movement.
+  * shingle machinery; q47's pair+CC) — this file adds the concurrent
+  * submission and the visibility swap, no new data movement. Running
+  * the steps side by side fills cores that one step's small jobs
+  * leave idle; on a cluster that one step already saturates, FIFO
+  * scheduling runs the earlier-submitted jobs' tasks first, so the
+  * steps degrade toward serial order.
   */
 object ReleaseBuild {
 
@@ -44,6 +64,11 @@ object ReleaseBuild {
   val PrefixDfPath = "prefix_df"
   val KeeperMapPath = "keeper_map"
   val ManifestName = "_MANIFEST.json"
+
+  /** Prefix of the job tag that names a release step
+    * (`graft.release.line_index`, ...).
+    */
+  val StepTagPrefix = "graft.release."
 
   /** Resolved release: absolute artifact paths, visible iff the
     * manifest landed.
@@ -94,7 +119,9 @@ object ReleaseBuild {
     * the caller's curated table); `baseLineIndex`/`baseSigIndex` +
     * their growth dirs are the line/signature services' current
     * state. `afterArtifact` is a test seam (crash injection between
-    * artifact writes); production callers leave it.
+    * artifact writes); production callers leave it. It runs on the
+    * caller's thread, once per step in the order line, signature,
+    * prefix, keeper map, each time after that step has finished.
     */
   def release(spark: SparkSession, docs: DataFrame,
       baseLineIndex: DataFrame, growLinePath: String,
@@ -112,19 +139,20 @@ object ReleaseBuild {
       s"release root already released (manifest present): $outRoot — " +
         "build into a NEW root; re-run only recovers crashed " +
         "(manifest-less) builds")
-    IndexRebuild.compactLineIndex(spark, baseLineIndex, growLinePath,
-      new Path(root, LinePath).toString)
-    afterArtifact(LinePath)
-    IndexRebuild.compactSignatureIndex(spark, baseSigIndex, growSigPath,
-      new Path(root, SignaturePath).toString)
-    afterArtifact(SignaturePath)
-    IndexRebuild.compactPrefixIndex(docs,
-      new Path(root, PrefixOrderedPath).toString,
-      new Path(root, PrefixDfPath).toString, shingleN)
-    afterArtifact(PrefixOrderedPath)
-    IndexRebuild.compactKeeperMap(docs,
-      new Path(root, KeeperMapPath).toString, minJaccard)
-    afterArtifact(KeeperMapPath)
+    // the steps resolve graft's functions from several threads at
+    // once: register them here, before any step starts
+    graft.functions.GraftFunctions.register(spark)
+    runSteps(spark.sparkContext, Seq(
+      LinePath -> (() => IndexRebuild.compactLineIndex(spark,
+        baseLineIndex, growLinePath, new Path(root, LinePath).toString)),
+      SignaturePath -> (() => IndexRebuild.compactSignatureIndex(spark,
+        baseSigIndex, growSigPath, new Path(root, SignaturePath).toString)),
+      PrefixOrderedPath -> (() => IndexRebuild.compactPrefixIndex(docs,
+        new Path(root, PrefixOrderedPath).toString,
+        new Path(root, PrefixDfPath).toString, shingleN)),
+      KeeperMapPath -> (() => IndexRebuild.compactKeeperMap(docs,
+        new Path(root, KeeperMapPath).toString, minJaccard))),
+      afterArtifact)
     // visibility swap: write-then-RENAME, the one atomic step
     val f = fs(spark, root)
     val tmp = new Path(root, s"$ManifestName.tmp")
@@ -139,6 +167,52 @@ object ReleaseBuild {
       sys.error(s"manifest rename failed: $tmp -> $fin")
     readManifest(spark, outRoot).getOrElse(
       sys.error(s"manifest unreadable after rename: $fin"))
+  }
+
+  /** Runs `steps` on a pool of one thread per step and calls
+    * `afterStep` on this thread, in `steps` order, as each finishes.
+    * On any failure it cancels the steps' jobs until every step has
+    * stopped, then rethrows the first failure.
+    */
+  private def runSteps(sc: SparkContext, steps: Seq[(String, () => Unit)],
+      afterStep: String => Unit): Unit = {
+    val cancelTag = s"graft.release-${UUID.randomUUID()}"
+    // threads start on submit, on this thread, so they inherit its
+    // local properties (job group, description, tags)
+    val pool = Executors.newFixedThreadPool(steps.size)
+    try {
+      val done = new ExecutorCompletionService[Unit](pool)
+      val futures: Seq[Future[Unit]] = steps.map { case (name, body) =>
+        done.submit { () =>
+          val tags = Seq(cancelTag, StepTagPrefix + name)
+          tags.foreach(sc.addJobTag)
+          try body() finally tags.foreach(sc.removeJobTag)
+        }
+      }
+      try {
+        var next = 0
+        while (next < steps.size) {
+          done.take().get() // the first failure surfaces as it lands
+          while (next < steps.size && futures(next).isDone) {
+            futures(next).get()
+            afterStep(steps(next)._1)
+            next += 1
+          }
+        }
+      } catch {
+        case t: Throwable =>
+          // a step between two jobs starts its next one after a
+          // single cancel, so cancel until every step has stopped
+          while (futures.exists(!_.isDone)) {
+            sc.cancelJobsWithTag(cancelTag, "another release step failed")
+            done.poll(50, TimeUnit.MILLISECONDS)
+          }
+          throw (t match {
+            case e: ExecutionException if e.getCause != null => e.getCause
+            case other => other
+          })
+      }
+    } finally pool.shutdown()
   }
 
   /** The release under `outRoot`, or None while no manifest landed

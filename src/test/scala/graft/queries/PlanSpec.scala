@@ -44,12 +44,10 @@ class PlanSpec extends AnyFunSuite {
       s"the blocklist dim must broadcast:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"q143 shuffles/materializes for a tiny dim:\n$p")
-    // the ONLY exchange is the final oracle orderBy (range partition);
-    // canonicalization itself is map-only
+    // canonicalization is map-only: the ONLY exchange is the
+    // blocklist's broadcast
     val exchanges = "Exchange".r.findAllIn(p).size
-    val range = "rangepartitioning".r.findAllIn(p.toLowerCase).size
-    assert(exchanges == range + 1, // +1: the broadcast exchange
-      s"q143 grew a data shuffle beyond the output sort:\n$p")
+    assert(exchanges == 1, s"q143 grew a data shuffle:\n$p")
   }
 
   test("q141 image audit: broadcast panel probe, never a cartesian") {
@@ -79,14 +77,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("SortMergeJoin"), s"q146 grew a join:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).size
-    val range = "rangepartitioning".r.findAllIn(p.toLowerCase).size
-    // + the scale-adaptive seed fan-out (ScanFanOut): one round-robin
-    // exchange of the (doc_id)-seed BEFORE payload construction —
-    // payloads are still born in their final partition and never
-    // shuffle; the exchange disappears at production scale
+    // the only exchange allowed is the scale-adaptive seed fan-out
+    // (ScanFanOut): one round-robin exchange of the (doc_id)-seed
+    // BEFORE payload construction — payloads are still born in their
+    // final partition and never shuffle; the exchange disappears at
+    // production scale
     val rr = "roundrobinpartitioning".r.findAllIn(p.toLowerCase).size
-    assert(exchanges == range + rr,
-      s"q146 grew a data shuffle beyond the output sort:\n$p")
+    assert(exchanges == rr, s"q146 grew a data shuffle:\n$p")
   }
 
   test("q148 GIF decode is narrow: payloads never shuffle") {
@@ -94,14 +91,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("SortMergeJoin"), s"q148 grew a join:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).size
-    val range = "rangepartitioning".r.findAllIn(p.toLowerCase).size
-    // + the scale-adaptive seed fan-out (ScanFanOut): one round-robin
-    // exchange of the (doc_id)-seed BEFORE payload construction —
-    // payloads are still born in their final partition and never
-    // shuffle; the exchange disappears at production scale
+    // the only exchange allowed is the scale-adaptive seed fan-out
+    // (ScanFanOut): one round-robin exchange of the (doc_id)-seed
+    // BEFORE payload construction — payloads are still born in their
+    // final partition and never shuffle; the exchange disappears at
+    // production scale
     val rr = "roundrobinpartitioning".r.findAllIn(p.toLowerCase).size
-    assert(exchanges == range + rr,
-      s"q148 grew a data shuffle beyond the output sort:\n$p")
+    assert(exchanges == rr, s"q148 grew a data shuffle:\n$p")
   }
 
   test("q147 ranking eval: broadcast label dims, bounded top-k, no window") {
@@ -140,14 +136,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") &&
       !p.contains("SortMergeJoin"), s"q151 grew a join:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).size
-    val range = "rangepartitioning".r.findAllIn(p.toLowerCase).size
-    // + the scale-adaptive seed fan-out (ScanFanOut): one round-robin
-    // exchange of the (doc_id)-seed BEFORE payload construction —
-    // payloads are still born in their final partition and never
-    // shuffle; the exchange disappears at production scale
+    // the only exchange allowed is the scale-adaptive seed fan-out
+    // (ScanFanOut): one round-robin exchange of the (doc_id)-seed
+    // BEFORE payload construction — payloads are still born in their
+    // final partition and never shuffle; the exchange disappears at
+    // production scale
     val rr = "roundrobinpartitioning".r.findAllIn(p.toLowerCase).size
-    assert(exchanges == range + rr,
-      s"q151 grew a data shuffle beyond the output sort:\n$p")
+    assert(exchanges == rr, s"q151 grew a data shuffle:\n$p")
   }
 
   test("q152/q153 container walks are narrow: payloads never shuffle") {
@@ -159,11 +154,9 @@ class PlanSpec extends AnyFunSuite {
       assert(!p.contains("CartesianProduct") &&
         !p.contains("SortMergeJoin"), s"$name grew a join:\n$p")
       val exchanges = "Exchange".r.findAllIn(p).size
-      val range = "rangepartitioning".r.findAllIn(p.toLowerCase).size
-      // + the ScanFanOut seed exchange (see q146's comment)
+      // only the ScanFanOut seed exchange (see q146's comment)
       val rr = "roundrobinpartitioning".r.findAllIn(p.toLowerCase).size
-      assert(exchanges == range + rr,
-        s"$name grew a data shuffle beyond the output sort:\n$p")
+      assert(exchanges == rr, s"$name grew a data shuffle:\n$p")
     }
   }
 
@@ -384,7 +377,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(VectorQueries.q40(spark, dir))
     // the full scored table must not travel through an exchange+sort:
     // the topk_by_score partial aggregate runs map-side, so the only
-    // exchanges are the k-row-per-query aggregate shuffle + orderBy
+    // exchange is the k-row-per-query aggregate shuffle
     assert(!p.contains("Window"), s"q40 ranks through a window again:\n$p")
     assert(p.contains("ObjectHashAggregate"),
       s"expected the typed top-k aggregate:\n$p")
@@ -392,14 +385,15 @@ class PlanSpec extends AnyFunSuite {
       s"top-k aggregate lost its partial (map-side) phase:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"q40 shuffles more than agg + orderBy:\n$p")
+    assert(exchanges <= 1, s"q40 shuffles more than the top-k agg:\n$p")
   }
 
   test("q113 decon probe: eval broadcasts, corpus never shuffles pre-agg") {
     val p = plan(VectorQueries.q113(spark, dir))
     // the q40 shape: broadcast nested loop against the fixed eval
     // suite is the pass's JOB; the corpus side must not shuffle and
-    // the best-match must be the bounded partial top-k, not a window
+    // the best-match must be the bounded partial top-k, not a window;
+    // its aggregate shuffle is the only exchange
     assert(p.contains("BroadcastNestedLoopJoin"), s"eval side must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"degenerate join:\n$p")
     assert(!p.contains("Window"), s"q113 ranks through a window:\n$p")
@@ -407,7 +401,7 @@ class PlanSpec extends AnyFunSuite {
       s"best-match aggregate lost its partial phase:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"q113 shuffles more than agg + orderBy:\n$p")
+    assert(exchanges <= 1, s"q113 shuffles more than the top-k agg:\n$p")
   }
 
   test("q114 outlier audit: centroids broadcast back, bottom-k is partial, no window") {
@@ -419,26 +413,26 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"), s"q114 ranks through a window:\n$p")
     assert("partial_topk_by_score".r.findFirstIn(p).isDefined,
       s"bottom-k aggregate lost its partial phase:\n$p")
-    // allowed shuffles: (source, dim) sums, centroid gather, the
-    // bottom-k per-source aggregate, and the output orderBy
+    // allowed shuffles: (source, dim) sums, centroid gather, and the
+    // bottom-k per-source aggregate
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 4, s"q114 shuffles beyond the centroid aggs:\n$p")
+    assert(exchanges <= 3, s"q114 shuffles beyond the centroid aggs:\n$p")
   }
 
-  test("q69 PQ encode is map-only: one exchange (the output orderBy)") {
+  test("q69 PQ encode is map-only: no exchange") {
     val p = plan(VectorQueries.q69(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 1, s"PQ encode must ride the scan:\n$p")
+    assert(exchanges == 0, s"PQ encode must ride the scan:\n$p")
     assert(p.contains("pq_encode"), s"expected the native encoder:\n$p")
   }
 
-  test("q74 residual PQ encode is map-only: one exchange (the output orderBy)") {
+  test("q74 residual PQ encode is map-only: no exchange") {
     val p = plan(VectorQueries.q74(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 1, s"residual encode must ride the scan:\n$p")
+    assert(exchanges == 0, s"residual encode must ride the scan:\n$p")
     assert(p.contains("ivf_residual") && p.contains("pq_encode"),
       s"expected the composed native encoders:\n$p")
     assert(!p.contains("Join"), s"the coarse assign must not plan a join:\n$p")
@@ -549,10 +543,10 @@ class PlanSpec extends AnyFunSuite {
     val probeAt = p.indexOf("bloom_probe")
     assert(probeAt > joinAt,
       s"bloom_probe is not below the join in the plan:\n$p")
-    // fact-side exchanges: only the final agg/orderBy may shuffle
+    // fact-side exchanges: only the final agg may shuffle
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"q77 shuffles more than agg + orderBy:\n$p")
+    assert(exchanges <= 1, s"q77 shuffles more than its agg:\n$p")
   }
 
   test("q70 ADC search ranks through the bounded top-k, scored rows never shuffle") {
@@ -564,7 +558,7 @@ class PlanSpec extends AnyFunSuite {
       s"q70 lost the map-side top-k phase:\n$p")
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"q70 shuffles more than agg + orderBy:\n$p")
+    assert(exchanges <= 1, s"q70 shuffles more than the top-k agg:\n$p")
   }
 
   test("q71 IVF+PQ search: map-only assign, broadcast probes, bounded top-k") {
@@ -574,11 +568,11 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("Window"), s"q71 ranks through a window:\n$p")
     assert("partial_topk_by_score".r.findFirstIn(p).isDefined,
       s"q71 lost the map-side top-k phase:\n$p")
-    // assignment + encode ride the scan; only the top-k aggregate and
-    // the output orderBy may exchange
+    // assignment + encode ride the scan; only the top-k aggregate may
+    // exchange
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"q71 shuffles beyond agg + orderBy:\n$p")
+    assert(exchanges <= 1, s"q71 shuffles beyond the top-k agg:\n$p")
   }
 
   test("q04 dimension join is a broadcast hash join") {
@@ -841,7 +835,7 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(ApproachQueries.q20(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    // one repartition(flight) + the final orderBy's range exchange
-    assert(exchanges <= 2, s"unexpected shuffles in approach pipeline:\n$p")
+    // the one repartition(flight)
+    assert(exchanges == 1, s"unexpected shuffles in approach pipeline:\n$p")
   }
 }

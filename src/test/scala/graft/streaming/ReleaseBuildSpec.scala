@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +19,7 @@ import graft.text.TextOps
   * artifacts equal admissions against base ∪ growth.
   */
 class ReleaseBuildSpec extends AnyFunSuite {
+  import ReleaseBuildSpec.JobSeen
 
   private lazy val spark = SparkSpec.spark
 
@@ -176,4 +181,127 @@ class ReleaseBuildSpec extends AnyFunSuite {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
     assert(leaked.isEmpty, s"the release left persisted RDDs: $leaked")
   }
+
+  /** Inputs of a release over a small corpus with a near-dup pair:
+    * (docs, line base, line growth dir, signature base, signature
+    * growth dir).
+    */
+  private def releaseInputs(tag: String) = {
+    import spark.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val docs = ((1L to 12L).map(i => (i, words(s"w${i}x", 16))) ++ Seq(
+        (50L, words("oak", 20)),
+        (51L, words("oak", 20).replace("oak20", "oakzz"))))
+      .toDF("doc_id", "text")
+    val lineGrow = Files.createTempDirectory(s"rb_lg_$tag").toString
+    val sigGrow = Files.createTempDirectory(s"rb_sg_$tag").toString
+    (docs, LineDedupStream.buildIndex(docs), lineGrow,
+      NearDupStream.buildBaseIndex(docs), sigGrow)
+  }
+
+  /** Records every job's start (step tag, job group, time) and end
+    * time while `body` runs, then waits until each recorded job has
+    * ended.
+    */
+  private def watchJobs(body: => Unit)
+      : (Map[Int, JobSeen], Map[Int, Long]) = {
+    val starts = new ConcurrentHashMap[Int, JobSeen]()
+    val ends = new ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).map(_.getProperty(k)).orNull
+        starts.put(e.jobId, JobSeen(
+          Option(prop("spark.job.tags")).toSet.flatMap((t: String) => t.split(",")),
+          prop("spark.jobGroup.id"), e.time))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ends.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.keySet.asScala.forall(ends.containsKey) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    (starts.asScala.toMap, ends.asScala.toMap)
+  }
+
+  test("the artifact steps run concurrently, under the caller's job group") {
+    val (docs, lineBase, lineGrow, sigBase, sigGrow) = releaseInputs("cc")
+    val root = Files.createTempDirectory("rb_cc").toString
+    val sc = spark.sparkContext
+    val (starts, ends) = watchJobs {
+      sc.setJobGroup("release-spec-group", "a release under a job group")
+      try ReleaseBuild.release(spark, docs, lineBase, lineGrow, sigBase,
+        sigGrow, root)
+      finally sc.clearJobGroup()
+    }
+    assert(ReleaseBuild.readManifest(spark, root).isDefined)
+    assert(starts.nonEmpty && starts.keySet == ends.keySet,
+      s"jobs started ${starts.keySet}, ended ${ends.keySet}")
+    val steps = Seq(ReleaseBuild.LinePath, ReleaseBuild.SignaturePath,
+      ReleaseBuild.PrefixOrderedPath, ReleaseBuild.KeeperMapPath)
+    def stepOf(j: JobSeen) =
+      steps.filter(s => j.tags.contains(ReleaseBuild.StepTagPrefix + s))
+    for ((id, j) <- starts) {
+      assert(j.group == "release-spec-group",
+        s"job $id ran outside the caller's job group: $j")
+      assert(stepOf(j).size == 1, s"job $id names no single step: $j")
+    }
+    assert(steps.forall(s => starts.values.exists(stepOf(_) == Seq(s))),
+      s"some step ran no job: ${starts.values.map(stepOf)}")
+    val spans = starts.toSeq.map { case (id, j) =>
+      (stepOf(j).head, j.start, ends(id)) }
+    val overlapping = for {
+      (sa, a0, a1) <- spans; (sb, b0, b1) <- spans
+      if sa < sb && a0 < b1 && b0 < a1
+    } yield (sa, sb)
+    assert(overlapping.nonEmpty,
+      s"no two steps' jobs overlapped in time: ${spans.sortBy(_._2)}")
+  }
+
+  test("a failed step: release stops every other step before it rethrows") {
+    val (docs, lineBase, lineGrow, sigBase, sigGrow) = releaseInputs("fs")
+    val root = Files.createTempDirectory("rb_fs").toString
+    val sc = spark.sparkContext
+    var thrownAt = 0L
+    var activeAtThrow = Seq.empty[Int]
+    val (starts, _) = watchJobs {
+      val e = intercept[RuntimeException] {
+        ReleaseBuild.release(spark, docs, lineBase, lineGrow, sigBase,
+          sigGrow, root, afterArtifact = {
+            case ReleaseBuild.LinePath => sys.error("injected step failure")
+            case _ => ()
+          })
+      }
+      thrownAt = System.currentTimeMillis()
+      assert(e.getMessage.contains("injected step failure"))
+      // the status store hears of a job's end through the listener
+      // bus, a few milliseconds after its waiter
+      val deadline = System.nanoTime() + 500L * 1000000L
+      while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(5)
+      activeAtThrow = sc.statusTracker.getActiveJobIds.toSeq
+      // a step left running would start its next job within this
+      Thread.sleep(1500)
+    }
+    assert(activeAtThrow.isEmpty, s"jobs still active: $activeAtThrow")
+    val late = starts.filter(_._2.start > thrownAt).map { case (id, j) =>
+      id -> j.tags.filter(_.startsWith(ReleaseBuild.StepTagPrefix)) }
+    assert(late.isEmpty, s"jobs started after release threw: $late")
+    assert(ReleaseBuild.readManifest(spark, root).isEmpty,
+      "a failed release must land no manifest")
+    val m = ReleaseBuild.release(spark, docs, lineBase, lineGrow, sigBase,
+      sigGrow, root)
+    assert(ReleaseBuild.readManifest(spark, root).contains(m))
+    assert(spark.read.parquet(m.keeperMap).count() == 14L)
+  }
+}
+
+object ReleaseBuildSpec {
+  /** A job's tags, job group and start time, as a listener saw it. */
+  private final case class JobSeen(tags: Set[String], group: String,
+      start: Long)
 }
