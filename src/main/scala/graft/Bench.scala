@@ -12,7 +12,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     // warm-up: exercise the scan/codegen/JIT paths once so the first
     // timed query doesn't absorb ~5-8 s of one-time cost, and run the
     // one-time bucketed-table prep (setup a warehouse amortizes over

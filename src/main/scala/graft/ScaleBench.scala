@@ -364,7 +364,6 @@ object ScaleBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     buildScaled(spark, sfDir, out, factor)
     // warm-up at the small SF (JIT/codegen, not measured)
     SparkEntry.queries("q12_topk")(spark, sfDir).count()

@@ -20,10 +20,18 @@ object SparkEntry {
     * `sortWithinPartitions`. No query sorts only to present its
     * result; a caller that wants an order applies `orderBy` itself.
     * The oracle compare sorts both sides' rows before comparing.
+    *
+    * The caller may hand in a session graft did not build, so each
+    * entry first registers the native functions that session lacks.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ ApproachQueries.queries ++ TextQueries.queries ++
-      VectorQueries.queries ++ MultimodalQueries.queries
+    (Relational.queries ++ ApproachQueries.queries ++ TextQueries.queries ++
+      VectorQueries.queries ++ MultimodalQueries.queries).map { case (name, q) =>
+      name -> ((spark: SparkSession, dir: String) => {
+        graft.functions.GraftFunctions.register(spark)
+        q(spark, dir)
+      })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -38,7 +38,6 @@ object Verify {
     sys.env.get("SPARK_GRAFT_JARS").foreach(builder.config("spark.jars", _))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     dump(spark, sfDir, outDir, SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_(n)) })
     // the banded-alignment oracle is regenerated at the SRP plane

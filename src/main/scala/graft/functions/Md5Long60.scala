@@ -2,9 +2,13 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
+import scala.reflect.{classTag, ClassTag}
+
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -147,242 +151,100 @@ case class ShingleHash60(child: Expression, n: Int)
     copy(child = newChild)
 }
 
-/** Session wiring for the engine's native functions. Call once per
-  * SparkSession (Verify/Bench/tests do); queries reach the functions
-  * via `call_function("md5_long60", col)` /
+/** The engine's 16 native session functions, listed once. Both install
+  * routes read this table: [[GraftExtensions]] injects it when a
+  * session is built, and [[GraftFunctions.register]] adds whatever a
+  * session built elsewhere lacks. Queries reach the functions by name,
+  * e.g. `call_function("md5_long60", col)` /
   * `call_function("shingle_hash60", toks, lit(n))`.
   */
 object GraftFunctions {
-  private val shingleBuilder: Seq[Expression] => Expression = {
-    case Seq(toks, Literal(n: Int, IntegerType)) => ShingleHash60(toks, n)
-    case other => throw new IllegalArgumentException(
-      s"shingle_hash60(toks, <int literal>) — got $other")
-  }
+  private def fn[E <: Expression: ClassTag](name: String, usage: String)(
+      build: PartialFunction[Seq[Expression], E])
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name),
+      (exprs: Seq[Expression]) => build.applyOrElse(exprs,
+        (other: Seq[Expression]) => throw new IllegalArgumentException(
+          s"$name$usage — got $other")))
 
-  private val md5Builder: Seq[Expression] => Expression = {
-    case Seq(s) => Md5Long60(s)
-    case other => throw new IllegalArgumentException(
-      s"md5_long60(<string>) takes exactly one argument — got ${other.length}")
-  }
+  private[functions] val table
+      : Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("md5_long60", "(<string>) takes exactly one argument") {
+      case Seq(s) => Md5Long60(s)
+    },
+    fn("shingle_hash60", "(toks, <int literal n>)") {
+      case Seq(toks, Literal(n: Int, IntegerType)) => ShingleHash60(toks, n)
+    },
+    fn("dot_f64",
+        "(<array<double>>, <array<double>>) takes exactly two arguments") {
+      case Seq(a, b) => DotF64(a, b)
+    },
+    fn("topk_by_score", "(score, id, <int literal k>)") {
+      case Seq(score, id, Literal(k: Int, IntegerType)) => TopKByScore(score, id, k)
+    },
+    fn("collect_members_capped", "(doc_id, n_sh, <integral literal cap>)") {
+      case Seq(id, nsh, Literal(c: Long, LongType)) =>
+        CollectMembersCapped(id, nsh, c)
+      case Seq(id, nsh, Literal(c: Int, IntegerType)) =>
+        CollectMembersCapped(id, nsh, c.toLong)
+    },
+    fn("rep_stats2", "(<array<string>>) takes exactly one argument") {
+      case Seq(toks) => RepStats2(toks)
+    },
+    fn("bloom_build", "(key, <int literal mBits>, <int literal k>)") {
+      case Seq(key, Literal(m: Int, IntegerType), Literal(k: Int, IntegerType)) =>
+        BloomBuild(key, m, k)
+    },
+    fn("cms_build", "(key, <int literal w>, <int literal d>)") {
+      case Seq(key, Literal(w: Int, IntegerType), Literal(d: Int, IntegerType)) =>
+        CmsBuild(key, w, d)
+    },
+    fn("hll_build", "(key, <int literal p>)") {
+      case Seq(key, Literal(p: Int, IntegerType)) => HllBuild(key, p)
+    },
+    fn("hll_merge", "(<binary sketch>) takes exactly one argument") {
+      case Seq(sk) => HllMerge(sk)
+    },
+    fn("hll_card", "(<binary sketch>) takes exactly one argument") {
+      case Seq(sk) => HllCard(sk)
+    },
+    fn("hll_regsum", "(<binary sketch>) takes exactly one argument") {
+      case Seq(sk) => HllRegSum(sk)
+    },
+    fn("char_gram_stats", "(text, <int literal n>)") {
+      case Seq(text, Literal(n: Int, IntegerType)) => CharGramStats(text, n)
+    },
+    fn("simhash64", "(<array<string>>) takes exactly one argument") {
+      case Seq(toks) => SimHash64(toks)
+    },
+    fn("nfc_normalize", "(<string>) takes exactly one argument") {
+      case Seq(s) => NfcNormalize(s)
+    },
+    fn("deflate_len", "(<string>) takes exactly one argument") {
+      case Seq(s) => DeflateLen(s)
+    })
 
-  private[functions] val nfcBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => NfcNormalize(s)
-    case other => throw new IllegalArgumentException(
-      s"nfc_normalize(<string>) takes exactly one argument — " +
-        s"got ${other.length}")
-  }
-
-  private val deflateBuilder: Seq[Expression] => Expression = {
-    case Seq(s) => DeflateLen(s)
-    case other => throw new IllegalArgumentException(
-      s"deflate_len(<string>) takes exactly one argument — got ${other.length}")
-  }
-
-  private val dotBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => DotF64(a, b)
-    case other => throw new IllegalArgumentException(
-      s"dot_f64(<array<double>>, <array<double>>) takes exactly two " +
-        s"arguments — got ${other.length}")
-  }
-
-  private val topkBuilder: Seq[Expression] => Expression = {
-    case Seq(score, id, Literal(k: Int, IntegerType)) => TopKByScore(score, id, k)
-    case other => throw new IllegalArgumentException(
-      s"topk_by_score(score, id, <int literal k>) — got $other")
-  }
-
-  private[functions] val collectMembersBuilder: Seq[Expression] => Expression = {
-    case Seq(id, nsh, Literal(c: Long, LongType)) =>
-      CollectMembersCapped(id, nsh, c)
-    case Seq(id, nsh, Literal(c: Int, IntegerType)) =>
-      CollectMembersCapped(id, nsh, c.toLong)
-    case other => throw new IllegalArgumentException(
-      s"collect_members_capped(doc_id, n_sh, <integral literal cap>) — " +
-        s"got $other")
-  }
-
+  /** Registers the functions `spark`'s registry lacks, and nothing
+    * else: a session that already carries them (every
+    * [[graft.GraftSession]] session) is left untouched. Only a session
+    * built without [[GraftExtensions]] needs this call.
+    */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "md5_long60", md5Builder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "shingle_hash60", shingleBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "dot_f64", dotBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "topk_by_score", topkBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "collect_members_capped", collectMembersBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "rep_stats2", repStatsBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "bloom_build", bloomBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "cms_build", cmsBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "hll_build", hllBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "hll_merge", hllMergeBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "hll_card", hllCardBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "hll_regsum", hllRegSumBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "char_gram_stats", charGramBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "simhash64", simHash64Builder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "nfc_normalize", nfcBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "deflate_len", deflateBuilder, "built-in")
-  }
-
-  private val bloomBuilder: Seq[Expression] => Expression = {
-    case Seq(key, Literal(m: Int, IntegerType), Literal(k: Int, IntegerType)) =>
-      BloomBuild(key, m, k)
-    case other => throw new IllegalArgumentException(
-      s"bloom_build(key, <int literal mBits>, <int literal k>) — got $other")
-  }
-
-  private[functions] val cmsBuilder: Seq[Expression] => Expression = {
-    case Seq(key, Literal(w: Int, IntegerType), Literal(d: Int, IntegerType)) =>
-      CmsBuild(key, w, d)
-    case other => throw new IllegalArgumentException(
-      s"cms_build(key, <int literal w>, <int literal d>) — got $other")
-  }
-
-  private[functions] val hllBuilder: Seq[Expression] => Expression = {
-    case Seq(key, Literal(p: Int, IntegerType)) => HllBuild(key, p)
-    case other => throw new IllegalArgumentException(
-      s"hll_build(key, <int literal p>) — got $other")
-  }
-
-  private[functions] val hllMergeBuilder: Seq[Expression] => Expression = {
-    case Seq(sk) => HllMerge(sk)
-    case other => throw new IllegalArgumentException(
-      s"hll_merge(<binary sketch>) takes exactly one argument — " +
-        s"got ${other.length}")
-  }
-
-  private[functions] val hllCardBuilder: Seq[Expression] => Expression = {
-    case Seq(sk) => HllCard(sk)
-    case other => throw new IllegalArgumentException(
-      s"hll_card(<binary sketch>) takes exactly one argument — " +
-        s"got ${other.length}")
-  }
-
-  private[functions] val hllRegSumBuilder: Seq[Expression] => Expression = {
-    case Seq(sk) => HllRegSum(sk)
-    case other => throw new IllegalArgumentException(
-      s"hll_regsum(<binary sketch>) takes exactly one argument — " +
-        s"got ${other.length}")
-  }
-
-  private[functions] val charGramBuilder: Seq[Expression] => Expression = {
-    case Seq(text, Literal(n: Int, IntegerType)) => CharGramStats(text, n)
-    case other => throw new IllegalArgumentException(
-      s"char_gram_stats(text, <int literal n>) — got $other")
-  }
-
-  private[functions] val simHash64Builder: Seq[Expression] => Expression = {
-    case Seq(toks) => SimHash64(toks)
-    case other => throw new IllegalArgumentException(
-      s"simhash64(<array<string>>) takes exactly one argument — " +
-        s"got ${other.length}")
-  }
-
-  private val repStatsBuilder: Seq[Expression] => Expression = {
-    case Seq(toks) => RepStats2(toks)
-    case other => throw new IllegalArgumentException(
-      s"rep_stats2(<array<string>>) takes exactly one argument — " +
-        s"got ${other.length}")
+    table.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
+    }
   }
 }
 
-/** Standard extension hook: users of the library outside our own
-  * mains get the native functions with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`), the idiomatic
-  * SparkSessionExtensions injection path.
+/** Injects [[GraftFunctions]]' table into every session built with it:
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, or
+  * `.withExtensions(new GraftExtensions)` as [[graft.GraftSession]]
+  * does. Sessions cloned from such a session (`newSession()`, a
+  * streaming query's batch session) carry the functions too.
   */
-class GraftExtensions
-    extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((FunctionIdentifier("md5_long60"),
-      new ExpressionInfo(classOf[Md5Long60].getName, "md5_long60"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(s) => Md5Long60(s)
-        case other => throw new IllegalArgumentException(
-          s"md5_long60(<string>) takes exactly one argument — got ${other.length}")
-      }))
-    ext.injectFunction((FunctionIdentifier("shingle_hash60"),
-      new ExpressionInfo(classOf[ShingleHash60].getName, "shingle_hash60"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(toks, Literal(n: Int, IntegerType)) => ShingleHash60(toks, n)
-        case other => throw new IllegalArgumentException(
-          s"shingle_hash60(toks, <int literal>) — got $other")
-      }))
-    ext.injectFunction((FunctionIdentifier("dot_f64"),
-      new ExpressionInfo(classOf[DotF64].getName, "dot_f64"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => DotF64(a, b)
-        case other => throw new IllegalArgumentException(
-          s"dot_f64(<array<double>>, <array<double>>) takes exactly two " +
-            s"arguments — got ${other.length}")
-      }))
-    ext.injectFunction((FunctionIdentifier("topk_by_score"),
-      new ExpressionInfo(classOf[TopKByScore].getName, "topk_by_score"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(score, id, Literal(k: Int, IntegerType)) =>
-          TopKByScore(score, id, k)
-        case other => throw new IllegalArgumentException(
-          s"topk_by_score(score, id, <int literal k>) — got $other")
-      }))
-    ext.injectFunction((FunctionIdentifier("collect_members_capped"),
-      new ExpressionInfo(classOf[CollectMembersCapped].getName,
-        "collect_members_capped"),
-      GraftFunctions.collectMembersBuilder))
-    ext.injectFunction((FunctionIdentifier("rep_stats2"),
-      new ExpressionInfo(classOf[RepStats2].getName, "rep_stats2"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(toks) => RepStats2(toks)
-        case other => throw new IllegalArgumentException(
-          s"rep_stats2(<array<string>>) takes exactly one argument — " +
-            s"got ${other.length}")
-      }))
-    ext.injectFunction((FunctionIdentifier("bloom_build"),
-      new ExpressionInfo(classOf[BloomBuild].getName, "bloom_build"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(key, Literal(m: Int, IntegerType), Literal(k: Int, IntegerType)) =>
-          BloomBuild(key, m, k)
-        case other => throw new IllegalArgumentException(
-          s"bloom_build(key, <int literal mBits>, <int literal k>) — got $other")
-      }))
-    ext.injectFunction((FunctionIdentifier("cms_build"),
-      new ExpressionInfo(classOf[CmsBuild].getName, "cms_build"),
-      GraftFunctions.cmsBuilder)) // one builder, both injection paths
-    ext.injectFunction((FunctionIdentifier("hll_build"),
-      new ExpressionInfo(classOf[HllBuild].getName, "hll_build"),
-      GraftFunctions.hllBuilder))
-    ext.injectFunction((FunctionIdentifier("hll_merge"),
-      new ExpressionInfo(classOf[HllMerge].getName, "hll_merge"),
-      GraftFunctions.hllMergeBuilder))
-    ext.injectFunction((FunctionIdentifier("hll_card"),
-      new ExpressionInfo(classOf[HllCard].getName, "hll_card"),
-      GraftFunctions.hllCardBuilder))
-    ext.injectFunction((FunctionIdentifier("hll_regsum"),
-      new ExpressionInfo(classOf[HllRegSum].getName, "hll_regsum"),
-      GraftFunctions.hllRegSumBuilder))
-    ext.injectFunction((FunctionIdentifier("char_gram_stats"),
-      new ExpressionInfo(classOf[CharGramStats].getName, "char_gram_stats"),
-      GraftFunctions.charGramBuilder))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      GraftFunctions.simHash64Builder))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      GraftFunctions.nfcBuilder))
-  }
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach(ext.injectFunction)
 }

@@ -1166,7 +1166,6 @@ object Relational {
   // shapes; this form is explicit, deterministic, and the filter is a
   // first-class VALUE (persist it, reuse it across queries).
   def q77(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val dim = tbl(spark, dir, "part")
       .filter(col("p_brand") === "Brand#13")
       .select(col("p_partkey"), col("p_brand"))
@@ -1219,7 +1218,6 @@ object Relational {
   // far above the 2.5m linear-counting threshold, so the oracle
   // replays registers, checksum, and estimate bit-for-bit.
   def q84(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // scale-adaptive fan-out: the witness's multi-distinct
     // Expand + the per-row hll_build digest both run in the scan
     // stage — serial on the one-rowgroup fixture (the sketch's
@@ -1387,7 +1385,6 @@ object Relational {
   // merged grid must match it byte-for-byte (reg_sum pins every
   // register, hll_nd the estimator arithmetic).
   def q96(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // the stored fine-grained sketch table (one 132-byte sketch per
     // (flag, linestatus)) — built once here, persisted in production
     val fine = tbl(spark, dir, "lineitem")

@@ -42,7 +42,6 @@ object TextQueries {
     * same salt, so the cut must not be re-spelled per query.
     */
   private def splitBucket(spark: SparkSession): Column = {
-    graft.functions.GraftFunctions.register(spark)
     call_function("md5_long60",
       concat(lit("split:"), col("doc_id").cast("string"))) % 100
   }
@@ -134,7 +133,6 @@ object TextQueries {
   // Both engines carry the same floor, so parity is by construction,
   // not by corpus luck.
   def q31(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = withNearCopies(tbl(spark, dir, "documents"))
       .withColumn("sh", hashedShingles(toks, 5))
       .filter(size(col("sh")) > 0)
@@ -241,7 +239,6 @@ object TextQueries {
   // Staged: the token md5 pass lands in a named column evaluated once
   // per row; the 16 bit-vote aggregates then scan the small int array.
   def q32(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     tbl(spark, dir, "documents")
       .select(col("doc_id"), tokenHashes16(toks).as("__tv"))
       .select(col("doc_id"),
@@ -273,7 +270,6 @@ object TextQueries {
   // composed identically in both engines, so the full width is
   // hash-checked.
   def q49(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     TextOps.withSimHash64(
       tbl(spark, dir, "documents").select(col("doc_id"), col("text")),
       col("text"), "simhash64")
@@ -458,7 +454,6 @@ object TextQueries {
     // the composed HOF form re-scanned the string per substr and
     // evaluated the gram array per output column — 8.6 s at sf0.1
     // under as-declared timing; this is one codegen'd call per row
-    graft.functions.GraftFunctions.register(spark)
     tbl(spark, dir, "documents")
       .select(col("doc_id"),
         call_function("char_gram_stats", col("text"), lit(8)).as("s"))
@@ -594,7 +589,6 @@ object TextQueries {
   // (hot-bucket-capped, never all-pairs), per-pair arithmetic, then
   // a 9-row aggregate with map-side partials.
   def q127(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = withNearCopies(tbl(spark, dir, "documents"))
       .withColumn("sh", hashedShingles(toks, 5))
       .filter(size(col("sh")) > 0)
@@ -739,7 +733,6 @@ object TextQueries {
   // same one-definition salt family as q46/q58/q61 — the leakage
   // story still depends on every query cutting at the same boundary.
   def q124(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = withNearCopies(tbl(spark, dir, "documents"))
     val clusters = graft.text.TextOps.dedupClusters(
       graft.text.TextOps.jaccardPairs(docs, 0.5))
@@ -824,7 +817,6 @@ object TextQueries {
   // filter cuts I/O before any downstream op. Emits the bucket so
   // the oracle checks the hash arithmetic, not just the decision.
   def q57(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val bucket = (call_function("md5_long60",
       concat(lit("mix:"), col("doc_id").cast("string"))) % 10000)
     val rate = when(col("lang") === "en", 8000L)
@@ -1057,7 +1049,6 @@ object TextQueries {
   // struct per element per row (both ~3.1 s at sf0.1; the native
   // expression is sub-second).
   def q64(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     tbl(spark, dir, "documents")
       // the length guard runs on the cheap token count BEFORE the
       // stats projection — a filter on st.n_2grams would be pushed
@@ -1197,7 +1188,6 @@ object TextQueries {
   // the form quota-based data mixing needs. Distinct salt from
   // q46/q57: sample, split, and mix decisions stay independent.
   def q68(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     tbl(spark, dir, "documents")
       .select(col("lang"), col("doc_id"),
         call_function("md5_long60",
@@ -1302,7 +1292,6 @@ object TextQueries {
     stageCorpus(spark, dir, "jsonl")(graft.sources.Jsonl.writeJsonl)
 
   def q73(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val path = prepareJsonlCorpus(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
@@ -1339,7 +1328,6 @@ object TextQueries {
     stageCorpus(spark, dir, "orc")(graft.sources.Orc.writeOrc)
 
   def q92(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val path = prepareOrcCorpus(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
@@ -1888,7 +1876,6 @@ object TextQueries {
   // driver receives k rows per stratum. The full-sort window form
   // this replaces shuffles every scored row per stratum.
   def q93(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val h = call_function("md5_long60",
       concat(lit("wsamp:"), col("doc_id").cast("string")))
     val u = (h + 1).cast("double") / lit(1152921504606846976.0) // 2^60
@@ -1947,7 +1934,6 @@ object TextQueries {
   // never does (the raw-variant count is a digest countDistinct for
   // the same reason).
   def q95(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = tbl(spark, dir, "documents")
       .filter(col("text").isNotNull).select(col("doc_id"), col("text"))
     val every37 = docs.filter(col("doc_id") % 37 === 0)
@@ -2185,7 +2171,6 @@ object TextQueries {
   // collision-only overestimates. At 100 TB the exact groupBy holds
   // every distinct key; the sketch answers in 32 KB.
   def q83(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val w = 1 << 10
     val d = 4
     val words = tbl(spark, dir, "documents")
@@ -2325,7 +2310,6 @@ object TextQueries {
   // The only exchanges are delta-sized (candidate distinct + best-of
   // aggregate); ReuseExchange dedupes the shared candidate broadcast.
   def q107(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val docs = tbl(spark, dir, "documents")
     val delta = q107Delta(docs)
     nearDupVerdicts(delta.select(col("doc_id")),
@@ -2495,7 +2479,6 @@ object TextQueries {
   // map-only score, zero shuffles before the oracle-determinism sort)
   // is identical.
   def q108(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val D = 4096
     def wInt(b: Column): Column = (b * 2654435761L) % 8191L - 4095L
     tbl(spark, dir, "documents")
@@ -2611,7 +2594,6 @@ object TextQueries {
   // map-side, and the global cut riding the bounded topk_by_score
   // partial aggregate — ≤ k rows per task cross the final exchange.
   def q110(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val Offset = 50000000L
     val docs = tbl(spark, dir, "documents")
     val tok = docs.select(col("doc_id"), col("lang"),
@@ -3117,7 +3099,6 @@ object TextQueries {
   // bytes, and the output is 4 narrow columns — the payload never
   // shuffles.
   def q132(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val id = col("doc_id")
     val body = when(id % 2 === 0,
         repeat(lit("the quick data pipeline "), (lit(8) + id % 17).cast("int")))
@@ -3928,7 +3909,6 @@ object TextQueries {
   def q158(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.text.Html
-    graft.functions.GraftFunctions.register(spark)
     val id = col("doc_id")
     val s = (c: Column) => c.cast("string")
     val base = tbl(spark, dir, "documents")
@@ -4226,7 +4206,6 @@ object TextQueries {
     import spark.implicits._
     import graft.text.{Html, Urls}
     import graft.multimodal.Archives
-    graft.functions.GraftFunctions.register(spark)
     val id = col("doc_id")
     val base = tbl(spark, dir, "documents")
     val shards = base
@@ -4630,7 +4609,6 @@ object TextQueries {
     import spark.implicits._
     import graft.text.{Html, Urls}
     import graft.multimodal.Archives
-    graft.functions.GraftFunctions.register(spark)
     val id = col("doc_id")
     val base = tbl(spark, dir, "documents")
     val shards = base.select(expr("doc_id DIV 4").as("shard_id"), id,
@@ -4731,7 +4709,6 @@ object TextQueries {
     import spark.implicits._
     import graft.text.{Html, Urls}
     import graft.multimodal.Archives
-    graft.functions.GraftFunctions.register(spark)
     val id = col("doc_id")
     val corpus = withNearCopies(tbl(spark, dir, "documents"))
     val shards = corpus
@@ -4825,7 +4802,6 @@ object TextQueries {
     import spark.implicits._
     import graft.text.{Html, Urls}
     import graft.multimodal.GzipMembers
-    graft.functions.GraftFunctions.register(spark)
     val id = col("doc_id")
     val base = tbl(spark, dir, "documents")
     val shards = base.select(expr("doc_id DIV 6").as("shard_id"), id,

@@ -26,10 +26,6 @@ object VectorQueries {
 
   /** The embeddings as (vec_id, v: array<double>). */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
-    // every vector query funnels through here: registering the native
-    // dot_f64 at the source keeps each query self-contained (no
-    // execution-order dependency on another query having registered)
-    graft.functions.GraftFunctions.register(spark)
     tbl(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
   }
@@ -1397,7 +1393,6 @@ object VectorQueries {
     */
   private[graft] def alignSides(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(spark)
     val e = tbl(spark, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"), col("label"))
     val a = withNorm(e.filter(col("label") < 5)
@@ -2104,7 +2099,6 @@ object VectorQueries {
   // adaptive shape) and the oracle CTE must be regenerated with the
   // same tables; the gate never runs there.
   def q134(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val banded = tbl(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         asDouble(col("embedding")).as("v"))
@@ -2195,7 +2189,6 @@ object VectorQueries {
   // bounded topk_by_score partial; the overlap join carries 3 ids per
   // anchor. The production path re-runs q134 itself, unchanged.
   def q135(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val all = tbl(spark, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         asDouble(col("embedding")).as("v"))

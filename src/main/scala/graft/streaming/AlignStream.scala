@@ -82,7 +82,6 @@ object AlignStream {
       bandedY: DataFrame, yCal: DataFrame,
       tables: Seq[Seq[Seq[Double]]], outPath: String,
       checkpointDir: String): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     xs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -63,7 +63,6 @@ object DeconStream {
   def screenStream(spark: SparkSession, vecs: DataFrame,
       evalIdx: DataFrame, outPath: String,
       checkpointDir: String): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     vecs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -47,7 +47,6 @@ object EmbDriftStream {
   def batchPartials(spark: SparkSession, docs: DataFrame,
       cents: DataFrame, partialsPath: String,
       checkpointDir: String): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -175,7 +175,6 @@ object IndexRebuild {
   /** The near-dup (id, label) clusters of `docs`, as a persisted frame
     * the caller unpersists ([[graft.text.TextOps.dedupClusters]]). */
   private def clusters(docs: DataFrame, minJaccard: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     graft.text.TextOps.dedupClusters(
       graft.text.TextOps.jaccardPairs(docs, minJaccard))
   }

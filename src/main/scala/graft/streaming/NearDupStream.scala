@@ -78,7 +78,6 @@ object NearDupStream {
   def admissionStream(spark: SparkSession, docs: DataFrame,
       baseIndex: DataFrame, outPath: String,
       checkpointDir: String, growIndexPath: String = null): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

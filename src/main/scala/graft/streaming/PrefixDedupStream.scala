@@ -65,7 +65,6 @@ object PrefixDedupStream {
   def admissionStream(spark: SparkSession, docs: DataFrame,
       baseOrdered: DataFrame, baseDf: DataFrame, outPath: String,
       checkpointDir: String, shingleN: Int = 3): StreamingQuery = {
-    graft.functions.GraftFunctions.register(spark)
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

@@ -45,7 +45,6 @@ object QualityStream {
       sourceCol: String, textCol: String,
       windowLen: String = "1 hour", watermark: String = "2 hours")
       : DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowLen),
         col(sourceCol).as("source"))

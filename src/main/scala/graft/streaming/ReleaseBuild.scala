@@ -122,6 +122,9 @@ object ReleaseBuild {
     * artifact writes); production callers leave it. It runs on the
     * caller's thread, once per step in the order line, signature,
     * prefix, keeper map, each time after that step has finished.
+    * The steps resolve graft's functions from several threads at once,
+    * so `spark` must carry them before the call: a
+    * [[graft.GraftSession]] session does from construction.
     */
   def release(spark: SparkSession, docs: DataFrame,
       baseLineIndex: DataFrame, growLinePath: String,
@@ -139,9 +142,6 @@ object ReleaseBuild {
       s"release root already released (manifest present): $outRoot — " +
         "build into a NEW root; re-run only recovers crashed " +
         "(manifest-less) builds")
-    // the steps resolve graft's functions from several threads at
-    // once: register them here, before any step starts
-    graft.functions.GraftFunctions.register(spark)
     runSteps(spark.sparkContext, Seq(
       LinePath -> (() => IndexRebuild.compactLineIndex(spark,
         baseLineIndex, growLinePath, new Path(root, LinePath).toString)),

@@ -338,12 +338,11 @@ object ShardIngest {
           if (!bad.isEmpty)
             bad.write.mode(SaveMode.Overwrite)
               .json(s"$quarantine/batch=$batchId")
-          // register on the MICRO-BATCH's session: foreachBatch hands
-          // an isolated session CLONE whose function registry was
-          // snapshotted at stream start — registering on the outer
-          // session resolves nothing here (surfaced by the
-          // local-cluster gate, where no earlier code had registered)
-          graft.functions.GraftFunctions.register(walked.sparkSession)
+          // foreachBatch hands an isolated session CLONE whose function
+          // registry was copied at stream start: md5_long60 resolves
+          // here because the source session already carried it
+          // (GraftSession installs it at construction; a session built
+          // elsewhere calls GraftFunctions.register before the start)
           val keyed = walked.filter(col("reason").isNull)
             .select(col("shard"), inline(col("rows")))
             .withColumn("rec_key", call_function("md5_long60",

@@ -29,8 +29,8 @@ object TextOps {
     * length at least 3x the DEFLATE length. Bytes, not characters —
     * a compression ratio compares byte counts, and a char-based
     * numerator would silently deflate the ratio 3x on CJK-heavy
-    * documents. Callers must have registered GraftFunctions on the
-    * session (every query entry point does).
+    * documents. Resolves `deflate_len` by name: the session must carry
+    * graft's functions (every [[graft.GraftSession]] session does).
     */
   def repetitiveFlag(text: Column): Column =
     octet_length(text) >= call_function("deflate_len", text) * 3L
@@ -80,9 +80,10 @@ object TextOps {
     * Uses the native [[graft.functions.Md5Long60]] expression (same
     * value as `conv(substring(md5(s),1,15),16,10)`, computed from the
     * digest bytes without the 32-char hex round-trip — this is the
-    * hottest scalar of the dedup pipelines). The session must have
-    * [[graft.functions.GraftFunctions.register]] applied; the query
-    * entry points and jaccardPairs do this.
+    * hottest scalar of the dedup pipelines). The session must carry
+    * graft's functions: [[graft.GraftSession]] installs them at
+    * construction, and [[graft.functions.GraftFunctions.register]]
+    * adds them to a session built elsewhere.
     */
   def hashShingles(shingles: Column): Column =
     transform(shingles,
@@ -227,8 +228,8 @@ object TextOps {
     * hex, not BIGINT — composing limb3 << 48 overflows checked
     * signed-64 arithmetic (DuckDB errors), and the hex form is
     * portable across engines bit-for-bit. `df` must contain
-    * `textCol`; the session needs
-    * [[graft.functions.GraftFunctions.register]].
+    * `textCol`; the session must carry graft's functions (see
+    * [[hashShingles]]).
     */
   def withSimHash64(df: DataFrame, textCol: Column, out: String): DataFrame =
     // native one-pass expression: a staged composed form pays
@@ -312,7 +313,6 @@ object TextOps {
     */
   def shinglePairCounts(docs: DataFrame,
       shingleN: Int = 5, maxDf: Long = 1000000L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // one aggregate instead of a self-join (guide §2.4 "remove
     // shuffles outright"): an inverted-index SELF-JOIN would
     // repartition the (doc_id, 250-hash array) table as a
@@ -409,7 +409,6 @@ object TextOps {
     */
   private[graft] def shingleInv(docs: DataFrame, shingleN: Int)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         hashedShingles(tokens(col("text")), shingleN).as("sh"))
@@ -780,7 +779,6 @@ object TextOps {
     */
   def contaminationPairs(docs: DataFrame, isBench: Column,
       shingleN: Int = 5, minOverlap: Long = 5L): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = docs.select(col("doc_id"),
       hashedShingles(tokens(col("text")), shingleN).as("sh"),
       isBench.as("is_bench"))
@@ -840,7 +838,6 @@ object TextOps {
     */
   private[text] def sharedSpanRuns(docs: DataFrame, shingleN: Int,
       maxOcc: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val t = tokens(col("text"))
     // native shingle_hash60 (one streamed digest per window, 8-byte
     // keys): the composed per-window md5(concat_ws(slice)) HOF form

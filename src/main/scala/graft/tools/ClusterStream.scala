@@ -362,7 +362,6 @@ object ClusterStream {
     locally {
       import graft.streaming.{IndexRebuild, LineDedupStream,
         NearDupStream, PrefixDedupStream, ReleaseBuild}
-      graft.functions.GraftFunctions.register(spark)
       def words(p: String, n: Int) =
         (1 to n).map(i => s"$p$i").mkString(" ")
       def tmp(p: String) =

@@ -170,7 +170,6 @@ object Dev {
     val cpus = Bench.cpus
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     try run(spark) finally spark.stop()
   }
 }

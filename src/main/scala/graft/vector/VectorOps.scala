@@ -25,8 +25,9 @@ object VectorOps {
   def asDouble(v: Column): Column = v.cast("array<double>")
 
   /** Sequential-fold dot product of two double arrays — the native
-    * codegen'd expression ([[graft.functions.DotF64]]; requires
-    * `GraftFunctions.register`, which every query/main does). Same FP
+    * codegen'd expression ([[graft.functions.DotF64]], resolved by
+    * name from the session, which [[graft.GraftSession]] installs it
+    * into at construction). Same FP
     * op sequence as [[dotHof]]/[[seqDot]]/DuckDB `list_sum`:
     * bit-identical results (spec-asserted), ~an order of magnitude
     * less per-row overhead than the interpreted HOF fold.

@@ -17,12 +17,13 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("every query analyzes in a FRESH session (self-contained)") {
-    // each query must set up everything it needs (function
-    // registration, nanosAsLong, bucketed-table prep) — round 3's
-    // q17 only worked because an alphabetically earlier query had
-    // already set a session conf. newSession() gives a clean conf +
-    // function registry on the shared context; .schema forces
-    // analysis, which is where missing confs/functions surface.
+    // each query must set up everything it needs (nanosAsLong,
+    // bucketed-table prep) — round 3's q17 only worked because an
+    // alphabetically earlier query had already set a session conf.
+    // newSession() gives a clean conf on the shared context, and a
+    // function registry holding only built-ins plus the functions the
+    // session's extensions inject; .schema forces analysis, which is
+    // where missing confs/functions surface.
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>
       val fresh = spark.newSession()

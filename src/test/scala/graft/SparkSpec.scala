@@ -2,20 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local SparkSession for test suites (one JVM-wide session). */
+/** Shared local SparkSession for test suites (one JVM-wide session),
+  * built through [[GraftSession]] so tests run under the tools'
+  * session invariants, graft's functions included. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", "4")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
     s
   }
 }

@@ -17,7 +17,6 @@ class BloomFilterSpec extends AnyFunSuite {
 
   private def buildBytes(keys: Seq[Long], parts: Int): Array[Byte] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     keys.toDF("k").repartition(parts)
       .agg(call_function("bloom_build", col("k"), lit(1 << 14), lit(4)))
       .head().getAs[Array[Byte]](0)
@@ -68,7 +67,6 @@ class BloomFilterSpec extends AnyFunSuite {
   test("q77 shape: the probe prunes most fact rows before the join") {
     import graft.queries.Relational
     val dir = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.register(spark)
     val dim = Relational.tbl(spark, dir, "part")
       .filter(col("p_brand") === "Brand#13").select(col("p_partkey"))
     val bytes = dim.agg(call_function("bloom_build",

@@ -25,7 +25,6 @@ class CharGramStatsSpec extends AnyFunSuite {
 
   private def check(texts: Seq[String]): Unit = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rows = texts.toDF("text")
       .select(col("text"),
         call_function("char_gram_stats", col("text"), lit(8)).as("fast"),

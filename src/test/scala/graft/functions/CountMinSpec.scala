@@ -18,7 +18,6 @@ class CountMinSpec extends AnyFunSuite {
   private def buildBytes(keys: Seq[Long], parts: Int, w: Int,
       d: Int): Array[Byte] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     keys.toDF("k").repartition(parts)
       .agg(call_function("cms_build", col("k"), lit(w), lit(d)))
       .head().getAs[Array[Byte]](0)

@@ -56,7 +56,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("null keys are skipped, not hashed as a sentinel value") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val withNulls = (Seq[Option[Long]](None, None) ++
       (0 until 500).map(k => Some(k.toLong))).toDF("k")
     val clean = (0 until 500).map(_.toLong).toDF("k")
@@ -69,7 +68,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("build is byte-identical under any partitioning (max-merge)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val keys = (0 until 20000).map(_.toLong * 7919L)
     def build(parts: Int): Array[Byte] =
       keys.toDF("k").repartition(parts)
@@ -90,7 +88,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("sql surface: hll_card/hll_regsum match HllUtil on a grouped build") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = (0 until 4000).map(i => (i % 4, i.toLong)).toDF("g", "k")
       .groupBy(col("g"))
       .agg(call_function("hll_build", col("k"), lit(7)).as("sk"))
@@ -127,7 +124,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("p outside [4,16] is rejected at analysis") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(1L).toDF("k")
     for (bad <- Seq(3, 17)) {
       val e = intercept[Exception] {
@@ -139,7 +135,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("hll_merge of fine sketches equals a direct build, byte-for-byte") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // overlapping key ranges across fine groups — the case where
     // rolling up exact counts double-counts and max-merge must not
     val rows = (0 until 3).flatMap(g =>
@@ -159,7 +154,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("hll_merge skips nulls and yields null on an all-null group") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val sk = Seq(1L, 2L, 3L).toDF("k")
       .agg(call_function("hll_build", col("k"), lit(7)).as("sk"))
       .head().getAs[Array[Byte]]("sk")
@@ -175,7 +169,6 @@ class HyperLogLogSpec extends AnyFunSuite {
 
   test("hll_merge rejects mixed sketch widths loudly") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     def skAt(p: Int) = Seq(1L, 2L).toDF("k")
       .agg(call_function("hll_build", col("k"), lit(p)).as("sk"))
       .head().getAs[Array[Byte]]("sk")

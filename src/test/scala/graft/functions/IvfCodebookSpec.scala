@@ -19,7 +19,6 @@ class IvfCodebookSpec extends AnyFunSuite {
   private lazy val spark = SparkSpec.spark
 
   private def embeddings = {
-    graft.functions.GraftFunctions.register(spark)
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
   }

@@ -20,7 +20,6 @@ class RepStats2Spec extends AnyFunSuite {
 
   test("matches a driver-side reference on random repetitive token arrays") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     // tiny vocab -> heavy gram repetition, plus degenerate lengths
     val rows = Seq(Seq.empty[String], Seq("solo"), Seq("a", "a"),
@@ -40,7 +39,6 @@ class RepStats2Spec extends AnyFunSuite {
     val base = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(split(lower(trim(col("text"))), "\\s+").as("toks"))
-    graft.functions.GraftFunctions.register(spark)
     val plan = base.select(call_function("rep_stats2", col("toks")).as("st"))
       .queryExecution.executedPlan.toString
     assert("""\*\(\d+\) Project \[rep_stats2""".r.findFirstIn(plan).isDefined,
@@ -49,7 +47,6 @@ class RepStats2Spec extends AnyFunSuite {
 
   test("fails loud on a null token element") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq(Seq(Option("a"), None, Option("b"))).toDF("toks")
     val e = intercept[Exception] {
       df.select(call_function("rep_stats2", col("toks"))).collect()

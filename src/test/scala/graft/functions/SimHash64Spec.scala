@@ -17,7 +17,6 @@ class SimHash64Spec extends AnyFunSuite {
 
   private def check(texts: Seq[String]): Unit = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val tk = TextOps.tokens(col("text"))
     val staged = texts.toDF("text").select(
       col("text") +: (0 until 4).map(j =>
@@ -53,7 +52,6 @@ class SimHash64Spec extends AnyFunSuite {
 
   test("near-duplicate texts stay near in Hamming distance") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = (1 to 60).map(i => s"tok$i").mkString(" ")
     val near = (1 to 57).map(i => s"tok$i").mkString(" ") + " extra token"
     val far = (1 to 60).map(i => s"other$i").mkString(" ")

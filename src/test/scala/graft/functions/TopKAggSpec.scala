@@ -17,7 +17,6 @@ class TopKAggSpec extends AnyFunSuite {
   private def topk(rows: Seq[(Long, Long, Long)], k: Int,
       parts: Int): Map[Long, Seq[(Long, Long)]] = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     spark.createDataset(rows).toDF("g", "score", "id")
       .repartition(parts)
       .groupBy(col("g"))

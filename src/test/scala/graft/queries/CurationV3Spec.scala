@@ -36,7 +36,6 @@ class CurationV3Spec extends AnyFunSuite {
   }
 
   test("the per-doc split WOULD leak on this corpus (the premise)") {
-    graft.functions.GraftFunctions.register(spark)
     def docSplit(id: org.apache.spark.sql.Column) = {
       val b = call_function("md5_long60",
         concat(lit("split:"), id.cast("string"))) % 100

@@ -358,10 +358,10 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"),
       s"q43 falls back to a nested-loop join:\n$p")
     // centroid assignment must add NO shuffle (broadcast-argmax fold);
-    // the only exchanges allowed are the rank window + final orderBy
+    // the only exchange allowed is the rank window's
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"q43 assignment shuffles:\n$p")
+    assert(exchanges <= 1, s"q43 assignment shuffles:\n$p")
   }
 
   test("q40 brute-force baseline broadcasts the small query side") {
@@ -633,24 +633,24 @@ class PlanSpec extends AnyFunSuite {
   test("q48 bucketed join is shuffle-free on both fact sides") {
     val p = plan(Relational.q48(spark, dir))
     assert(p.contains("SortMergeJoin"), s"expected a sort-merge join:\n$p")
-    // the only exchanges allowed are the post-join aggregate and the
-    // final orderBy — the bucketed scan sides must NOT reshuffle
+    // the only exchange allowed is the post-join aggregate's — the
+    // bucketed scan sides must NOT reshuffle
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 2, s"bucketed join reshuffles a fact table:\n$p")
+    assert(exchanges <= 1, s"bucketed join reshuffles a fact table:\n$p")
   }
 
   test("q55 pivot with explicit values runs no discovery job") {
     val df = Relational.q55(spark, dir)
     val p = plan(df)
     // enumerated pivot values: pre-aggregate on (status, priority) +
-    // pivotfirst reshape + final orderBy — three exchanges, each
-    // carrying group-count rows after map-side partials, and NO
-    // distinct-collect pass to learn the pivot domain (that pass
-    // would be a 4th exchange plus a separate collect job)
+    // pivotfirst reshape — two exchanges, each carrying group-count
+    // rows after map-side partials, and NO distinct-collect pass to
+    // learn the pivot domain (that pass would be a 3rd exchange plus
+    // a separate collect job)
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 3, s"pivot adds unexpected shuffles:\n$p")
+    assert(exchanges <= 2, s"pivot adds unexpected shuffles:\n$p")
     assert(p.contains("pivotfirst"), s"expected a pivot aggregate:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("Expand"),
       s"pivot must not expand or cross-join:\n$p")
@@ -663,32 +663,31 @@ class PlanSpec extends AnyFunSuite {
       s"q68 lost the map-side top-k phase:\n$p")
   }
 
-  test("q64 repetition metrics are map-only: no shuffle but the output orderBy") {
+  test("q64 repetition metrics are map-only: no shuffle") {
     val p = plan(TextQueries.q64(spark, dir))
     // per-document metric -> nothing may cross rows: the sorted-gram
     // run-length fold rides the scan
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 1, s"q64 shuffles a per-document metric:\n$p")
+    assert(exchanges == 0, s"q64 shuffles a per-document metric:\n$p")
     assert(!p.contains("HashAggregate"), s"q64 re-grew a shuffle aggregate:\n$p")
   }
 
-  test("q132 compression signal is map-only: no shuffle but the output orderBy") {
+  test("q132 compression signal is map-only: no shuffle") {
     val p = plan(TextQueries.q132(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 1, s"q132 shuffles a per-document scalar:\n$p")
+    assert(exchanges == 0, s"q132 shuffles a per-document scalar:\n$p")
     assert(p.contains("deflate_len"), s"q132 lost the native deflate:\n$p")
   }
 
   test("q131 JSON extraction parses in the scan projection, payloads never shuffle") {
     val p = plan(Relational.q131(spark, dir))
     // from_json must sit under the partial aggregate (map side); the
-    // exchanges carry narrow agg rows: distinct-agg two-phase (2) +
-    // the output orderBy (1)
+    // exchanges carry narrow agg rows: the distinct-agg two-phase (2)
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 3, s"q131 added an unexpected exchange:\n$p")
+    assert(exchanges <= 2, s"q131 added an unexpected exchange:\n$p")
     assert(p.contains("from_json"), s"q131 lost the JSON parse:\n$p")
     val parseAt = p.indexOf("from_json")
     val firstExchange = p.indexOf("Exchange")
@@ -705,8 +704,8 @@ class PlanSpec extends AnyFunSuite {
       // the ScanFanOut seed exchange (see q146's comment) carries
       // doc_ids only, before any payload exists
       "roundrobinpartitioning".r.findAllIn(p.toLowerCase).size
-    // the one exchange is the oracle orderBy over compact entry rows
-    assert(exchanges <= 1, s"q136 shuffles archive payloads:\n$p")
+    // the explode and the entry rows stay in the scan's partitions
+    assert(exchanges == 0, s"q136 shuffles archive payloads:\n$p")
   }
 
   test("q137 tar-shard explode is narrow: payloads never shuffle") {
@@ -716,8 +715,8 @@ class PlanSpec extends AnyFunSuite {
       // the ScanFanOut seed exchange (see q146's comment)
       "roundrobinpartitioning".r.findAllIn(p.toLowerCase).size
     // stem grouping happens inside the batch worker, so even the
-    // per-sample counts cost no exchange; the one is the oracle sort
-    assert(exchanges <= 1, s"q137 shuffles shard payloads:\n$p")
+    // per-sample counts cost no exchange
+    assert(exchanges == 0, s"q137 shuffles shard payloads:\n$p")
   }
 
   test("q56 vocab top-k is TakeOrderedAndProject, never a full sort") {
@@ -726,23 +725,20 @@ class PlanSpec extends AnyFunSuite {
       s"top-k must not globally sort the vocabulary:\n$p")
   }
 
-  test("q57 mix sample is a pure scan: only the output-order exchange") {
+  test("q57 mix sample is a pure scan: no exchange") {
     val p = plan(TextQueries.q57(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    // sampling itself is projection + filter on the scan — zero
-    // shuffles; the single allowed exchange is the deterministic
-    // output orderBy (oracle hygiene, not part of the operator)
-    assert(exchanges <= 1, s"hash sampling must not shuffle:\n$p")
+    // sampling is projection + filter on the scan — zero shuffles
+    assert(exchanges == 0, s"hash sampling must not shuffle:\n$p")
   }
 
   test("q58 sequence packing shuffles once for the split window") {
     val p = plan(TextQueries.q58(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    // one exchange keys the running-sum window by split; one more is
-    // the final orderBy
-    assert(exchanges <= 2, s"packing adds unexpected shuffles:\n$p")
+    // the one exchange keys the running-sum window by split
+    assert(exchanges <= 1, s"packing adds unexpected shuffles:\n$p")
   }
 
   test("q105 recall audit: bounded top-k baseline, broadcast-only key joins") {
@@ -783,18 +779,19 @@ class PlanSpec extends AnyFunSuite {
     // itself got shuffled
     assert(!p.contains("SortMergeJoin"),
       s"q107 shuffles the base corpus into a join:\n$p")
-    // the only shuffles are delta-sized: candidate distinct (x2,
-    // pair-set + base-id set), best-match aggregate, final orderBy
+    // the only shuffles are delta-sized: the candidate-pair distinct
+    // (whose result also serves as the base-id set) and the
+    // best-match aggregate
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 5, s"q107 grew a base-sized shuffle:\n$p")
+    assert(exchanges <= 2, s"q107 grew a base-sized shuffle:\n$p")
   }
 
-  test("q108 classifier is map-only: the one exchange is the oracle sort") {
+  test("q108 classifier is map-only: no exchange") {
     val p = plan(TextQueries.q108(spark, dir))
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 1, s"q108 scoring must not shuffle:\n$p")
+    assert(exchanges == 0, s"q108 scoring must not shuffle:\n$p")
     assert(!p.contains("Join"), s"q108 grew a join:\n$p")
   }
 
@@ -803,10 +800,10 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial_count") || p.contains("partial_sum"),
       s"q109 per-bucket totals must combine map-side:\n$p")
     // agg exchange + single-partition window exchange (bucket-count
-    // rows by design) + final orderBy
+    // rows by design)
     val exchanges = "Exchange".r.findAllIn(p).length -
       "BroadcastExchange".r.findAllIn(p).length
-    assert(exchanges <= 3, s"q109 shuffles more than agg+window+sort:\n$p")
+    assert(exchanges <= 2, s"q109 shuffles more than agg+window:\n$p")
   }
 
   test("q110 importance resample rides the bounded top-k, never a window") {

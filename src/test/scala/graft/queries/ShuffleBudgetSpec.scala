@@ -106,7 +106,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("hll_build exchanges register arrays, not keys (the q84 claim)") {
-    graft.functions.GraftFunctions.register(spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val nKeys = li.select("l_orderkey").distinct().count()
     // the sketch ALONE (q84 itself also carries the exact-distinct
@@ -257,7 +256,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q95 normalized dedup shuffles digests, never text (q30's budget)") {
-    graft.functions.GraftFunctions.register(spark)
     // denominator = THE planted corpus q95 reads: base + two
     // variants of every 37th doc
     val base = spark.read.parquet(s"$dir/documents.parquet")
@@ -282,7 +280,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q96 rollup's exchanges carry register arrays, not keys") {
-    graft.functions.GraftFunctions.register(spark)
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val nKeys = li.select("l_orderkey").distinct().count()
     val s = ShuffleMeter.measure(spark) {
@@ -405,7 +402,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q105 recall audit: only bounded top-k partials and sample-sized rows shuffle") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
     val nQ = emb.filter(col("vec_id") % 100 === 0).count()
@@ -454,7 +450,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q107 delta near-dup shuffles delta-sized id rows, never shingles") {
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     // THE fixture, not a re-spelling of it (withExactCopies rule:
     // budget denominators must track fixture changes)
@@ -476,7 +471,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q113 decon probe: vectors never shuffle, only top-1 partials") {
-    graft.functions.GraftFunctions.register(spark)
     val nVecs = spark.read.parquet(s"$dir/embeddings.parquet").count()
     val s = ShuffleMeter.measure(spark) {
       VectorQueries.q113(spark, dir).queryExecution.toRdd.count()
@@ -525,7 +519,6 @@ class ShuffleBudgetSpec extends AnyFunSuite {
   }
 
   test("q114 outlier audit: exchanges are catalog-sized (source x dim), not corpus-sized") {
-    graft.functions.GraftFunctions.register(spark)
     val nSources = spark.read.parquet(s"$dir/documents.parquet")
       .select("source").distinct().count()
     val s = ShuffleMeter.measure(spark) {

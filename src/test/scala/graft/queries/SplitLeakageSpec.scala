@@ -28,7 +28,6 @@ class SplitLeakageSpec extends AnyFunSuite {
         col("split").as("twin_split"))
     // (a) the leak under the PER-DOC split: hash doc ids the q46 way
     //     and count twin pairs whose members land in different splits
-    graft.functions.GraftFunctions.register(spark)
     def docSplit(id: org.apache.spark.sql.Column) = {
       val b = call_function("md5_long60",
         concat(lit("split:"), id.cast("string"))) % 100

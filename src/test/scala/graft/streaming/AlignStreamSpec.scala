@@ -33,7 +33,6 @@ class AlignStreamSpec extends AnyFunSuite {
   test("streamed mining equals batch q122 across three micro-batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val (bandedY, yCal, tables) = AlignStream.buildIndex(spark, dir)
     val by = bandedY.persist(); val yc = yCal.persist()
     try {
@@ -64,7 +63,6 @@ class AlignStreamSpec extends AnyFunSuite {
 
   test("a replayed micro-batch overwrites to identical rows (idempotent)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val (bandedY, yCal, tables) = AlignStream.buildIndex(spark, dir)
     val by = bandedY.persist(); val yc = yCal.persist()
     try {
@@ -91,7 +89,6 @@ class AlignStreamSpec extends AnyFunSuite {
 
   test("novel targets outside the calibration deflate to their own cosine") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // a tiny synthetic index whose calibration is EMPTY: every probe
     // falls back to ay = own cosine, margin = cos*1e6 DIV ((ax+cos)/2)
     val tables = Seq(Seq(Seq.fill(64)(0.1))) // 1 table, 1 plane: all collide

@@ -25,7 +25,6 @@ class DeconStreamSpec extends AnyFunSuite {
   test("streamed decon flags equal q113's batch flags across micro-batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // THE q113 fixture (non-eval corpus + planted leaks), split by
     // parity into two micro-batches so each contains planted leaks
     val corpus = VectorQueries.q113Corpus(spark, dir)
@@ -59,7 +58,6 @@ class DeconStreamSpec extends AnyFunSuite {
 
   test("a replayed batch overwrites its verdicts, never duplicates them") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val corpus = VectorQueries.q113Corpus(spark, dir)
     val evalIdx = VectorQueries.q113Eval(spark, dir)
     val out = Files.createTempDirectory("decon_replay").toString

@@ -33,7 +33,6 @@ class DriftStreamSpec extends AnyFunSuite {
   test("streamed drift readout equals q111 across micro-batches and a replay") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val delta = TextQueries.q107Delta(docs)
       .as[NDoc].collect().sortBy(_.doc_id)

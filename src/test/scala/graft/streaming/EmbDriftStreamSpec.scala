@@ -34,7 +34,6 @@ class EmbDriftStreamSpec extends AnyFunSuite {
   test("streamed drift readout equals the batch means across micro-batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     // the q114 relation IS the fixture; centroids from the full
     // release, the stream re-batches the same docs by parity
     val all = VectorQueries.q114Docs(spark, dir)
@@ -74,7 +73,6 @@ class EmbDriftStreamSpec extends AnyFunSuite {
 
   test("a replayed partials batch overwrites, never double-counts") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val all = VectorQueries.q114Docs(spark, dir)
     val cents = VectorQueries.sourceCentroids(all)
     val parts = Files.createTempDirectory("embdrift_replay").toString

@@ -61,7 +61,6 @@ class IndexRebuildSpec extends AnyFunSuite {
   test("rebuilt signature index is admission-equivalent (near-dup)") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val index = NearDupStream.buildBaseIndex(docs).persist()
@@ -98,7 +97,6 @@ class IndexRebuildSpec extends AnyFunSuite {
   test("rebuilt prefix index re-derives the (s, df) order over the " +
       "compacted corpus and sees admitted docs") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     def words(p: String, n: Int) = (1 to n).map(i => s"$p$i").mkString(" ")
     val base = Seq(
       (1L, words("ash", 12)),
@@ -145,7 +143,6 @@ class IndexRebuildSpec extends AnyFunSuite {
   test("rebuilt keeper map: growth without merges is stable; a bridge " +
       "doc merges clusters, which flip split TOGETHER") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // token geometry (5-gram shingles, 30 tokens -> 26 shingles):
     // a = c1..c22 + x1..x8 and b = y1..y8 + c9..c30 each share 18
     // shingles with the bridge c (J = 18/34 = 0.53 >= 0.5) but only

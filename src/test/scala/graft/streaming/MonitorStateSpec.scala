@@ -83,7 +83,6 @@ class MonitorStateSpec extends AnyFunSuite {
     val spark = rocksSession()
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val delta = TextQueries.q107Delta(docs).as[NDoc].collect()
     val (b1, b2) = delta.partition(_.doc_id % 2 == 0)
@@ -110,7 +109,6 @@ class MonitorStateSpec extends AnyFunSuite {
     val spark = rocksSession()
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val index = NearDupStream.buildBaseIndex(docs)
     val out = Files.createTempDirectory("ms_nd_out").toString
@@ -131,7 +129,6 @@ class MonitorStateSpec extends AnyFunSuite {
     val spark = rocksSession()
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val corpus = VectorQueries.q113Corpus(spark, dir)
       .as[VDoc].collect().take(6)
     val evalIdx = VectorQueries.q113Eval(spark, dir)
@@ -151,7 +148,6 @@ class MonitorStateSpec extends AnyFunSuite {
     val spark = rocksSession()
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val all = VectorQueries.q114Docs(spark, dir)
     val cents = VectorQueries.sourceCentroids(all).persist()
     cents.count()

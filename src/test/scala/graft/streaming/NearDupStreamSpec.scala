@@ -25,7 +25,6 @@ class NearDupStreamSpec extends AnyFunSuite {
   test("streamed admission verdicts equal q107's batch verdicts across micro-batches") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val index = NearDupStream.buildBaseIndex(docs)
     // THE q107 fixture, split by parity into two micro-batches so
@@ -58,7 +57,6 @@ class NearDupStreamSpec extends AnyFunSuite {
   test("admit-and-grow: later batches dedup against earlier ADMITTED docs") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val index = NearDupStream.buildBaseIndex(docs)
     // batch 1: a fresh doc F (admits; no base match). batch 2: an
@@ -102,7 +100,6 @@ class NearDupStreamSpec extends AnyFunSuite {
   test("a crash-replayed batch overwrites its own verdicts (idempotent)") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val index = NearDupStream.buildBaseIndex(docs)
     val rows = Seq(NDoc(5000001L, "one two three four five six seven"))

@@ -68,7 +68,6 @@ class PrefixDedupStreamSpec extends AnyFunSuite {
   test("streamed verdicts are batching-invariant and idempotent") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val (ordered, dfTbl) = PrefixDedupStream.buildBaseIndex(df(base))
     val out = Files.createTempDirectory("pfx_out").toString
     val ckpt = Files.createTempDirectory("pfx_ckpt").toString

@@ -28,7 +28,6 @@ class ReleaseBuildSpec extends AnyFunSuite {
 
   test("release lands all four artifacts; admissions match base ∪ growth") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = Seq(
       (1L, words("ash", 12)), (2L, words("elm", 12)),
       // a planted near-dup pair so the keeper map has a real cluster
@@ -86,7 +85,6 @@ class ReleaseBuildSpec extends AnyFunSuite {
   test("crash between artifacts: no manifest, previous release stays " +
       "authoritative; re-run completes") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = Seq((1L, words("ash", 12))).toDF("doc_id", "text")
     val lineBase = LineDedupStream.buildIndex(base)
     val sigBase = NearDupStream.buildBaseIndex(base)
@@ -140,7 +138,6 @@ class ReleaseBuildSpec extends AnyFunSuite {
     // end-to-end: a release into a root whose path contains '"'
     // (legal on POSIX) writes a valid manifest and reads back whole
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = Seq((1L, words("ash", 12))).toDF("doc_id", "text")
     val lineBase = LineDedupStream.buildIndex(base)
     val sigBase = NearDupStream.buildBaseIndex(base)
@@ -158,7 +155,6 @@ class ReleaseBuildSpec extends AnyFunSuite {
 
   test("a release leaves nothing cached") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val base = Seq(
       (1L, words("ash", 12)),
       // a planted near-dup pair, so the keeper map clusters something
@@ -188,7 +184,6 @@ class ReleaseBuildSpec extends AnyFunSuite {
     */
   private def releaseInputs(tag: String) = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val docs = ((1L to 12L).map(i => (i, words(s"w${i}x", 16))) ++ Seq(
         (50L, words("oak", 20)),
         (51L, words("oak", 20).replace("oak20", "oakzz"))))

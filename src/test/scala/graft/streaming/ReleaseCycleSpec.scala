@@ -52,7 +52,6 @@ class ReleaseCycleSpec extends AnyFunSuite {
       "across all four artifacts") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
 
     // base corpus, with a planted near-dup pair (5, 6) so the keeper
     // map carries a real cluster across the release
@@ -227,7 +226,6 @@ class ReleaseCycleSpec extends AnyFunSuite {
     // in Shards.requireNoLaterShards' doc).
     import spark.implicits._
     implicit val sc = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val b0 = Seq((1L, "alpha\nbeta")).toDF("doc_id", "text")
     val lineBase = LineDedupStream.buildIndex(b0)
     val grow = tmp("rc_guard_g")

@@ -49,7 +49,6 @@ class CappedPairCoreSpec extends AnyFunSuite {
   }
 
   test("collect_members_capped: over-cap groups -> NULL, survivors sorted") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // shingle A: df 4 (over cap 3) -> dropped; shingle B: df 3 (at
     // cap) -> kept, members sorted by doc_id

@@ -42,7 +42,6 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("multi-table banding recovers planted pairs a single table misses") {
     import graft.queries.VectorQueries
-    graft.functions.GraftFunctions.register(spark)
     val base = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
