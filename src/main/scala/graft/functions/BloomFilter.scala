@@ -3,11 +3,13 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftnative.Native
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType}
 
 /** A deterministic Bloom filter as a distributed build-aggregate +
@@ -160,7 +162,7 @@ case class BloomBuild(key: Expression, mBits: Int, k: Int,
 }
 
 /** `bloom_probe(key)`: membership test against a BROADCAST filter
-  * (closure-captured like the IVF/PQ codebooks — the filter is a
+  * (held by the expression like the IVF/PQ codebooks — the filter is a
   * worker-side dimension, O(1) in the plan). Map-only, codegen'd,
   * rides the scan: the idiomatic placement is a `.filter` directly on
   * the fact table before its join exchange.
@@ -203,6 +205,10 @@ object BloomProbe {
   // restarts) and object identity (fresh wrapper per task) are both
   // wrong keys
   private val cache = new ParsedCache[(Array[Long], Int, Int)]()
+
+  /** `bloom_probe(key)` as a Column that carries its filter. */
+  def bloomProbe(key: Column, filter: Broadcast[Array[Byte]]): Column =
+    Native(e => BloomProbe(e.head, filter), key)
 
   def probe(bc: Broadcast[Array[Byte]], key: Long): Boolean = {
     val parsed = cache.get(bc, BloomUtil.fromBytes)

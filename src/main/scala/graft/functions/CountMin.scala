@@ -3,11 +3,13 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftnative.Native
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -155,7 +157,7 @@ case class CmsBuild(key: Expression, w: Int, d: Int,
 }
 
 /** `cms_query(key)`: frequency estimate against a BROADCAST sketch
-  * (closure-captured like [[BloomProbe]]'s filter). Map-only,
+  * (held like [[BloomProbe]]'s filter). Map-only,
   * codegen'd; never underestimates.
   */
 case class CmsQuery(child: Expression, sketch: Broadcast[Array[Byte]])
@@ -186,6 +188,10 @@ case class CmsQuery(child: Expression, sketch: Broadcast[Array[Byte]])
 
 object CmsQuery {
   private val cache = new ParsedCache[(Array[Long], Int, Int)]()
+
+  /** `cms_query(key)` as a Column that carries its sketch. */
+  def cmsQuery(key: Column, sketch: Broadcast[Array[Byte]]): Column =
+    Native(e => CmsQuery(e.head, sketch), key)
 
   private[functions] def parsed(
       bc: Broadcast[Array[Byte]]): (Array[Long], Int, Int) =

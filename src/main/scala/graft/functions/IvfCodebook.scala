@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftnative.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** An IVF coarse-quantizer codebook as a worker-side dimension:
@@ -24,6 +26,19 @@ case class IvfCodebook(cids: Array[Long], vecs: Array[Array[Double]],
   require(cids.length == vecs.length && cids.length == norms.length,
     s"codebook arrays disagree: ${cids.length}/${vecs.length}/${norms.length}")
   def size: Int = cids.length
+}
+
+/** The codebook expressions as Columns over one broadcast codebook:
+  * each Column carries its own codebook, so two queries built in one
+  * session never share one.
+  */
+object IvfCodebook {
+  def ivfBestCid(v: Column, codebook: Broadcast[IvfCodebook]): Column =
+    Native(e => IvfBestCid(e.head, codebook), v)
+  def ivfProbe2(v: Column, codebook: Broadcast[IvfCodebook]): Column =
+    Native(e => IvfProbe2(e.head, codebook), v)
+  def ivfResidual(v: Column, codebook: Broadcast[IvfCodebook]): Column =
+    Native(e => IvfResidual(e.head, codebook), v)
 }
 
 /** Scalar twins of the q43/q52 codebook-fold columns — the SAME

@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftnative.Native
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** A product-quantization codebook as a worker-side dimension: the
@@ -26,6 +28,16 @@ case class PqCodebook(m: Int, dsub: Int, cents: Array[Array[Double]]) {
   require(cents.forall(_.length == m * dsub),
     s"centroid dim != m*dsub = ${m * dsub}")
   def k: Int = cents.length
+}
+
+/** The PQ expressions as Columns over one broadcast codebook, which
+  * each Column carries.
+  */
+object PqCodebook {
+  def pqEncode(v: Column, codebook: Broadcast[PqCodebook]): Column =
+    Native(e => PqEncode(e.head, codebook), v)
+  def pqAdcE6(codes: Column, q: Column, codebook: Broadcast[PqCodebook]): Column =
+    Native(e => PqAdcE6(e(0), e(1), codebook), codes, q)
 }
 
 /** Scalar kernels of the PQ path. All distances are the sequential

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.BloomProbe.bloomProbe
 import graft.geo.Geo
 
 /** Relational query inventory over the driver testdata (TESTDATA.md).
@@ -1174,20 +1175,8 @@ object Relational {
     val bytes = dim.agg(call_function("bloom_build",
       col("p_partkey"), lit(1 << 16), lit(4))).head().getAs[Array[Byte]](0)
     val bc = spark.sparkContext.broadcast(bytes)
-    // the function name carries the broadcast id: temp-function names
-    // are session-global, and rebinding a FIXED name on a later call
-    // would make this call's lazily-resolved DataFrame probe the
-    // later call's filter — wrong-filter false negatives, silently
-    val probeFn = s"bloom_probe_${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      probeFn, {
-        case Seq(key) => graft.functions.BloomProbe(key, bc)
-        case other => throw new IllegalArgumentException(
-          s"bloom_probe(<bigint key>) takes exactly one argument — " +
-            s"got ${other.length}")
-      }, "built-in")
     tbl(spark, dir, "lineitem")
-      .filter(call_function(probeFn, col("l_partkey")))
+      .filter(bloomProbe(col("l_partkey"), bc))
       .join(broadcast(dim), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
@@ -1679,7 +1668,8 @@ object Relational {
   // ---- q100: correlated scalar subquery (SURVEY §2.3 charter) ------
   // Customers above their own nation's average balance — the textbook
   // correlated-scalar shape a warehouse user writes weekly. Expressed
-  // as SQL on purpose: the point is that Catalyst's
+  // as a correlated subquery on purpose (`scalar()` over an `outer()`
+  // reference): the point is that Catalyst's
   // RewriteCorrelatedScalarSubquery de-correlates it into an
   // aggregate + join (PlanSpec pins that no per-row subquery
   // execution survives into the physical plan — the naive form would
@@ -1688,15 +1678,14 @@ object Relational {
   // longs, bit-identical in both engines, so no boundary row can
   // flip between Spark and DuckDB.
   def q100(spark: SparkSession, dir: String): DataFrame = {
-    tbl(spark, dir, "customer")
+    val customer = tbl(spark, dir, "customer")
       .select(col("c_custkey"), col("c_name"),
         cents(col("c_acctbal")).as("bal_cents"), col("c_nationkey"))
-      .createOrReplaceTempView("q100_customer")
-    spark.sql(
-      """SELECT c_custkey, c_name, bal_cents
-        |FROM q100_customer c
-        |WHERE bal_cents > (SELECT avg(c2.bal_cents) FROM q100_customer c2
-        |                   WHERE c2.c_nationkey = c.c_nationkey)""".stripMargin)
+    val nationAvg = customer.as("c2")
+      .filter(col("c2.c_nationkey") === col("c.c_nationkey").outer())
+      .select(avg(col("c2.bal_cents"))).scalar()
+    customer.as("c").filter(col("bal_cents") > nationAvg)
+      .select(col("c_custkey"), col("c_name"), col("bal_cents"))
   }
 
   val q100Sql: String =

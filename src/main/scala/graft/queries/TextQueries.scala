@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.CmsQuery.cmsQuery
 import graft.text.TextOps
 
 /** LLM-training-data pipeline queries over the `documents` table
@@ -2182,21 +2183,10 @@ object TextQueries {
       .agg(call_function("cms_build", col("k"), lit(w), lit(d)))
       .head().getAs[Array[Byte]](0)
     val bc = spark.sparkContext.broadcast(bytes)
-    // name carries the broadcast id: rebinding a fixed name on a
-    // later q83 call would make THIS call's lazily-resolved frame
-    // read the later sketch — wrong estimates, silently
-    val queryFn = s"cms_query_${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      queryFn, {
-        case Seq(key) => graft.functions.CmsQuery(key, bc)
-        case other => throw new IllegalArgumentException(
-          s"cms_query(<bigint key>) takes exactly one argument — " +
-            s"got ${other.length}")
-      }, "built-in")
     words.groupBy(col("term"), col("k"))
       .agg(count(lit(1)).as("exact_n"))
       .orderBy(col("exact_n").desc, col("term")).limit(20)
-      .withColumn("cms_n", call_function(queryFn, col("k")))
+      .withColumn("cms_n", cmsQuery(col("k"), bc))
       .select(col("term"), col("exact_n"), col("cms_n"))
   }
 

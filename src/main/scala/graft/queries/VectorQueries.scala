@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{IvfBestCid, IvfCodebook, IvfProbe2, IvfResidual, PqAdcE6, PqCodebook, PqEncode}
+import graft.functions.{IvfCodebook, PqCodebook}
+import graft.functions.IvfCodebook.{ivfBestCid, ivfProbe2, ivfResidual}
+import graft.functions.PqCodebook.{pqAdcE6, pqEncode}
 import graft.vector.VectorOps._
 
 /** Similarity-search queries over the `embeddings` table (SURVEY.md
@@ -393,36 +395,6 @@ object VectorQueries {
       cvs.map(cv => math.sqrt(seqDot(cv, cv)))))
   }
 
-  /** Session wiring for the codebook expressions: builders CLOSE OVER
-    * the broadcast handle (an expression argument can only be a plan
-    * literal — the exact transport being avoided). Re-registration per
-    * query build keeps every query self-contained in a fresh session;
-    * resolution happens at analysis, so an already-built DataFrame
-    * keeps its own codebook when a later query re-registers.
-    */
-  private[graft] def registerIvf(spark: SparkSession,
-      bc: Broadcast[IvfCodebook]): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("ivf_best_cid", {
-      case Seq(v) => IvfBestCid(v, bc)
-      case other => throw new IllegalArgumentException(
-        s"ivf_best_cid(<array<double>>) takes exactly one argument — " +
-          s"got ${other.length}")
-    }, "built-in")
-    registry.createOrReplaceTempFunction("ivf_probe2", {
-      case Seq(v) => IvfProbe2(v, bc)
-      case other => throw new IllegalArgumentException(
-        s"ivf_probe2(<array<double>>) takes exactly one argument — " +
-          s"got ${other.length}")
-    }, "built-in")
-    registry.createOrReplaceTempFunction("ivf_residual", {
-      case Seq(v) => IvfResidual(v, bc)
-      case other => throw new IllegalArgumentException(
-        s"ivf_residual(<array<double>>) takes exactly one argument — " +
-          s"got ${other.length}")
-    }, "built-in")
-  }
-
   // The `typedLit` plan-literal codebook twin and its fold-form
   // argmax/probe columns live in IvfCodebookSpec now (test-only):
   // they exist purely as the bit-equality oracle for the native
@@ -433,20 +405,20 @@ object VectorQueries {
     * cid NON-NULLABLE (it never is: the argmax always yields a cid),
     * so an inner join on cid infers no IsNotNull(cid) pushdown filter
     * — which would re-evaluate the whole codebook scan a second time
-    * per row in the pre-join Filter. Session must have [[registerIvf]]
-    * applied.
+    * per row in the pre-join Filter.
     */
-  private def assignToCodebook(all: DataFrame): DataFrame =
+  private def assignToCodebook(all: DataFrame,
+      cb: Broadcast[IvfCodebook]): DataFrame =
     all.select(col("vec_id"), col("v"),
-      coalesce(call_function("ivf_best_cid", col("v")), lit(-1L)).as("cid"))
+      coalesce(ivfBestCid(col("v"), cb), lit(-1L)).as("cid"))
 
   def q43(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    registerIvf(spark, codebookBc(all))
-    val assign = assignToCodebook(all)
+    val cb = codebookBc(all)
+    val assign = assignToCodebook(all, cb)
     val probes = all.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        explode(call_function("ivf_probe2", col("v"))).as("cid"))
+        explode(ivfProbe2(col("v"), cb)).as("cid"))
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("cos_e6").desc, col("neighbor_id"))
     // probes are 2 rows per query — broadcast them so the big assign
@@ -514,36 +486,16 @@ object VectorQueries {
       PqCodebook(m, cents.head.length / m, cents))
   }
 
-  /** Session wiring for the PQ expressions — closure-captured
-    * broadcast, same pattern and rationale as [[registerIvf]].
-    */
-  private[graft] def registerPq(spark: SparkSession,
-      bc: Broadcast[PqCodebook]): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("pq_encode", {
-      case Seq(v) => PqEncode(v, bc)
-      case other => throw new IllegalArgumentException(
-        s"pq_encode(<array<double>>) takes exactly one argument — " +
-          s"got ${other.length}")
-    }, "built-in")
-    registry.createOrReplaceTempFunction("pq_adc_e6", {
-      case Seq(c, q) => PqAdcE6(c, q, bc)
-      case other => throw new IllegalArgumentException(
-        s"pq_adc_e6(<codes>, <query>) takes exactly two arguments — " +
-          s"got ${other.length}")
-    }, "built-in")
-  }
-
   // The registered query serializes the code array as a comma-joined
   // string: q70/q71 consume the array form directly; a registered
   // query's output schema is scalars-only (driver-harness contract —
   // see EntrySpec's guard).
   def q69(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    registerPq(spark, pqCodebookBc(all))
+    val pq = pqCodebookBc(all)
     all.select(col("vec_id"),
         concat_ws(",",
-          transform(call_function("pq_encode", col("v")),
+          transform(pqEncode(col("v"), pq),
             c => c.cast("string"))).as("codes"))
   }
 
@@ -587,16 +539,15 @@ object VectorQueries {
   // ranks ASC) — the n x q scored rows never cross an exchange.
   def q70(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    registerPq(spark, pqCodebookBc(all))
-    val codes = all.select(col("vec_id"),
-      call_function("pq_encode", col("v")).as("codes"))
+    val pq = pqCodebookBc(all)
+    val codes = all.select(col("vec_id"), pqEncode(col("v"), pq).as("codes"))
     val queries = all.filter(col("vec_id") % 100 === 0 &&
         col("vec_id") < QueryPanelBound)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
     codes.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        call_function("pq_adc_e6", col("codes"), col("qv")).as("dist_e6"))
+        pqAdcE6(col("codes"), col("qv"), pq).as("dist_e6"))
       .groupBy(col("query_id"))
       .agg(call_function("topk_by_score",
         -col("dist_e6"), col("neighbor_id"), lit(3)).as("top"))
@@ -654,18 +605,18 @@ object VectorQueries {
   // data in production too).
   def q71(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    registerIvf(spark, codebookBc(all))
-    registerPq(spark, pqCodebookBc(all))
+    val cb = codebookBc(all)
+    val pq = pqCodebookBc(all)
     val assign = all.select(col("vec_id"),
-      coalesce(call_function("ivf_best_cid", col("v")), lit(-1L)).as("cid"),
-      call_function("pq_encode", col("v")).as("codes"))
+      coalesce(ivfBestCid(col("v"), cb), lit(-1L)).as("cid"),
+      pqEncode(col("v"), pq).as("codes"))
     val probes = all.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        explode(call_function("ivf_probe2", col("v"))).as("cid"))
+        explode(ivfProbe2(col("v"), cb)).as("cid"))
     assign.join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        call_function("pq_adc_e6", col("codes"), col("qv")).as("dist_e6"))
+        pqAdcE6(col("codes"), col("qv"), pq).as("dist_e6"))
       .groupBy(col("query_id"))
       .agg(call_function("topk_by_score",
         -col("dist_e6"), col("neighbor_id"), lit(3)).as("top"))
@@ -745,13 +696,12 @@ object VectorQueries {
   // inverted-list entry an IVFPQ index stores.
   def q74(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    registerIvf(spark, codebookBc(all))
-    registerPq(spark, pqCodebookBc(all))
+    val cb = codebookBc(all)
+    val pq = pqCodebookBc(all)
     all.select(col("vec_id"),
-        call_function("ivf_best_cid", col("v")).as("cid"),
+        ivfBestCid(col("v"), cb).as("cid"),
         concat_ws(",",
-          transform(
-            call_function("pq_encode", call_function("ivf_residual", col("v"))),
+          transform(pqEncode(ivfResidual(col("v"), cb), pq),
             c => c.cast("string"))).as("codes"))
   }
 
@@ -849,8 +799,7 @@ object VectorQueries {
   // with map-side partial sums — iterate for full Lloyd training.
   def q52(spark: SparkSession, dir: String): DataFrame = {
     val all = vecs(spark, dir)
-    registerIvf(spark, codebookBc(all))
-    assignToCodebook(all)
+    assignToCodebook(all, codebookBc(all))
       .select(col("cid"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("cid"), col("dim").cast("long").as("dim"))
       .agg(count(lit(1)).as("n"),
@@ -1004,7 +953,7 @@ object VectorQueries {
     val all = vecs(spark, dir)
       .withColumn("vv", dot(col("v"), col("v"))).persist()
     all.count()
-    registerPq(spark, pqCodebookBc(all))
+    val pq = pqCodebookBc(all)
     val queries = all.filter(col("vec_id") % 100 === 0 &&
         col("vec_id") < QueryPanelBound)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -1024,13 +973,12 @@ object VectorQueries {
       .agg(call_function("topk_by_score",
         -col("d"), col("nid"), lit(3)).as("t"))
       .select(col("query_id"), expr("transform(t, x -> x.id)").as("exact_ids"))
-    val adc = all.select(col("vec_id"),
-        call_function("pq_encode", col("v")).as("codes"))
+    val adc = all.select(col("vec_id"), pqEncode(col("v"), pq).as("codes"))
       .crossJoin(broadcast(queries.select(col("query_id").as("qid"),
         col("qv"))))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
-        call_function("pq_adc_e6", col("codes"), col("qv")).as("d"))
+        pqAdcE6(col("codes"), col("qv"), pq).as("d"))
       .groupBy(col("qid"))
       .agg(call_function("topk_by_score",
         -col("d"), col("nid"), lit(3)).as("t"))
@@ -1095,7 +1043,7 @@ object VectorQueries {
   def q126(spark: SparkSession, dir: String): DataFrame = {
     val all = withNorm(vecs(spark, dir)).persist()
     all.count() // eager: exact pass + claim harvest are siblings
-    registerIvf(spark, codebookBc(all))
+    val cb = codebookBc(all)
     val queries = querySample(all)
     val top3 = exactTopK(all, queries, 3)
       .select(col("query_id"), explode(col("top")).as("hit"))
@@ -1105,9 +1053,9 @@ object VectorQueries {
     val claimIds = top3.select(col("neighbor_id").as("vid")).distinct()
     val ncid = all.join(broadcast(claimIds), col("vec_id") === col("vid"))
       .select(col("vec_id").as("nid"),
-        call_function("ivf_best_cid", col("v")).as("ncid"))
+        ivfBestCid(col("v"), cb).as("ncid"))
     val qprobe = queries.select(col("query_id").as("qid"),
-      call_function("ivf_probe2", col("qv")).as("probes"))
+      ivfProbe2(col("qv"), cb).as("probes"))
     top3.join(broadcast(qprobe), col("query_id") === col("qid"))
       .join(broadcast(ncid), col("neighbor_id") === col("nid"))
       .groupBy(col("query_id"))

@@ -72,15 +72,10 @@ class BloomFilterSpec extends AnyFunSuite {
     val bytes = dim.agg(call_function("bloom_build",
       col("p_partkey"), lit(1 << 16), lit(4))).head().getAs[Array[Byte]](0)
     val bc = spark.sparkContext.broadcast(bytes)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_probe", {
-        case Seq(key) => BloomProbe(key, bc)
-        case other => sys.error(s"bloom_probe arity: $other")
-      }, "built-in")
     val fact = Relational.tbl(spark, dir, "lineitem")
     val total = fact.count()
     val surviving = fact
-      .filter(call_function("bloom_probe", col("l_partkey"))).count()
+      .filter(BloomProbe.bloomProbe(col("l_partkey"), bc)).count()
     val trueMatches = fact.join(dim,
       col("l_partkey") === col("p_partkey"), "left_semi").count()
     // soundness: every truly-joining row survives the probe

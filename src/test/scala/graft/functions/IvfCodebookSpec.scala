@@ -1,9 +1,12 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
+import graft.functions.IvfCodebook.{ivfBestCid, ivfProbe2}
 import graft.queries.VectorQueries
 import graft.vector.VectorOps
 
@@ -23,15 +26,18 @@ class IvfCodebookSpec extends AnyFunSuite {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
   }
 
-  test("ivf_best_cid / ivf_probe2 match the typedLit fold twins bit-for-bit") {
-    val all = embeddings
-    VectorQueries.registerIvf(spark, VectorQueries.codebookBc(all))
-    val centLit = codebookLit(all)
-    val rows = all.select(
-      foldBestCid(centLit, col("v")).as("fold_cid"),
-      call_function("ivf_best_cid", col("v")).as("native_cid"),
-      foldProbeCids(centLit, col("v")).as("fold_probe"),
-      call_function("ivf_probe2", col("v")).as("native_probe"))
+  /** `all`'s `v` with the native cid and probe columns over `cb`. */
+  private def withNative(all: DataFrame, cb: Broadcast[IvfCodebook]): DataFrame =
+    all.select(col("v"), ivfBestCid(col("v"), cb).as("native_cid"),
+      ivfProbe2(col("v"), cb).as("native_probe"))
+
+  /** Asserts that `native`'s cid and probe columns (see [[withNative]])
+    * equal the fold twins over `centLit`, row by row.
+    */
+  private def assertMatchesFold(native: DataFrame, centLit: Column): Unit = {
+    val rows = native.select(
+      foldBestCid(centLit, col("v")), col("native_cid"),
+      foldProbeCids(centLit, col("v")), col("native_probe"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -40,6 +46,26 @@ class IvfCodebookSpec extends AnyFunSuite {
       assert(r.getSeq[Long](2) == r.getSeq[Long](3),
         s"probe cids diverged: fold=${r.getSeq[Long](2)} native=${r.getSeq[Long](3)}")
     }
+  }
+
+  test("ivf_best_cid / ivf_probe2 match the typedLit fold twins bit-for-bit") {
+    val all = embeddings
+    assertMatchesFold(withNative(all, VectorQueries.codebookBc(all)),
+      codebookLit(all))
+  }
+
+  test("a Column built on codebook A still reads A after a frame on B") {
+    val all = embeddings
+    // A = every 31st vector, B = every 17th: different centroid ids,
+    // so a Column that read the other codebook would not match its fold
+    val bcA = VectorQueries.codebookBc(all)
+    val cidA = ivfBestCid(col("v"), bcA)
+    val probeA = ivfProbe2(col("v"), bcA)
+    val onB = withNative(all, VectorQueries.codebookBc(all, every = 17))
+    val onA = all.select(col("v"), cidA.as("native_cid"),
+      probeA.as("native_probe"))
+    assertMatchesFold(onB, codebookLit(all, every = 17))
+    assertMatchesFold(onA, codebookLit(all))
   }
 
   test("round-to-long twin matches Spark round().cast('long') incl. negatives") {
@@ -60,8 +86,7 @@ class IvfCodebookSpec extends AnyFunSuite {
     val all = embeddings
     // warm the analysis path with the small data-derived codebook so
     // the timed run measures plan construction, not rule JIT
-    VectorQueries.registerIvf(spark, VectorQueries.codebookBc(all))
-    all.select(call_function("ivf_best_cid", col("v")))
+    all.select(ivfBestCid(col("v"), VectorQueries.codebookBc(all)))
       .queryExecution.executedPlan
     val rnd = new scala.util.Random(43)
     val vecs = Array.fill(4096)(Array.fill(64)(rnd.nextDouble() * 2 - 1))
@@ -69,11 +94,11 @@ class IvfCodebookSpec extends AnyFunSuite {
       Array.tabulate(4096)(_.toLong),
       vecs,
       vecs.map(cv => math.sqrt(VectorOps.seqDot(cv, cv))))
-    VectorQueries.registerIvf(spark, spark.sparkContext.broadcast(big))
+    val bigBc = spark.sparkContext.broadcast(big)
     val t0 = System.nanoTime()
     val df = all.select(col("vec_id"),
-      call_function("ivf_best_cid", col("v")).as("cid"),
-      call_function("ivf_probe2", col("v")).as("probes"))
+      ivfBestCid(col("v"), bigBc).as("cid"),
+      ivfProbe2(col("v"), bigBc).as("probes"))
     val plan = df.queryExecution.executedPlan
     val secs = (System.nanoTime() - t0) / 1e9
     assert(secs < 1.0, f"plan build took $secs%.2f s at nlist 4096")
